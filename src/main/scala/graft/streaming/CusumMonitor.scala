@@ -2,14 +2,13 @@ package graft.streaming
 
 import graft.operators.TierFiftyNine
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.streaming.ValueState
+import org.apache.spark.sql.streaming.OutputMode
 
 /** One charted CUSUM day for one event type (append mode). */
 final case class CusumPoint(event_type: String, day_idx: Long, cnt: Long,
     sp: Long, sn: Long, alarm: Long)
 
-/** q201's CUSUM control chart as a LIVE monitor — `transformWithState`
+/** q201's CUSUM control chart as a LIVE monitor — a [[KeyedFold]]
   * keyed by event type over day-close records, folding the shared
   * [[TierFiftyNine.cusumStep]] (batch chart and live monitor cannot
   * drift) against FROZEN phase-I means (the s37 frozen-stats
@@ -26,37 +25,22 @@ object CusumMonitor {
     * absent from `mu` is passed through with μ = 0 (every positive day
     * alarms — the loud-fail choice for an untrained key). */
   def chart(dayCloses: DataFrame, mu: Map[String, Long]): Dataset[CusumPoint] = {
-    val spark = dayCloses.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    dayCloses.select(col("event_type").cast("string"),
-        col("day_idx").cast("long"), col("cnt").cast("long"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new CusumMonitor(mu), TimeMode.None(), OutputMode.Append())
+    KeyedFold(KeyedFold.dayCloses(dayCloses), "cusum_state",
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+      OutputMode.Append())(batch(mu))
   }
-}
 
-final class CusumMonitor(mu: Map[String, Long])
-    extends StatefulProcessor[String, (String, Long, Long), CusumPoint] {
-
-  @transient private var st: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Long)]("cusum_state",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long, Long)],
-      timerValues: TimerValues): Iterator[CusumPoint] = {
+  /** One micro-batch of a type's day closes folded from the prior (S⁺, S⁻). */
+  private[streaming] def batch(mu: Map[String, Long])(key: String, prior: Option[(Long, Long)],
+      rows: Iterator[(String, Long, Long)]): (Option[(Long, Long)], Iterator[CusumPoint]) = {
     val mu0 = mu.getOrElse(key, 0L)
     val h = mu0 / TierFiftyNine.AlarmDiv
-    var (sp, sn) = if (st.exists()) st.get() else (0L, 0L)
+    var (sp, sn) = prior.getOrElse((0L, 0L))
     val out = rows.toSeq.sortBy(_._2).map { case (t, d, c) =>
       val (sp1, sn1) = TierFiftyNine.cusumStep(sp, sn, mu0, c)
       sp = sp1; sn = sn1
       CusumPoint(t, d, c, sp1, sn1, if (sp1 > h || sn1 > h) 1L else 0L)
     }
-    st.update((sp, sn))
-    out.iterator
+    (Some((sp, sn)), out.iterator)
   }
 }

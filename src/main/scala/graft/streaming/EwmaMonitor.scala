@@ -2,16 +2,15 @@ package graft.streaming
 
 import graft.operators.TierFiftySix
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.streaming.ValueState
+import org.apache.spark.sql.streaming.OutputMode
 
 /** One charted day for one event type, emitted the moment the day's
   * count closes (append mode). */
 final case class EwmaPoint(event_type: String, day_idx: Long, cnt: Long,
     ewma: Long, flag: Long)
 
-/** q197's EWMA control chart as a LIVE monitor — `transformWithState`
-  * keyed by event type over a stream of DAY-CLOSE records
+/** q197's EWMA control chart as a LIVE monitor — a [[KeyedFold]] keyed
+  * by event type over a stream of DAY-CLOSE records
   * `(event_type, day_idx, cnt)`: each closing day folds the exact
   * recurrence through [[TierFiftySix.ewmaStep]] (the single shared
   * definition — batch chart and live monitor cannot drift) and emits
@@ -21,7 +20,7 @@ final case class EwmaPoint(event_type: String, day_idx: Long, cnt: Long,
   * stays O(types) forever; keys process in parallel — this is the
   * per-key sequential-monitor shape, not s38's single-key extremum.
   * Delivery contract: day closes arrive per-type in day order (within a
-  * micro-batch the processor sorts by day — the [[ScdProcessor]]
+  * micro-batch the fold sorts by day — the [[ScdProcessor]]
   * convention), which is what any upstream day-close emitter
   * (watermarked tumbling count, e.g. s02's) produces.
   */
@@ -30,37 +29,19 @@ object EwmaMonitor {
   /** Chart stream over `(event_type, day_idx, cnt)` day-close rows —
     * the streaming face of q197. */
   def chart(dayCloses: DataFrame): Dataset[EwmaPoint] = {
-    val spark = dayCloses.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    dayCloses.select(col("event_type").cast("string"),
-        col("day_idx").cast("long"), col("cnt").cast("long"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new EwmaMonitor, TimeMode.None(), OutputMode.Append())
+    KeyedFold(KeyedFold.dayCloses(dayCloses), "ewma_prev", Encoders.scalaLong,
+      OutputMode.Append())(batch)
   }
-}
 
-final class EwmaMonitor
-    extends StatefulProcessor[String, (String, Long, Long), EwmaPoint] {
-
-  @transient private var ewma: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ewma = getHandle.getValueState[Long]("ewma_prev",
-      Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long, Long)],
-      timerValues: TimerValues): Iterator[EwmaPoint] = {
-    var has = ewma.exists()
-    var prev = if (has) ewma.get() else 0L
+  /** One micro-batch of a type's day closes folded from the prior EWMA. */
+  private[streaming] def batch(key: String, prior: Option[Long], rows: Iterator[(String, Long, Long)])
+      : (Option[Long], Iterator[EwmaPoint]) = {
+    var prev = prior
     val out = rows.toSeq.sortBy(_._2).map { case (t, d, c) =>
-      val (e, flag) = TierFiftySix.ewmaStep(!has, prev, c)
-      has = true
-      prev = e
+      val (e, flag) = TierFiftySix.ewmaStep(prev.isEmpty, prev.getOrElse(0L), c)
+      prev = Some(e)
       EwmaPoint(t, d, c, e, flag)
     }
-    ewma.update(prev)
-    out.iterator
+    (prev, out.iterator)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.operators.TierSeventyNine
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.streaming.ValueState
+import org.apache.spark.sql.streaming.OutputMode
 
 /** One Holt-charted day for one event type (append mode). */
 final case class HoltPoint(event_type: String, day_idx: Long, cnt: Long,
@@ -23,37 +22,21 @@ object HoltMonitor {
   /** Chart stream over `(event_type, day_idx, cnt)` day-close rows —
     * the streaming face of q237. */
   def chart(dayCloses: DataFrame): Dataset[HoltPoint] = {
-    val spark = dayCloses.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    dayCloses.select(col("event_type").cast("string"),
-        col("day_idx").cast("long"), col("cnt").cast("long"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new HoltMonitor, TimeMode.None(), OutputMode.Append())
+    KeyedFold(KeyedFold.dayCloses(dayCloses), "holt_state",
+      Encoders.product[HoltState], OutputMode.Append())(batch)
   }
-}
 
-final class HoltMonitor
-    extends StatefulProcessor[String, (String, Long, Long), HoltPoint] {
-
-  @transient private var st: ValueState[HoltState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[HoltState]("holt_state",
-      Encoders.product[HoltState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long, Long)],
-      timerValues: TimerValues): Iterator[HoltPoint] = {
-    var has = st.exists()
-    var (l, b) = if (has) { val s = st.get(); (s.l, s.b) } else (0L, 0L)
+  /** One micro-batch of a type's day closes folded from the prior level
+    * and trend. */
+  private[streaming] def batch(key: String, prior: Option[HoltState],
+      rows: Iterator[(String, Long, Long)]): (Option[HoltState], Iterator[HoltPoint]) = {
+    var st = prior
     val out = rows.toSeq.sortBy(_._2).map { case (t, d, x) =>
-      val (l2, b2, flag) = TierSeventyNine.holtStep(!has, l, b, x)
-      has = true
-      l = l2; b = b2
-      HoltPoint(t, d, x, l2, b2, flag)
+      val s = st.getOrElse(HoltState(0L, 0L))
+      val (l, b, flag) = TierSeventyNine.holtStep(st.isEmpty, s.l, s.b, x)
+      st = Some(HoltState(l, b))
+      HoltPoint(t, d, x, l, b, flag)
     }
-    st.update(HoltState(l, b))
-    out.iterator
+    (st, out.iterator)
   }
 }

@@ -52,10 +52,11 @@ private[streaming] object InfluxBreaker {
     states.synchronized(states.getOrElseUpdate(url, new State))
 }
 
-/** X1 sink connector, HTTP flavor — the "production delta" over
-  * [[InfluxLineProtocolWriter]]: posts line-protocol batches to InfluxDB's
-  * `/write` endpoint exactly as the reference's influxdb-java client does
-  * under `enableBatch`/`enableGzip` (InfluxDBSink.java:42-61). Pure JDK
+/** X1 sink connector, HTTP flavor — the "production delta" over the
+  * line-protocol files of `TwitterJob.writeLines`: posts the same lines
+  * ([[InfluxLine.ofRow]]) in batches to InfluxDB's `/write` endpoint
+  * exactly as the reference's influxdb-java client does under
+  * `enableBatch`/`enableGzip` (InfluxDBSink.java:42-61). Pure JDK
   * `HttpURLConnection` — no client library.
   *
   * Lifecycle (RichSinkFunction open/invoke/close ↔ ForeachWriter
@@ -92,11 +93,7 @@ final class InfluxHttpWriter(cfg: InfluxHttpConfig) extends ForeachWriter[Row] {
   }
 
   override def process(row: Row): Unit = {
-    buf += InfluxLine.format(InfluxPoint(
-      row.getAs[String]("measurement"),
-      row.getAs[Long]("time_ms"),
-      Map.empty,
-      row.getAs[Map[String, String]]("fields")))
+    buf += InfluxLine.ofRow(row)
     val countDue = cfg.batchActions <= 0 || buf.size >= cfg.batchActions
     val timeDue = System.currentTimeMillis() - lastFlushMs >= cfg.flushDurationMs
     if (countDue || timeDue) flush()

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{ForeachWriter, Row}
-import java.io.{BufferedWriter, File, FileWriter}
+import org.apache.spark.sql.Row
 
 /** Sink record model — mirror of the reference's `InfluxDBPoint`
   * (`/root/reference` InfluxDBPoint.java:22-74): measurement, epoch-millis
@@ -18,6 +17,11 @@ object InfluxLine {
   private def esc(s: String): String =
     s.replace("\\", "\\\\").replace(",", "\\,").replace(" ", "\\ ").replace("=", "\\=")
 
+  /** A string field value: backslash escaped first, then the quote — the
+    * other order would double the quote escapes' own backslashes. */
+  private def quoted(v: String): String =
+    "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
   /** InfluxDB line protocol: `measurement[,tag=v...] field=v[,field=v...] ns`.
     * Map entries are emitted key-sorted so output is deterministic (the
     * golden-file tests compare exact lines). Field values are written as
@@ -28,46 +32,17 @@ object InfluxLine {
     val tags = p.tags.toSeq.sortBy(_._1)
       .map { case (k, v) => s",${esc(k)}=${esc(v)}" }.mkString
     val fields = p.fields.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"""${esc(k)}="${v.replace("\"", "\\\"")}"""" }
-      .mkString(",")
+      .map { case (k, v) => s"${esc(k)}=${quoted(v)}" }.mkString(",")
     s"${esc(p.measurement)}$tags $fields ${p.timeMs * 1000000L}"
   }
-}
 
-/** X1 sink connector (mirror of `/root/reference` InfluxDBSink.java:32-91):
-  * Flink's RichSinkFunction open/invoke/close maps 1:1 onto Spark's
-  * ForeachWriter open/process/close. The reference opens an HTTP connection
-  * and batches points (InfluxDBSink.java:42-61); this implementation is
-  * file-backed (one file per partition × epoch — idempotent on retry, since
-  * a re-executed epoch rewrites the same file) so tests can assert golden
-  * line-protocol output without a server. Swapping the `BufferedWriter` for
-  * an HTTP batch poster is the only production delta.
-  *
-  * Scale: one writer instance per task; rows stream through without
-  * buffering more than the OS write buffer — no per-partition state
-  * accumulation, no driver involvement.
-  */
-final class InfluxLineProtocolWriter(dir: String) extends ForeachWriter[Row] {
-
-  @transient private var out: BufferedWriter = _
-
-  override def open(partitionId: Long, epochId: Long): Boolean = {
-    new File(dir).mkdirs()
-    out = new BufferedWriter(
-      new FileWriter(new File(dir, s"part-$partitionId-$epochId.lp")))
-    true
-  }
-
-  override def process(row: Row): Unit = {
-    val point = InfluxPoint(
-      row.getAs[String]("measurement"),
-      row.getAs[Long]("time_ms"),
-      Map.empty,
-      row.getAs[Map[String, String]]("fields"))
-    out.write(InfluxLine.format(point))
-    out.newLine()
-  }
-
-  override def close(errorOrNull: Throwable): Unit =
-    if (out != null) { out.flush(); out.close() }
+  /** The line for one `(measurement, time_ms, fields)` sink row — the
+    * shape `TweetPipelines.toInfluxPoint` projects; both sinks (the
+    * line-protocol files of `TwitterJob.writeLines` and
+    * [[InfluxHttpWriter]]) write through it. */
+  def ofRow(row: Row): String = format(InfluxPoint(
+    row.getAs[String]("measurement"),
+    row.getAs[Long]("time_ms"),
+    Map.empty,
+    row.getAs[Map[String, String]]("fields")))
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.streaming.ValueState
+import org.apache.spark.sql.streaming.OutputMode
 
 /** The maintained per-key IVM state: net multiplicity count, net cents
   * (integer money — the Determinism rule), and the key's changelog
@@ -21,13 +20,13 @@ final case class IvmState(n: Long, cents: Long, ver: Long)
   * batch fold rebuilding the key from zero). */
 final case class IvmRow(user_id: Long, n_net: Long, revenue_net_c: Long, ver: Long)
 
-/** q209's additive IVM fold as a LIVE stream — `transformWithState`
+/** q209's additive IVM fold as a LIVE stream — a [[KeyedFold]]
   * keyed by user over `(user_id, m, cents)` change rows: each micro-
   * batch folds its deltas into the key's (Σm, Σm·cents) state and emits
   * the post-batch state once per touched key (upsert-changelog
   * semantics: the max-`ver` row per key IS the maintained view — s42
   * pins drained-stream ≡ batch q209). The group is commutative, so no
-  * within-batch ordering is needed at all — the one stateful processor
+  * within-batch ordering is needed at all — the one keyed fold
   * here with NO delivery-order assumption ([[ScdProcessor]] and
   * [[FunnelProcessor]] both need per-key order; addition doesn't).
   *
@@ -38,32 +37,6 @@ final case class IvmRow(user_id: Long, n_net: Long, revenue_net_c: Long, ver: Lo
   * row per (batch, touched key) — the upsert/delete changelog a
   * downstream materialized view applies directly.
   */
-final class IvmMaintainer
-    extends StatefulProcessor[Long, (Long, Long, Long), IvmRow] {
-
-  @transient private var state: ValueState[IvmState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[IvmState]("ivm_state",
-      Encoders.product[IvmState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long)],
-      timerValues: TimerValues): Iterator[IvmRow] = {
-    var s = if (state.exists()) state.get() else IvmState(0L, 0L, 0L)
-    rows.foreach { case (_, m, cents) =>
-      s = IvmState(s.n + m, s.cents + m * cents, s.ver)
-    }
-    val ver = s.ver + 1
-    if (s.n == 0 && s.cents == 0) {
-      state.clear() // the IVM delete: identity state leaves the store
-      Iterator(IvmRow(key, 0L, 0L, ver)) // tombstone closes this changelog
-    } else {
-      state.update(IvmState(s.n, s.cents, ver))
-      Iterator(IvmRow(key, s.n, s.cents, ver))
-    }
-  }
-}
-
 object IvmMaintainer {
 
   /** Change stream over `(user_id, m, cents)` delta rows — the streaming
@@ -72,9 +45,22 @@ object IvmMaintainer {
   def changes(deltas: DataFrame): Dataset[IvmRow] = {
     val spark = deltas.sparkSession
     import spark.implicits._
-    deltas.select(col("user_id"), col("m"), col("cents"))
+    val grouped = deltas.select(col("user_id"), col("m"), col("cents"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
-      .transformWithState(new IvmMaintainer, TimeMode.None(), OutputMode.Update())
+    KeyedFold(grouped, "ivm_state", Encoders.product[IvmState], OutputMode.Update())(batch)
+  }
+
+  /** One micro-batch of a key's deltas folded from the prior state; the
+    * group identity clears the state (the IVM delete). */
+  private[streaming] def batch(key: Long, prior: Option[IvmState],
+      rows: Iterator[(Long, Long, Long)]): (Option[IvmState], Iterator[IvmRow]) = {
+    val s = rows.foldLeft(prior.getOrElse(IvmState(0L, 0L, 0L))) {
+      case (s, (_, m, cents)) => IvmState(s.n + m, s.cents + m * cents, s.ver)
+    }
+    val ver = s.ver + 1
+    if (s.n == 0 && s.cents == 0) // tombstone closes this changelog
+      (None, Iterator(IvmRow(key, 0L, 0L, ver)))
+    else (Some(IvmState(s.n, s.cents, ver)), Iterator(IvmRow(key, s.n, s.cents, ver)))
   }
 }

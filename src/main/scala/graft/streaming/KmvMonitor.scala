@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.functions.BottomK
 import graft.operators.TierEightyOne
 
@@ -16,7 +16,7 @@ final case class KmvState(bottom: Seq[Long])
 final case class KmvUpdate(event_type: String, n_kept: Long, kth_hash: Long,
     est: Long, bottom: Seq[Long])
 
-/** q242's KMV distinct sketch maintained LIVE — `transformWithState`
+/** q242's KMV distinct sketch maintained LIVE — a [[KeyedFold]]
   * keyed per event_type over the SAME hash projection as batch q242
   * ([[TierEightyOne.udayHashes]] — the cannot-drift rule), folding each
   * micro-batch into the O(k) bottom-k window via the SAME
@@ -34,29 +34,6 @@ final case class KmvUpdate(event_type: String, n_kept: Long, kth_hash: Long,
   * keyed shuffle (BottomK's partial+final shape) — not needed at
   * fixture volume.
   */
-final class KmvMonitor(k: Int)
-    extends StatefulProcessor[String, (String, Long), KmvUpdate] {
-
-  @transient private var st: ValueState[KmvState] = _
-  @transient private lazy val agg = new BottomK(k)
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[KmvState]("kmv",
-      Encoders.product[KmvState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long)],
-      timerValues: TimerValues): Iterator[KmvUpdate] = {
-    val before = if (st.exists()) st.get().bottom else Vector.empty[Long]
-    val after = rows.foldLeft(before) { case (b, (_, h)) => agg.reduce(b, h) }
-    if (after == before) Iterator.empty
-    else {
-      st.update(KmvState(after))
-      val (n, kth, est) = TierEightyOne.kmvEstOf(after)
-      Iterator.single(KmvUpdate(key, n, kth, est, after))
-    }
-  }
-}
-
 object KmvMonitor {
 
   /** Sketch-update stream over an `(event_type, h)` hash feed — the
@@ -66,9 +43,21 @@ object KmvMonitor {
   def updates(hashed: DataFrame, k: Int = TierEightyOne.KmvK): Dataset[KmvUpdate] = {
     val spark = hashed.sparkSession
     import spark.implicits._
-    hashed.select("event_type", "h")
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new KmvMonitor(k), TimeMode.None(), OutputMode.Append())
+    val grouped = hashed.select("event_type", "h").as[(String, Long)].groupByKey(_._1)
+    KeyedFold(grouped, "kmv", Encoders.product[KmvState], OutputMode.Append())(
+      batch(new BottomK(k)))
+  }
+
+  /** One micro-batch of a type's hashes folded into the prior window;
+    * an unchanged window keeps the prior state and emits nothing. */
+  private[streaming] def batch(agg: BottomK)(key: String, prior: Option[KmvState],
+      rows: Iterator[(String, Long)]): (Option[KmvState], Iterator[KmvUpdate]) = {
+    val before = prior.fold[Seq[Long]](Vector.empty)(_.bottom)
+    val after = rows.foldLeft(before) { case (b, (_, h)) => agg.reduce(b, h) }
+    if (after == before) (prior, Iterator.empty)
+    else {
+      val (n, kth, est) = TierEightyOne.kmvEstOf(after)
+      (Some(KmvState(after)), Iterator.single(KmvUpdate(key, n, kth, est, after)))
+    }
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.operators.TierNinety
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.streaming.ValueState
+import org.apache.spark.sql.streaming.OutputMode
 
 /** One Page–Hinkley-charted day for one event type (append mode).
   * `pinned` = 1 when the type's μ was in the deployment's pinned map,
@@ -37,42 +36,25 @@ object PhMonitor {
   /** Chart stream over `(event_type, day_idx, cnt)` day-close rows —
     * the streaming face of q260. */
   def chart(dayCloses: DataFrame, mu: Map[String, Long]): Dataset[PhPoint] = {
-    val spark = dayCloses.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    dayCloses.select(col("event_type").cast("string"),
-        col("day_idx").cast("long"), col("cnt").cast("long"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new PhMonitor(mu), TimeMode.None(), OutputMode.Append())
+    KeyedFold(KeyedFold.dayCloses(dayCloses), "ph_state",
+      Encoders.product[PhState], OutputMode.Append())(batch(mu))
   }
-}
 
-final class PhMonitor(mu: Map[String, Long])
-    extends StatefulProcessor[String, (String, Long, Long), PhPoint] {
-
-  @transient private var st: ValueState[PhState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[PhState]("ph_state",
-      Encoders.product[PhState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long, Long)],
-      timerValues: TimerValues): Iterator[PhPoint] = {
-    val isPinned = mu.contains(key)
+  /** One micro-batch of a type's day closes folded from the prior
+    * Page–Hinkley state. */
+  private[streaming] def batch(mu: Map[String, Long])(key: String,
+      prior: Option[PhState], rows: Iterator[(String, Long, Long)])
+      : (Option[PhState], Iterator[PhPoint]) = {
+    val pinned = if (mu.contains(key)) 1L else 0L
     val mu0 = mu.getOrElse(key, 0L)
     val (delta, lambda) = (mu0 / TierNinety.DeltaDiv, mu0 / TierNinety.LambdaDiv)
-    var (i, s, m, mn) =
-      if (st.exists()) { val p = st.get(); (p.i, p.s, p.m, p.mn) }
-      else (0L, 0L, 0L, 0L)
+    var st = prior.getOrElse(PhState(0L, 0L, 0L, 0L))
     val out = rows.toSeq.sortBy(_._2).map { case (t, d, x) =>
-      val (i2, s2, m2, mn2) = TierNinety.phStep(i, s, m, mn, x, delta)
-      i = i2; s = s2; m = m2; mn = mn2
-      val ph = m2 - mn2
-      PhPoint(t, d, x, s2 / i2, ph, if (ph > lambda) 1L else 0L,
-        if (isPinned) 1L else 0L)
+      val (i, s, m, mn) = TierNinety.phStep(st.i, st.s, st.m, st.mn, x, delta)
+      st = PhState(i, s, m, mn)
+      val ph = m - mn
+      PhPoint(t, d, x, s / i, ph, if (ph > lambda) 1L else 0L, pinned)
     }
-    st.update(PhState(i, s, m, mn))
-    out.iterator
+    (Some(st), out.iterator)
   }
 }

@@ -1,17 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
-import org.apache.spark.sql.streaming.ValueState
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions.{col, floor, lit}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** A record-setting event, emitted the moment it arrives (append mode). */
 final case class RecordEvent(event_id: Long, event_type: String, cents: Long)
 
-/** q164's running-records audit as a LIVE alert stream —
-  * `transformWithState` over ONE constant key holding the global
+/** q164's running-records audit as a LIVE alert stream — a
+  * [[KeyedFold]] over ONE constant key holding the global
   * high-water mark (8 bytes of state, total): each arriving event is
   * emitted iff its integer cents STRICTLY exceed every earlier event's
-  * (arrival order = event_id; within a micro-batch the processor sorts,
+  * (arrival order = event_id; within a micro-batch the fold sorts,
   * so chunked in-order replay is exact — the [[ScdProcessor]] delivery
   * contract).
   *
@@ -29,37 +29,25 @@ object RecordMonitor {
   /** Record-alert stream over `(event_id, event_type, cents)` rows —
     * the streaming face of q164 (same integer-cents projection, so the
     * two cannot drift). */
-  def records(events: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.Dataset[RecordEvent] = {
+  def records(events: DataFrame): Dataset[RecordEvent] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, floor, lit}
-    events.select(col("event_id"), col("event_type"),
+    val grouped = events.select(col("event_id"), col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"), lit(0L).as("k"))
       .as[(Long, String, Long, Long)]
       .groupByKey(_._4)
       .mapValues(t => (t._1, t._2, t._3))
-      .transformWithState(new RecordMonitor, TimeMode.None(), OutputMode.Append())
+    KeyedFold(grouped, "record_hwm", Encoders.scalaLong, OutputMode.Append())(batch)
   }
-}
 
-final class RecordMonitor
-    extends StatefulProcessor[Long, (Long, String, Long), RecordEvent] {
-
-  @transient private var hwm: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    hwm = getHandle.getValueState[Long]("record_hwm",
-      Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, String, Long)],
-      timerValues: TimerValues): Iterator[RecordEvent] = {
-    var acc = if (hwm.exists()) hwm.get() else Long.MinValue
+  /** One micro-batch of events folded from the prior high-water mark. */
+  private[streaming] def batch(key: Long, prior: Option[Long],
+      rows: Iterator[(Long, String, Long)]): (Option[Long], Iterator[RecordEvent]) = {
+    var acc = prior.getOrElse(Long.MinValue)
     val out = rows.toSeq.sortBy(_._1).flatMap { case (id, et, cents) =>
       if (cents > acc) { acc = cents; Some(RecordEvent(id, et, cents)) }
       else None
     }
-    hwm.update(acc)
-    out.iterator
+    (Some(acc), out.iterator)
   }
 }

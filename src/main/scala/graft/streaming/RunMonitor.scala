@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** A CLOSED same-lang run in the training-order feed: `len` consecutive
   * positions of `lang` starting at `start_pos`, terminated by the first
@@ -12,7 +12,7 @@ final case class RunClosed(lang: String, start_pos: Long, len: Long)
 private[streaming] final case class RunState(lang: String, start: Long, len: Long)
 
 /** q234's interleave audit LIVE — the O(1)-state form of the
-  * gaps-and-islands scan: `transformWithState` over ONE constant key
+  * gaps-and-islands scan: a [[KeyedFold]] over ONE constant key
   * (a training order is inherently one sequence) holding only the
   * CURRENT run `(lang, start_pos, len)`; each arriving `(pos, lang)`
   * row either extends it or CLOSES it (emitting the [[RunClosed]] row —
@@ -27,36 +27,6 @@ private[streaming] final case class RunState(lang: String, start: Long, len: Lon
   * convention); the feed IS an order, so ordered delivery is the
   * operator's premise, not an assumption.
   */
-final class RunMonitor
-    extends StatefulProcessor[Long, (Long, String), RunClosed] {
-
-  @transient private var cur: ValueState[RunState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    cur = getHandle.getValueState[RunState]("run",
-      Encoders.product[RunState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[(Long, String)],
-      timerValues: TimerValues): Iterator[RunClosed] = {
-    val ordered = rows.toSeq.sortBy(_._1)
-    val out = scala.collection.mutable.ArrayBuffer.empty[RunClosed]
-    var st = if (cur.exists()) Option(cur.get()) else None
-    for ((pos, lang) <- ordered) {
-      st match {
-        case Some(r) if r.lang == lang =>
-          st = Some(RunState(lang, r.start, r.len + 1))
-        case Some(r) =>
-          out += RunClosed(r.lang, r.start, r.len)
-          st = Some(RunState(lang, pos, 1L))
-        case None =>
-          st = Some(RunState(lang, pos, 1L))
-      }
-    }
-    st.foreach(cur.update)
-    out.iterator
-  }
-}
-
 object RunMonitor {
 
   /** Closed-run stream over an ordered `(pos, lang)` feed.
@@ -75,10 +45,26 @@ object RunMonitor {
   def runs(ordered: DataFrame): Dataset[RunClosed] = {
     val spark = ordered.sparkSession
     import spark.implicits._
-    ordered.select(col("pos").cast("long"), col("lang"), lit(0L).as("k"))
+    val grouped = ordered.select(col("pos").cast("long"), col("lang"), lit(0L).as("k"))
       .as[(Long, String, Long)]
       .groupByKey(_._3)
       .mapValues(t => (t._1, t._2))
-      .transformWithState(new RunMonitor, TimeMode.None(), OutputMode.Append())
+    KeyedFold(grouped, "run", Encoders.product[RunState], OutputMode.Append())(batch)
+  }
+
+  /** One micro-batch of the feed folded from the prior open run. */
+  private[streaming] def batch(key: Long, prior: Option[RunState],
+      rows: Iterator[(Long, String)]): (Option[RunState], Iterator[RunClosed]) = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[RunClosed]
+    var st = prior
+    for ((pos, lang) <- rows.toSeq.sortBy(_._1)) {
+      st = st match {
+        case Some(r) if r.lang == lang => Some(r.copy(len = r.len + 1))
+        case open =>
+          open.foreach(r => out += RunClosed(r.lang, r.start, r.len))
+          Some(RunState(lang, pos, 1L))
+      }
+    }
+    (st, out.iterator)
   }
 }

@@ -20,7 +20,8 @@ import java.io.{BufferedWriter, File, FileWriter}
   * | D per-second counts | Main.java:159-175 | 1 s tumbling append → `TweetPerSecondCountFlink` |
   *
   * Sinks are file-backed line protocol (one file per measurement ×
-  * partition × epoch — idempotent under epoch retry); swapping the file
+  * non-empty partition × epoch — idempotent under epoch retry, since a
+  * re-executed epoch rewrites the same files); swapping the file
   * writer for an HTTP batch poster is the only production delta
   * (InfluxDBSink.java:64-82).
   */
@@ -38,29 +39,20 @@ object TwitterJob {
       // committed epoch instead of reprocessing (CheckpointSpec pins this).
       checkpointDir: Option[String] = None)
 
-  /** Write a (measurement, time_ms, fields) frame as line-protocol files —
-    * the foreachBatch counterpart of [[InfluxLineProtocolWriter]], used
-    * where a per-batch DataFrame transform (arg-max) precedes the sink.
+  /** Write a (measurement, time_ms, fields) frame as line-protocol files,
+    * one `part-<partition>-<epoch>.lp` per non-empty partition — the one
+    * file sink all four pipelines write through under `foreachBatch`.
     */
-  def writeLines(points: DataFrame, dir: String, epochId: Long): Unit = {
-    val target = dir
+  def writeLines(points: DataFrame, dir: String, epochId: Long): Unit =
     points.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
-        new File(target).mkdirs()
-        val pid = TaskContext.getPartitionId()
+        new File(dir).mkdirs()
         val out = new BufferedWriter(new FileWriter(
-          new File(target, s"part-$pid-$epochId.lp")))
-        try rows.foreach { row =>
-          val p = InfluxPoint(
-            row.getAs[String]("measurement"),
-            row.getAs[Long]("time_ms"),
-            Map.empty,
-            row.getAs[Map[String, String]]("fields"))
-          out.write(InfluxLine.format(p)); out.newLine()
-        } finally { out.flush(); out.close() }
+          new File(dir, s"part-${TaskContext.getPartitionId()}-$epochId.lp")))
+        try rows.foreach { row => out.write(InfluxLine.ofRow(row)); out.newLine() }
+        finally out.close()
       }
     }
-  }
 
   /** Start all four pipelines; returns the running queries (caller awaits /
     * stops). `raw` must have a `value STRING` column (Kafka value or
@@ -80,54 +72,50 @@ object TwitterJob {
       cfg.checkpointDir.fold(w)(d =>
         w.option("checkpointLocation", s"$d/${cfg.namePrefix}-$name"))
 
+    // one sink path: each pipeline projects its micro-batch to
+    // (measurement, time_ms, fields) rows and writes them as line files
+    def sink(measurement: String)(points: DataFrame => DataFrame) =
+      (batch: DataFrame, epochId: Long) =>
+        writeLines(points(batch), s"${cfg.influxDir}/$measurement", epochId)
+    // A and B: the arg-max hashtag per window end
+    def trending(measurement: String) = sink(measurement) { batch =>
+      toInfluxPoint(trendingPerWindow(batch), measurement,
+        unix_millis(col("window_end")),
+        Map("hashtag" -> col("hashtag"), "count" -> col("cnt")))
+    }
+
     // A — two-stage: finalized 30 s windows arrive append-mode; arg-max per
     // window inside the batch is complete by construction.
     val a = cp(twoStageCounts(tags, "5 seconds", "30 seconds")
       .select(col("window"), col("hashtag"), col("cnt"))
       .writeStream.queryName(s"${cfg.namePrefix}-a-trending2")
       .outputMode("append").trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val top = trendingPerWindow(batch)
-        writeLines(toInfluxPoint(top, "TrendingHashTagFlink2",
-          unix_millis(col("window_end")),
-          Map("hashtag" -> col("hashtag"), "count" -> col("cnt"))),
-          s"${cfg.influxDir}/TrendingHashTagFlink2", epochId)
-      }, "a-trending2").start()
+      .foreachBatch(trending("TrendingHashTagFlink2")), "a-trending2").start()
 
     // B — single-stage: complete-mode counts = Flink's repeated
     // non-purging window firing; arg-max over the full state each batch.
     val b = cp(keyedWindowCounts(hashtags(parse(raw)), "30 seconds", "5 seconds")
       .writeStream.queryName(s"${cfg.namePrefix}-b-trending1")
       .outputMode("complete").trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val top = trendingPerWindow(batch)
-        writeLines(toInfluxPoint(top, "TrendingHashTagFlink1",
-          unix_millis(col("window_end")),
-          Map("hashtag" -> col("hashtag"), "count" -> col("cnt"))),
-          s"${cfg.influxDir}/TrendingHashTagFlink1", epochId)
-      }, "b-trending1").start()
+      .foreachBatch(trending("TrendingHashTagFlink1")), "b-trending1").start()
 
     // C — running total, stamped with max event time seen (not wall clock).
     val c = cp(runningTotal(parse(raw))
       .writeStream.queryName(s"${cfg.namePrefix}-c-total")
       .outputMode("complete").trigger(cfg.trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        writeLines(toInfluxPoint(batch.filter(col("as_of").isNotNull),
-          "TotalTweetCountFlink",
-          unix_millis(col("as_of")),
-          Map("count" -> col("total_tweets"))),
-          s"${cfg.influxDir}/TotalTweetCountFlink", epochId)
-      }, "c-total").start()
+      .foreachBatch(sink("TotalTweetCountFlink") { batch =>
+        toInfluxPoint(batch.filter(col("as_of").isNotNull), "TotalTweetCountFlink",
+          unix_millis(col("as_of")), Map("count" -> col("total_tweets")))
+      }), "c-total").start()
 
     // D — per-second counts, append once the watermark closes each second.
     val d = cp(perSecondCounts(tweets)
-      .select(lit("TweetPerSecondCountFlink").as("measurement"),
-        unix_millis(col("window_end")).as("time_ms"),
-        map(lit("count"), col("cnt").cast("string")).as("fields"))
       .writeStream.queryName(s"${cfg.namePrefix}-d-persecond")
       .outputMode("append").trigger(cfg.trigger)
-      .foreach(new InfluxLineProtocolWriter(s"${cfg.influxDir}/TweetPerSecondCountFlink")),
-      "d-persecond").start()
+      .foreachBatch(sink("TweetPerSecondCountFlink") { batch =>
+        toInfluxPoint(batch, "TweetPerSecondCountFlink",
+          unix_millis(col("window_end")), Map("count" -> col("cnt")))
+      }), "d-persecond").start()
 
     Seq(a, b, c, d)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.TweetPipelines
+import graft.streaming.{EwmaMonitor, EwmaPoint, TweetPipelines}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import scala.collection.mutable.ArrayBuffer
 
@@ -109,5 +109,45 @@ class CheckpointSpec extends SparkSpec {
       assert(after2.contains(("#x", 300000L, 301000L, 2L)), s"got $after2")
       assert(after2.count(_._1 == "#x") == 2, s"exactly two #x bursts, got $after2")
     } finally q.stop()
+  }
+
+  test("s40: a keyed fold restarted from its checkpoint charts exactly the uninterrupted run") {
+    // the s40 EWMA day-close replay on RocksDB: stop after half the
+    // chunks, restart on the same checkpointLocation, and the restored
+    // per-type state must continue the chart — no point lost, re-emitted
+    // or charted from a reset EWMA
+    val prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val rows = graft.operators.TierThirtyTwo.dailyCounts(Tables.load(spark, sf, "events"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+        .sortBy(x => (x._2, x._1))
+      val chunks = rows.grouped(math.max(1, rows.size / 6)).toSeq
+      def chart(restartAt: Option[Int]): Seq[EwmaPoint] = {
+        val cpDir = java.nio.file.Files.createTempDirectory("graft-cp-s40").toString
+        val in = MemoryStream[(String, Long, Long)]
+        val emitted = ArrayBuffer.empty[EwmaPoint]
+        def startQuery() = EwmaMonitor.chart(
+            in.toDF().select($"_1".as("event_type"), $"_2".as("day_idx"), $"_3".as("cnt")))
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", cpDir)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[EwmaPoint], _: Long) =>
+            emitted.synchronized { emitted ++= batch.collect() }
+            (): Unit
+          }.start()
+        restartAt.fold(Seq(chunks))(n => Seq(chunks.take(n), chunks.drop(n))).foreach { run =>
+          val q = startQuery()
+          try run.foreach { c => in.addData(c); q.processAllAvailable() }
+          finally q.stop()
+        }
+        emitted.synchronized(emitted.toVector).sortBy(p => (p.event_type, p.day_idx))
+      }
+      val whole = chart(None)
+      val restarted = chart(Some(chunks.size / 2))
+      assert(whole.size == rows.size && whole.exists(_.flag == 1L))
+      assert(restarted == whole,
+        s"restarted chart differs: ${restarted.diff(whole).take(5)} vs ${whole.diff(restarted).take(5)}")
+    } finally spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
   }
 }

@@ -114,7 +114,8 @@ class StreamingSpec extends SparkSpec {
       unix_millis(col("window_end")),
       Map("hashtag" -> col("hashtag"), "count" -> col("cnt")))
     val q = points.writeStream.outputMode("complete")
-      .foreach(new InfluxLineProtocolWriter(dir)).start()
+      .foreachBatch((b: DataFrame, epochId: Long) => TwitterJob.writeLines(b, dir, epochId))
+      .start()
     try {
       in.addData(tweet("only #tag here", 1000))
       q.processAllAvailable()
@@ -127,6 +128,13 @@ class StreamingSpec extends SparkSpec {
       assert(lines.contains(golden), s"missing golden line in $lines")
       assert(lines.forall(_.startsWith("TrendingHashTagFlink1 ")))
     } finally q.stop()
+  }
+
+  test("s05: a field value holding a backslash and a quote formats to a well-formed line") {
+    // the value ends in a backslash: left unescaped it would escape the
+    // closing quote and run the field into the timestamp
+    val line = InfluxLine.format(InfluxPoint("m", 1L, Map.empty, Map("v" -> "a\\\"b\\")))
+    assert(line == """m v="a\\\"b\\" 1000000""", line)
   }
 
   test("s07: RocksDB state store provider runs the keyed window pipeline (large-state posture)") {
