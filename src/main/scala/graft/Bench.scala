@@ -31,6 +31,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * to time every query self-contained (the pre-round-13 behavior).
   */
 object Bench {
+  /** One shared-artifact build of the sweep: its own timed entry, the
+    * faces timed over it, and how to build, materialize and drop it. */
+  private final class SharedBuild[A](val entry: String,
+      val faces: Seq[(String, (SparkSession, String, A) => DataFrame)],
+      val build: () => A)(val warm: A => Unit, val release: A => Unit)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.localSession("graft-bench")
@@ -87,104 +93,54 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(n: String): Boolean = only.forall(f => f.exists(n.startsWith))
 
-    val dedupFaces =
-      if (sharedMode) operators.SharedFaces.dedup.filter(p => selected(p._1)) else Nil
-    val celledFaces =
-      if (sharedMode) operators.SharedFaces.celled.filter(p => selected(p._1)) else Nil
-    val bigramFaces =
-      if (sharedMode) operators.SharedFaces.bigram.filter(p => selected(p._1)) else Nil
-    val faceNames = (dedupFaces.map(_._1) ++ celledFaces.map(_._1) ++
-      bigramFaces.map(_._1)).toSet
+    // the shared builds: each row's timed build entry, the
+    // selected faces it feeds, and its artifact's build / warm / release
+    def faces[A](fs: Seq[(String, A)]): Seq[(String, A)] =
+      if (sharedMode) fs.filter(p => selected(p._1)) else Nil
+    def docs = Tables.load(spark, sfDir, "documents")
+    val shared: Seq[SharedBuild[_]] = Seq(
+      new SharedBuild("a01_dedup_artifacts_build", faces(operators.SharedFaces.dedup),
+        () => operators.Dedup.artifacts(docs))(_.warm(), _.release()),
+      new SharedBuild("a02_celled_artifacts_build", faces(operators.SharedFaces.celled),
+        () => operators.TierNineteen.celledArtifacts(docs.select("doc_id", "text")))(
+        _.warm(), _.release()),
+      new SharedBuild("a03_bigram_artifacts_build", faces(operators.SharedFaces.bigram),
+        () => operators.TierHundredTwo.bigramArtifacts(docs))(_.warm(), _.release()))
+    val faceNames = shared.flatMap(_.faces.map(_._1)).toSet
     val plain = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => selected(n) && !faceNames(n) }
+
+    // one shared build inside a pass: clean, time build + warm (the whole
+    // build cost lands in its own entry and none of it on the first face),
+    // snapshot its blocks as `keep`, run the faces, release
+    def runShared[A](b: SharedBuild[A], sub: String => Boolean): Seq[(String, Double)] = {
+      val sel = b.faces.filter(p => sub(p._1))
+      if (sel.isEmpty && (b.faces.isEmpty || !sub(b.entry))) return Nil
+      deepClean()
+      var art: Option[A] = None
+      val t0 = System.nanoTime()
+      val tBuild = try {
+        art = Some(b.build())
+        b.warm(art.get)
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${b.entry} failed: ${e.getMessage}")
+        -1.0
+      }
+      val built = if (sub(b.entry)) Seq(b.entry -> tBuild) else Nil
+      val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val timed = sel.map { case (n, f) => n -> execFace(n, keep)(f(spark, sfDir, art.get)) }
+      art.foreach(b.release)
+      built ++ timed
+    }
 
     // sub: restrict a pass to a name subset (the min-of-3 re-run for
     // slow entries — VERDICT r14 #6). A face subset still pays its
     // shared-artifact build (that IS the production cost structure);
     // the build's own entry is recorded only when itself selected.
-    def runPass(sub: String => Boolean = _ => true): Seq[(String, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      plain.foreach { case (n, f) => if (sub(n)) out += n -> exec(n, f) }
-      val dedupSel = dedupFaces.filter(p => sub(p._1))
-      val celledSel = celledFaces.filter(p => sub(p._1))
-      if (dedupSel.nonEmpty || (dedupFaces.nonEmpty && sub("a01_dedup_artifacts_build"))) {
-        deepClean()
-        var art: operators.Dedup.Artifacts = null
-        val tBuild = {
-          val t0 = System.nanoTime()
-          try {
-            art = operators.Dedup.artifacts(Tables.load(spark, sfDir, "documents"))
-            // materialize every member inside the build entry so the full
-            // detector cost lands here and none of it on the first face.
-            // The PIN is the unsorted detector relation (r16): no face
-            // consumes q26's global pair sort, so the build materializes
-            // what production holds — the sort view stays available and
-            // q26 itself (a plain self-contained entry) still pays it.
-            Seq(art.pairsUnsorted, art.labels, art.scores)
-              .foreach(_.write.format("noop").mode("overwrite").save())
-            (System.nanoTime() - t0) / 1e9
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] a01_dedup_artifacts_build failed: ${e.getMessage}")
-            -1.0
-          }
-        }
-        if (sub("a01_dedup_artifacts_build"))
-          out += "a01_dedup_artifacts_build" -> tBuild
-        val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        dedupSel.foreach { case (n, f) =>
-          out += n -> execFace(n, keep)(f(spark, sfDir, art))
-        }
-        if (art != null) art.release()
-      }
-      if (celledSel.nonEmpty || (celledFaces.nonEmpty && sub("a02_celled_artifacts_build"))) {
-        deepClean()
-        var art: operators.TierNineteen.CelledArtifacts = null
-        val tBuild = {
-          val t0 = System.nanoTime()
-          try {
-            art = operators.TierNineteen.celledArtifacts(
-              Tables.load(spark, sfDir, "documents").select("doc_id", "text"))
-            art.warm()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] a02_celled_artifacts_build failed: ${e.getMessage}")
-            -1.0
-          }
-        }
-        if (sub("a02_celled_artifacts_build"))
-          out += "a02_celled_artifacts_build" -> tBuild
-        val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        celledSel.foreach { case (n, f) =>
-          out += n -> execFace(n, keep)(f(spark, sfDir, art))
-        }
-        if (art != null) art.release()
-      }
-      val bigramSel = bigramFaces.filter(p => sub(p._1))
-      if (bigramSel.nonEmpty || (bigramFaces.nonEmpty && sub("a03_bigram_artifacts_build"))) {
-        deepClean()
-        var art: operators.TierHundredTwo.BigramArtifacts = null
-        val tBuild = {
-          val t0 = System.nanoTime()
-          try {
-            art = operators.TierHundredTwo.bigramArtifacts(
-              Tables.load(spark, sfDir, "documents"))
-            art.warm()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] a03_bigram_artifacts_build failed: ${e.getMessage}")
-            -1.0
-          }
-        }
-        if (sub("a03_bigram_artifacts_build"))
-          out += "a03_bigram_artifacts_build" -> tBuild
-        val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
-        bigramSel.foreach { case (n, f) =>
-          out += n -> execFace(n, keep)(f(spark, sfDir, art))
-        }
-        if (art != null) art.release()
-      }
-      out.toSeq
-    }
+    def runPass(sub: String => Boolean = _ => true): Seq[(String, Double)] =
+      plain.collect { case (n, f) if sub(n) => n -> exec(n, f) } ++
+        shared.flatMap(b => runShared(b, sub))
 
     // 1-min system loadavg at pass boundaries (VERDICT r14 #6): co-tenant
     // load is the dominant cross-round noise source; recording it makes a

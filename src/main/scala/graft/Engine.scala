@@ -36,9 +36,6 @@ object Engine {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val width = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString).toInt
     val s = builder(s"local[$cpus]", width).appName(appName).getOrCreate()
-    // A/B hook for the iterative engines' rounds-AQE scope (Graph.
-    // withoutAqe): SPARK_GRAFT_ITER_AQE=on keeps AQE inside round loops
-    sys.env.get("SPARK_GRAFT_ITER_AQE").foreach(v => s.conf.set("spark.graft.iterAqe", v))
     s.sparkContext.setLogLevel("WARN")
     // extensions only apply to sessions THIS builder created; if an earlier
     // session is being reused, install the functions imperatively too

@@ -288,9 +288,10 @@ object SqlSurface {
     // The graph-engine twins (round-10, carried round-8 advice #5). Like
     // graft_ivf_probe, the iterative engine runs EAGERLY at analysis time
     // on the driver; the spliced plan reads the final checkpointed rank /
-    // distance frame. The results inherit the engines' single-shot
-    // auto-release contract: execute the SELECT once and keep the output
-    // (ExpressionSpec pins that the release fires through the SQL path).
+    // distance frame. Each twin returns the engine's `Run.once` — the
+    // single-shot auto-release form: execute the SELECT once and keep the
+    // output (ExpressionSpec pins that the release fires through the SQL
+    // path).
     ("graft_pagerank",
       "graft_pagerank(edges STRING[, iters INT[, eps INT]]) - integer" +
         " fixed-point PageRank (nid, rank_fp) over a directed (src, dst)" +
@@ -305,7 +306,7 @@ object SqlSurface {
           if (exprs.length >= 3) Some(intLit(exprs(2), "graft_pagerank", "eps").toLong)
           else None
         GraftSqlBridge.analyzed(
-          graft.operators.Graph.pageRank(SparkSession.active.table(view), iters, eps))
+          graft.operators.Graph.pageRank(SparkSession.active.table(view), iters, eps).once)
       }),
 
     ("graft_weighted_pagerank",
@@ -323,7 +324,7 @@ object SqlSurface {
             Some(intLit(exprs(2), "graft_weighted_pagerank", "eps").toLong)
           else None
         GraftSqlBridge.analyzed(graft.operators.Graph.weightedPageRank(
-          SparkSession.active.table(view), iters, eps))
+          SparkSession.active.table(view), iters, eps).once)
       }),
 
     ("graft_trust",
@@ -342,7 +343,7 @@ object SqlSurface {
           else None
         val spark = SparkSession.active
         GraftSqlBridge.analyzed(graft.operators.Graph.trust(
-          spark.table(nodes), spark.table(edges), iters, eps))
+          spark.table(nodes), spark.table(edges), iters, eps).once)
       }),
 
     ("graft_bfs",
@@ -358,7 +359,7 @@ object SqlSurface {
           if (exprs.length >= 3) Some(intLit(exprs(2), "graft_bfs", "max_hops")) else None
         val spark = SparkSession.active
         GraftSqlBridge.analyzed(graft.operators.Graph.bfs(
-          spark.table(edges), spark.table(sources), maxHops))
+          spark.table(edges), spark.table(sources), maxHops).once)
       }),
 
     ("graft_hits",
@@ -371,7 +372,7 @@ object SqlSurface {
         val view = strLit(exprs.head, "graft_hits", "edges")
         val iters = if (exprs.length >= 2) intLit(exprs(1), "graft_hits", "iters") else 2
         GraftSqlBridge.analyzed(
-          graft.operators.Graph.hits(SparkSession.active.table(view), iters))
+          graft.operators.Graph.hits(SparkSession.active.table(view), iters).once)
       }),
 
     ("graft_kcore",
@@ -386,7 +387,7 @@ object SqlSurface {
         val rounds =
           if (exprs.length >= 3) intLit(exprs(2), "graft_kcore", "max_rounds") else 10
         GraftSqlBridge.analyzed(
-          graft.operators.Graph.kcore(SparkSession.active.table(view), k, rounds))
+          graft.operators.Graph.kcore(SparkSession.active.table(view), k, rounds).once)
       }),
 
     ("graft_sssp",
@@ -403,7 +404,7 @@ object SqlSurface {
           if (exprs.length >= 3) intLit(exprs(2), "graft_sssp", "max_rounds") else 10
         val spark = SparkSession.active
         GraftSqlBridge.analyzed(graft.operators.Graph.sssp(
-          spark.table(edges), spark.table(sources), rounds))
+          spark.table(edges), spark.table(sources), rounds).once)
       }),
 
     ("graft_lpa",
@@ -417,7 +418,7 @@ object SqlSurface {
         val rounds =
           if (exprs.length >= 2) intLit(exprs(1), "graft_lpa", "max_rounds") else 5
         GraftSqlBridge.analyzed(
-          graft.operators.Graph.lpa(SparkSession.active.table(edges), rounds))
+          graft.operators.Graph.lpa(SparkSession.active.table(edges), rounds).once)
       }),
 
     // round-11 analytics twins (r10 VERDICT #8)

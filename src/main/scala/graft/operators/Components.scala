@@ -230,7 +230,7 @@ object Components {
     var active = cur.count()
     var slowRounds = 0
     // the contraction control loop runs its fixed-shape rounds with AQE
-    // scoped off (the [[Graph.withoutAqe]] rationale — per-stage
+    // scoped off (the [[Graph.withoutAqeIf]] rationale — per-stage
     // materialization barriers dominate rounds over checkpointed
     // remnants); the detector materialization above ran with AQE on
     while (active > localEdgeThreshold && slowRounds < 2 && rounds < maxRounds)

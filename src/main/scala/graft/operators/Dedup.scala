@@ -133,7 +133,13 @@ object Dedup {
         * member the pins hold and every order-free consumer (Components,
         * the leakage aggregation, the bench build sweep) reads; `pairs`
         * is a sort VIEW over it for q26-shaped callers (r16). */
-      pairsUnsorted: DataFrame = null)
+      pairsUnsorted: DataFrame = null) {
+    /** Materialize the three pinned members so a build's full detector
+      * cost lands before its first consumer. The unsorted relation, not
+      * `pairs`: no order-free consumer needs q26's global sort (r16). */
+    def warm(): Unit = Seq(pairsUnsorted, labels, scores)
+      .foreach(_.write.format("noop").mode("overwrite").save())
+  }
 
   /** Build the shared [[Artifacts]] over any `(doc_id, text, source …)`
     * frame. All three members are persisted through one internal [[Pins]]

@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   * in round 10 with the alternating ([[hits]]), shrinking ([[kcore]]),
   * value-relaxing ([[sssp]]) and mode-adopting ([[lpa]]) shapes.
   *
+  * Every engine is one public entry returning a [[Run]]: the result
+  * frame, the rounds that ran, and the release handle. [[Run.once]] is the
+  * single-shot auto-release form (the `Dedup.deduplicate` contract) the
+  * SQL twins and the declared queries use.
+  *
   * Four skeletons, all all-integer (the q57 determinism rule — float ranks
   * would hash-diverge across engines' partial-agg summation orders):
   *
@@ -25,29 +30,29 @@ import org.apache.spark.sql.functions._
   *    formula is pinned verbatim as a [[Teleport]] case object: the floor
   *    placement is part of the oracle contract, not a detail to unify
   *    approximately.
-  *  - [[bfsReleasable]]: frontier-driven multi-source BFS (the Pregel
+  *  - [[bfs]]: frontier-driven multi-source BFS (the Pregel
   *    shape). Per round: one dst-keyed shuffle over the FRONTIER (not the
   *    whole reached set — strictly less work than the min-relaxation
   *    unroll it replaced), an anti-join against the reached set, and one
   *    frontier-count long on the driver. With `maxHops = None` the loop
   *    runs until the frontier empties — exact distances for the entire
   *    reachable set, no fixed unroll bound.
-  *  - [[hitsReleasable]]: the ALTERNATING hub/authority fixed point
+  *  - [[hits]]: the ALTERNATING hub/authority fixed point
   *    (Kleinberg) — two keyed shuffles + two 1-row normalization
   *    broadcasts per round at the overflow-safe [[SH]] scale.
-  *  - [[kcoreReleasable]]: the SHRINKING fixed point — iterative
+  *  - [[kcore]]: the SHRINKING fixed point — iterative
   *    degree-< k peel until a pass changes nothing (or a caller-shared
   *    round cap for fixed SQL unrolls), one membership count per round.
   *
-  * Scale posture shared by both: per-round lineage truncation through
+  * Scale posture shared by all: per-round lineage truncation through
   * eager `localCheckpoint` + [[GraftSqlBridge.freshLeaf]] (plans and
   * optimizer stats stay O(1) per round — the [[Components]] discipline;
   * production swaps reliable `checkpoint()` for executor-loss tolerance),
-  * and — new this round — per-round RELEASE of the previous round's
-  * checkpoint blocks plus a [[Pins]]-threaded release handle on the
-  * result, so a library caller composing these in a long-lived session
-  * pins nothing beyond the live round (the round-8 verdict's one
-  * structural debt; the `Dedup.deduplicate` listener pattern).
+  * per-round RELEASE of the previous round's checkpoint blocks, and a
+  * [[Pins]]-threaded release handle on the result, so a library caller
+  * composing these in a long-lived session pins nothing beyond the live
+  * round. The one-frame engines share a single round loop ([[iterate]]);
+  * [[hits]] and [[bfs]] carry two frames per round and keep their own.
   *
   * Driver reads per call: the node count (teleport constant), the seed
   * count (seeded mode), one frontier/Σ|Δr| long per round — all
@@ -77,17 +82,54 @@ object Graph {
     * not. Same floor-division determinism contract as [[S]]. */
   private[graft] val SH = 1000000000L
 
-  /** A propagation result: the rank frame `(nid, rank_fp)` ordered by nid,
-    * the number of rounds that actually ran (< maxIters when an epsilon
-    * stop fired), and the handle dropping every cache AND checkpoint block
-    * the run pinned. FINALITY: the frame's lineage bottoms out in a
-    * localCheckpoint leaf — after release it cannot be re-executed. */
-  final case class Ranked(ranks: DataFrame, rounds: Int, release: () => Unit)
+  /** Every engine's result: the output frame, the number of rounds that
+    * actually ran (fewer than the cap when a fixpoint or epsilon stop
+    * fired), and the handle dropping every cache AND checkpoint block the
+    * run pinned — never a checkpoint leaf the caller passed in. FINALITY:
+    * the frame's lineage bottoms out in the engine's localCheckpoint
+    * leaves — after release it cannot be re-executed. */
+  final case class Run(out: DataFrame, rounds: Int, release: () => Unit) {
+    /** Single-shot auto-release: execute the returned frame once and keep
+      * the output ([[Release.onFirstExecution]]). */
+    def once: DataFrame = Release.onFirstExecution(out, release)
+  }
 
-  /** A BFS result: exact hop distances `(nid, d)` (unordered — callers
-    * compose joins; order at the edge), rounds executed (the last one
-    * discovers the empty frontier), and the release handle. */
-  final case class Reached(dist: DataFrame, rounds: Int, release: () => Unit)
+  /** The one round-cap check, run by every capped engine before its first
+    * job: zero rounds would silently return the initial frame. */
+  private def requireCap(engine: String, cap: Int): Unit =
+    require(cap >= 1, s"Graph.$engine: the round cap must be >= 1, got $cap")
+
+  /** Eager per-round lineage truncation ([[Components]]): an iterative
+    * frame referencing its predecessor doubles the plan every round. */
+  private def ckpt(df: DataFrame): DataFrame =
+    GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
+
+  /** The release handle: the run's pins, then the engine's own final
+    * checkpoint leaves (each a bare leaf — never a plan walk, which would
+    * reach the caller's input lineage). */
+  private def handle(pins: Pins, leaves: DataFrame*): () => Unit =
+    () => { pins.release(); leaves.foreach(GraftSqlBridge.releaseLeaf) }
+
+  /** The shared round loop of the one-frame engines ([[damped]],
+    * [[kcore]], [[sssp]], [[lpa]]). From `init`, each round checkpoints
+    * `step(prev)`, asks `stop(prev, cur, round)`, then drops the previous
+    * round's checkpoint blocks (the stop test was their last reader; a
+    * non-leaf `init` projection makes that a no-op). At most `cap`
+    * rounds, AQE-off while `small` ([[withoutAqeIf]]). */
+  private def iterate(init: DataFrame, small: Boolean, cap: Int, pins: Pins)(
+      step: DataFrame => DataFrame)(stop: (DataFrame, DataFrame, Int) => Boolean): Run = {
+    var cur = init
+    var rounds = 0
+    var stopped = false
+    withoutAqeIf(init.sparkSession, small) { while (!stopped && rounds < cap) {
+      val prev = cur
+      cur = ckpt(step(prev))
+      rounds += 1
+      stopped = stop(prev, cur, rounds)
+      GraftSqlBridge.releaseLeaf(prev)
+    } }
+    Run(cur, rounds, handle(pins, cur))
+  }
 
   /** Teleport policy: who receives teleport + dangling mass, and the exact
     * integer recombination. Columns in scope: `c` (summed inflow, null if
@@ -124,17 +166,12 @@ object Graph {
   }
 
   /** PageRank over a directed `(src, dst)` edge frame (duplicates deduped
-    * on entry). Single-shot auto-release (the `Dedup.deduplicate`
-    * contract): execute the returned frame once and keep the output. */
+    * on entry): `(nid, rank_fp)` ordered by nid. Pre-pinned upstream
+    * frames may ride in via `pins` — the handle drops them together with
+    * the engine's own state. */
   def pageRank(rawEdges: DataFrame, iters: Int = 3,
-      epsilon: Option[Long] = None): DataFrame =
-    auto(pageRankReleasable(rawEdges, iters, epsilon))
-
-  /** [[pageRank]] with caller-controlled release (library composition).
-    * Pre-pinned upstream frames may ride in via `pins` — the handle drops
-    * them together with the engine's own state. */
-  def pageRankReleasable(rawEdges: DataFrame, iters: Int = 3,
-      epsilon: Option[Long] = None, pins: Pins = new Pins): Ranked = {
+      epsilon: Option[Long] = None, pins: Pins = new Pins): Run = {
+    requireCap("pageRank", iters)
     // nodes, degrees, and the joined edge set all derive from the distinct
     // edge set — pin it or the upstream detector runs three times
     val e = pins(rawEdges.select(col("src"), col("dst")).distinct())
@@ -148,11 +185,8 @@ object Graph {
     * `r·w < 2⁶³` (~9·10⁶ multiplicity on one edge at full rank — past
     * that route the product through DECIMAL, ranking unchanged). */
   def weightedPageRank(weightedEdges: DataFrame, iters: Int = 3,
-      epsilon: Option[Long] = None): DataFrame =
-    auto(weightedPageRankReleasable(weightedEdges, iters, epsilon))
-
-  def weightedPageRankReleasable(weightedEdges: DataFrame, iters: Int = 3,
-      epsilon: Option[Long] = None, pins: Pins = new Pins): Ranked = {
+      epsilon: Option[Long] = None, pins: Pins = new Pins): Run = {
+    requireCap("weightedPageRank", iters)
     val e = pins(weightedEdges.select(col("src"), col("dst"), col("w")))
     damped(e, None, Uniform, iters, epsilon, pins)
   }
@@ -162,47 +196,34 @@ object Graph {
     * directed `(src, dst)` (symmetrize upstream for similarity graphs;
     * NOT deduped — parallel edges weight the split). */
   def trust(nodes: DataFrame, edges: DataFrame, iters: Int = 2,
-      epsilon: Option[Long] = None): DataFrame =
-    auto(trustReleasable(nodes, edges, iters, epsilon))
-
-  def trustReleasable(nodes: DataFrame, edges: DataFrame, iters: Int = 2,
-      epsilon: Option[Long] = None, pins: Pins = new Pins): Ranked =
+      epsilon: Option[Long] = None, pins: Pins = new Pins): Run = {
+    requireCap("trust", iters)
     damped(edges.select(col("src"), col("dst"), lit(1L).as("w")),
       Some(nodes), Seeded, iters, epsilon, pins)
+  }
 
-  private def auto(rk: Ranked): DataFrame =
-    Release.onFirstExecution(rk.ranks, rk.release)
-
-  /** Run the ITERATIVE control loop's eager actions with AQE off, restoring
-    * the session's setting afterwards (r16). Rationale: every round is the
-    * same statically-known plan over already-materialized inputs (pinned
-    * caches + the previous round's checkpoint leaf), but each AQE shuffle-
-    * stage materialization costs a driver barrier + replan + fresh codegen
-    * — measured 27 single-stage jobs (~0.25 s each) for a 2-round trust
-    * call at sf0.1 vs 9 jobs with AQE scoped off (2.4× on the engine).
-    * Corpus-scale upstream work (the pair detector, the pinned-frame
-    * materializations) runs during SETUP, before this scope, with AQE on.
-    * `spark.graft.iterAqe = on` keeps AQE inside the rounds for
-    * deployments whose per-round shuffles are themselves cluster-scale
-    * and skewed (the round plans stay correct either way — only the
-    * scheduling changes). */
-  private[operators] def withoutAqe[T](s: org.apache.spark.sql.SparkSession)(f: => T): T =
-    withoutAqeIf(s, small = true)(f)
-
-  /** Size-gated [[withoutAqe]] (r16): the AQE-off scope only applies
-    * while the loop's working set is small enough that per-stage driver
-    * barriers dominate — callers pass a scalar they already track (node
-    * count, active edge count, frontier size) against
-    * [[IterAqeOffThreshold]]. Above it, rounds keep AQE (runtime
-    * coalescing/skew handling and its memory headroom matter more than
-    * barrier latency there — the 10× preContract=off probe OOM'd its
-    * 62.7 M-edge hash-min aggregation under static AQE-off planning).
-    * Data-derived, not core-count-derived: the same code flips itself at
-    * any scale. */
+  /** Run the ITERATIVE control loop's eager actions with AQE off while the
+    * loop's working set is small, restoring the session's setting
+    * afterwards (r16). Rationale: every round is the same statically-known
+    * plan over already-materialized inputs (pinned caches + the previous
+    * round's checkpoint leaf), but each AQE shuffle-stage materialization
+    * costs a driver barrier + replan + fresh codegen — measured 27
+    * single-stage jobs (~0.25 s each) for a 2-round trust call at sf0.1 vs
+    * 9 jobs with AQE scoped off (2.4× on the engine). Corpus-scale upstream
+    * work (the pair detector, the pinned-frame materializations) runs
+    * during SETUP, before this scope, with AQE on.
+    *
+    * The gate: callers pass a scalar they already track (node count,
+    * active edge count, frontier size) against [[IterAqeOffThreshold]].
+    * Above it, rounds keep AQE (runtime coalescing/skew handling and its
+    * memory headroom matter more than barrier latency there — the 10×
+    * preContract=off probe OOM'd its 62.7 M-edge hash-min aggregation
+    * under static AQE-off planning). Data-derived, not core-count-derived:
+    * the same code flips itself at any scale. */
   private[operators] def withoutAqeIf[T](s: org.apache.spark.sql.SparkSession,
       small: Boolean)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
-    if (!small || s.conf.get("spark.graft.iterAqe", "off") == "on") f
+    if (!small) f
     else {
       val prev = s.conf.get(key)
       s.conf.set(key, "false")
@@ -232,7 +253,7 @@ object Graph {
     * or None to derive the endpoints with `tele = true`. */
   private def damped(weighted: DataFrame, nodesIn: Option[DataFrame],
       tp: Teleport, maxIters: Int, epsilon: Option[Long],
-      pins: Pins): Ranked = {
+      pins: Pins): Run = {
     val ww = weighted.groupBy("src").agg(sum("w").as("ww"))
     val base = nodesIn.getOrElse(
       weighted.select(col("src").as("nid"))
@@ -264,12 +285,9 @@ object Graph {
     val m = tp.teleCount(n, cnt.getLong(1))
     require(m > 0,
       "Graph: no teleport-eligible (seed) nodes — mass has nowhere to start")
-    var r = nodes.select(col("nid"), col("tele"), col("has_out"),
+    val init = nodes.select(col("nid"), col("tele"), col("has_out"),
       tp.init(n, m).as("r"))
-    var rounds = 0
-    var converged = false
-    withoutAqeIf(weighted.sparkSession, n <= IterAqeOffThreshold) { while (rounds < maxIters && !converged) {
-      val prev = r
+    val run = iterate(init, n <= IterAqeOffThreshold, maxIters, pins) { r =>
       val contrib = edges
         .join(r.select(col("nid"), col("r")), edges("src") === col("nid"))
         .select(col("dst").as("nid2"), expr("(r * w) div ww").as("c"))
@@ -277,39 +295,22 @@ object Graph {
         .select(col("nid2").as("nid"), col("c"))
       val dang = r.agg(coalesce(
         sum(when(!col("has_out"), col("r")).otherwise(0L)), lit(0L)).as("dang"))
-      r = nodes.crossJoin(broadcast(dang))
+      nodes.crossJoin(broadcast(dang))
         .join(contrib, Seq("nid"), "left")
         .select(col("nid"), col("tele"), col("has_out"),
           tp.recombine(n, m).as("r"))
-      // per-round lineage truncation ([[Components]]): an iterative frame
-      // referencing its predecessor doubles the plan every round; eager
-      // checkpoint keeps plan + stats O(1)
-      r = GraftSqlBridge.freshLeaf(r.localCheckpoint(true))
-      rounds += 1
-      if (epsilon.isDefined && rounds < maxIters) {
-        // integer L1 delta between consecutive checkpointed rank frames —
-        // a 1-row driver read, the production stopping rule
-        val delta = r.select(col("nid"), col("r"))
+    } { (prev, r, rounds) =>
+      // integer L1 delta between consecutive checkpointed rank frames —
+      // a 1-row driver read, the production stopping rule (skipped after
+      // the last round, which stops anyway)
+      epsilon.exists(eps => rounds < maxIters &&
+        r.select(col("nid"), col("r"))
           .join(prev.select(col("nid"), col("r").as("rp")), "nid")
           .agg(coalesce(sum(abs(col("r") - col("rp"))), lit(0L)))
-          .head().getLong(0)
-        converged = delta <= epsilon.get
-      }
-      // the previous round's checkpoint blocks are dead now (delta above
-      // was their last reader); round 0's prev is the un-checkpointed init
-      // projection — releaseLeaf is a no-op there
-      GraftSqlBridge.releaseLeaf(prev)
-    } }
-    val last = r
-    val out = r.select(col("nid"), col("r").as("rank_fp")).orderBy("nid")
-    Ranked(out, rounds,
-      () => { pins.release(); GraftSqlBridge.releaseLeaf(last) })
+          .head().getLong(0) <= eps)
+    }
+    run.copy(out = run.out.select(col("nid"), col("r").as("rank_fp")).orderBy("nid"))
   }
-
-  /** A HITS result: `(nid, hub_fp, auth_fp)` at scale [[SH]], ordered by
-    * nid (isolated-side nodes score 0), plus the release handle. Same
-    * single-shot finality as [[Ranked]]. */
-  final case class HubsAuths(scores: DataFrame, release: () => Unit)
 
   /** HITS hubs-and-authorities (Kleinberg, JACM'99) over a directed
     * `(src, dst)` edge frame (duplicates deduped on entry) — the
@@ -319,20 +320,15 @@ object Graph {
     * floor-division determinism as every other propagation (`(v·SH) div
     * max(Σv, 1)` — integer, order-free, bit-identical across engines).
     * On a bipartite graph the two sides separate exactly: pure sources
-    * get `auth_fp = 0`, pure sinks `hub_fp = 0`.
+    * get `auth_fp = 0`, pure sinks `hub_fp = 0`. Output `(nid, hub_fp,
+    * auth_fp)` ordered by nid (isolated-side nodes score 0).
     *
     * Scale posture: per round TWO dst/src-keyed shuffles (the two inflow
     * groupBys) + two 1-row broadcast normalization scalars; the deduped
     * edge set pins once; per-round checkpoint truncation and block
-    * release (the [[damped]] discipline). Single-shot auto-release. */
-  def hits(rawEdges: DataFrame, iters: Int = 2): DataFrame = {
-    val r = hitsReleasable(rawEdges, iters)
-    Release.onFirstExecution(r.scores, r.release)
-  }
-
-  def hitsReleasable(rawEdges: DataFrame, iters: Int = 2,
-      pins: Pins = new Pins): HubsAuths = {
-    require(iters >= 1, "Graph.hits: iters must be >= 1")
+    * release (the [[damped]] discipline). */
+  def hits(rawEdges: DataFrame, iters: Int = 2, pins: Pins = new Pins): Run = {
+    requireCap("hits", iters)
     val w = width(rawEdges.sparkSession)
     // TWO pre-partitioned pins of the deduped edge set — the alternating
     // inflows join on src and dst respectively; one unpartitioned pin
@@ -352,8 +348,6 @@ object Graph {
     require(n <= SH,
       s"Graph.hits: $n nodes exceed the SH=$SH fixed-point scale — the " +
         "uniform init SH/n floors to 0; raise the scale before scoring")
-    def ckpt(df: DataFrame): DataFrame =
-      GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
     // (nid, v) summed along edges from side `from` onto side `to` — reads
     // the pin partitioned on `from`, so only the groupBy shuffles
     def inflow(from: String, to: String, x: DataFrame): DataFrame =
@@ -374,47 +368,37 @@ object Graph {
     }
     var h = nodes.select(col("nid"), lit(SH / n).as("v"))
     var a: DataFrame = null
-    var rounds = 0
-    withoutAqeIf(nodes.sparkSession, n <= IterAqeOffThreshold) { while (rounds < iters) {
-      val (ph, pa) = (h, a)
+    // the live round's raw checkpoint leaves; h/a are normalized VIEWS
+    // over them (r16)
+    var leaves = Seq.empty[DataFrame]
+    withoutAqeIf(nodes.sparkSession, n <= IterAqeOffThreshold) { for (_ <- 1 to iters) {
       val rawA = ckpt(inflow("src", "dst", h))
       a = normalized(rawA)
       val rawH = ckpt(inflow("dst", "src", a))
       h = normalized(rawH)
-      // the previous round's raw leaves have no readers left (round 0's h
-      // is the un-checkpointed init projection — releaseLeaf no-ops there;
-      // the normalized views release with their raw leaf)
-      GraftSqlBridge.releaseLeaves(ph)
-      if (pa != null) GraftSqlBridge.releaseLeaves(pa)
-      rounds += 1
+      // the previous round's raw leaves have no readers left. Released as
+      // bare leaves: round 0's h is a projection over the caller's input
+      // lineage, whose own checkpoint leaves are not the engine's to drop
+      leaves.foreach(GraftSqlBridge.releaseLeaf)
+      leaves = Seq(rawH, rawA)
     } }
-    val (lastH, lastA) = (h, a)
     val out = nodes
       .join(h.select(col("nid"), col("v").as("hub_fp")), Seq("nid"), "left")
       .join(a.select(col("nid"), col("v").as("auth_fp")), Seq("nid"), "left")
       .select(col("nid"), coalesce(col("hub_fp"), lit(0L)).as("hub_fp"),
         coalesce(col("auth_fp"), lit(0L)).as("auth_fp"))
       .orderBy("nid")
-    HubsAuths(out, () => {
-      pins.release()
-      // h/a are normalized VIEWS over their raw checkpoint leaves (r16) —
-      // release every leaf under them, not the (leaf-less) views
-      GraftSqlBridge.releaseLeaves(lastH)
-      GraftSqlBridge.releaseLeaves(lastA)
-    })
+    Run(out, iters, handle(pins, leaves: _*))
   }
-
-  /** A k-core result: the surviving `(nid)` membership frame, the number
-    * of peel rounds executed (the last one observes no change when the
-    * fixpoint is reached before `maxRounds`), and the release handle. */
-  final case class Core(core: DataFrame, rounds: Int, release: () => Unit)
 
   /** k-core decomposition membership (Seidman 1983) by iterative peeling:
     * drop every node whose degree within the surviving subgraph is < k,
     * until a pass changes nothing (or `maxRounds` passes ran — the cap
     * makes a fixed SQL unroll of the same bound bit-identical even on a
     * fixture that hasn't converged). Degree = out-degree over the edge
-    * frame — pass SYMMETRIZED edges for the undirected semantics.
+    * frame — pass SYMMETRIZED edges for the undirected semantics. Output:
+    * the surviving `(nid)` membership frame; the last round observes no
+    * change when the fixpoint lands before `maxRounds`.
     *
     * The link-graph curation diagnostic behind "dense duplicate cores":
     * a near-dup cluster's 2-core is its cyclically-connected heart, the
@@ -424,51 +408,31 @@ object Graph {
     * src-keyed count — all partial+final; the alive set only shrinks;
     * per-round checkpoint truncation + block release; one membership
     * count long on the driver per round. */
-  def kcore(edgesIn: DataFrame, k: Int, maxRounds: Int = 10): DataFrame = {
-    val c = kcoreReleasable(edgesIn, k, maxRounds)
-    Release.onFirstExecution(c.core, c.release)
-  }
-
-  def kcoreReleasable(edgesIn: DataFrame, k: Int, maxRounds: Int = 10,
-      pins: Pins = new Pins): Core = {
-    require(k >= 1 && maxRounds >= 1, "Graph.kcore: k and maxRounds must be >= 1")
+  def kcore(edgesIn: DataFrame, k: Int, maxRounds: Int = 10,
+      pins: Pins = new Pins): Run = {
+    requireCap("kcore", maxRounds)
+    require(k >= 1, "Graph.kcore: k must be >= 1")
     // distinct on entry (the hits convention — r10 ADVICE): parallel
     // edges would inflate degree counts into a silent multigraph k-core;
     // a no-op shuffle-dedup on already-distinct callers. Pre-partitioned
     // on src so the alive-semijoin's edge side never re-shuffles (r16).
     val ed = pins(edgesIn.select(col("src"), col("dst")).distinct()
       .repartition(width(edgesIn.sparkSession), col("src")))
-    def ckpt(df: DataFrame): DataFrame =
-      GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
-    var alive = ckpt(ed.select(col("src").as("nid"))
+    val alive = ckpt(ed.select(col("src").as("nid"))
       .union(ed.select(col("dst").as("nid"))).distinct())
     var size = alive.count()
-    var rounds = 0
-    var changed = true
-    withoutAqeIf(edgesIn.sparkSession, size <= IterAqeOffThreshold) { while (changed && rounds < maxRounds) {
-      val prev = alive
-      val next = ckpt(ed
-        .join(prev.select(col("nid").as("sa")), col("src") === col("sa"))
+    iterate(alive, size <= IterAqeOffThreshold, maxRounds, pins) { prev =>
+      ed.join(prev.select(col("nid").as("sa")), col("src") === col("sa"))
         .join(prev.select(col("nid").as("da")), col("dst") === col("da"))
         .groupBy(col("src").as("nid")).agg(count(lit(1)).as("c"))
-        .filter(col("c") >= k).select(col("nid")))
+        .filter(col("c") >= k).select(col("nid"))
+    } { (_, next, _) =>
       val nsize = next.count()
-      changed = nsize != size // next ⊆ prev, so equal size ⇔ equal set
-      GraftSqlBridge.releaseLeaf(prev)
-      alive = next
+      val same = nsize == size // next ⊆ prev, so equal size ⇔ equal set
       size = nsize
-      rounds += 1
-    } }
-    val last = alive
-    Core(last, rounds,
-      () => { pins.release(); GraftSqlBridge.releaseLeaf(last) })
+      same
+    }
   }
-
-  /** A shortest-path result: `(nid, d)` minimum accumulated edge cost
-    * from the source set (unordered — compose at the edge), rounds
-    * executed (the last observes the fixpoint when it lands before
-    * `maxRounds`), and the release handle. */
-  final case class Costed(dist: DataFrame, rounds: Int, release: () => Unit)
 
   /** Multi-source shortest path with NON-NEGATIVE integer edge costs
     * (Bellman-Ford relaxation): per round every reached node re-offers
@@ -481,71 +445,54 @@ object Graph {
     * fired) — or at `maxRounds`, the cap that keeps a fixed SQL unroll of
     * the same bound bit-identical on an unconverged input (monotone
     * lattice: once stationary, every later unroll step is a no-op).
+    * Output `(nid, d)`, unordered — compose at the edge.
     *
     * Scale posture: per round one dst-keyed shuffle carrying the whole
     * reached set (the Bellman-Ford envelope — production graphs with
     * small diameters converge in a handful of rounds) + one 2-scalar
     * driver read; per-round checkpoint truncation + block release. */
-  def sssp(edges: DataFrame, sources: DataFrame, maxRounds: Int = 10): DataFrame = {
-    val c = ssspReleasable(edges, sources, maxRounds)
-    Release.onFirstExecution(c.dist, c.release)
-  }
-
-  def ssspReleasable(edgesIn: DataFrame, sources: DataFrame,
-      maxRounds: Int = 10, pins: Pins = new Pins): Costed = {
-    require(maxRounds >= 1, "Graph.sssp: maxRounds must be >= 1")
+  def sssp(edgesIn: DataFrame, sources: DataFrame,
+      maxRounds: Int = 10, pins: Pins = new Pins): Run = {
+    requireCap("sssp", maxRounds)
     // no dedupe needed: min-relaxation is idempotent — parallel edges
     // (same or different w) cannot change the fixpoint, only the cheapest
     // relaxes through (contrast kcore/lpa, whose counts dedupe on entry).
     // Pre-partitioned on src: the per-round relax join reads it in place.
     val ed = pins(edgesIn.select(col("src"), col("dst"), col("w"))
       .repartition(width(edgesIn.sparkSession), col("src")))
-    def ckpt(df: DataFrame): DataFrame =
-      GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
-    var dist = ckpt(sources.select(col("nid")).distinct()
+    val dist = ckpt(sources.select(col("nid")).distinct()
       .select(col("nid"), lit(0L).as("d")))
     def sig(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)), coalesce(sum("d"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
     var s = sig(dist)
-    var rounds = 0
-    var changed = true
-    withoutAqeIf(edgesIn.sparkSession, s._1 <= IterAqeOffThreshold) { while (changed && rounds < maxRounds) {
-      val prev = dist
-      dist = ckpt(prev.select(col("nid"), col("d"))
+    iterate(dist, s._1 <= IterAqeOffThreshold, maxRounds, pins) { prev =>
+      prev.select(col("nid"), col("d"))
         .union(ed.join(prev, ed("src") === prev("nid"))
           .select(col("dst").as("nid"), (col("d") + col("w")).as("d")))
-        .groupBy("nid").agg(min("d").as("d")))
-      val s2 = sig(dist)
-      changed = s2 != s
+        .groupBy("nid").agg(min("d").as("d"))
+    } { (_, next, _) =>
+      val s2 = sig(next)
+      val same = s2 == s
       s = s2
-      GraftSqlBridge.releaseLeaf(prev)
-      rounds += 1
-    } }
-    val last = dist
-    Costed(last, rounds,
-      () => { pins.release(); GraftSqlBridge.releaseLeaf(last) })
+      same
+    }
   }
 
   /** Multi-source frontier BFS over directed `(src, dst)` edges from the
-    * `(nid)` source set: exact hop distances for every node within
-    * `maxHops` (None = the whole reachable set — the loop runs until the
-    * frontier empties). Bit-identical to a min-relaxation unroll of the
-    * same bound: layered BFS discovers every node via a shortest path
-    * first, and only strictly-new nodes enter the frontier. */
-  def bfs(edges: DataFrame, sources: DataFrame,
-      maxHops: Option[Int] = None): DataFrame = {
-    val bf = bfsReleasable(edges, sources, maxHops)
-    Release.onFirstExecution(bf.dist, bf.release)
-  }
-
-  def bfsReleasable(edgesIn: DataFrame, sources: DataFrame,
-      maxHops: Option[Int] = None, pins: Pins = new Pins): Reached = {
+    * `(nid)` source set: exact hop distances `(nid, d)` for every node
+    * within `maxHops` (None = the whole reachable set — the loop runs
+    * until the frontier empties; the last round discovers the empty
+    * frontier). Unordered — callers compose joins; order at the edge.
+    * Bit-identical to a min-relaxation unroll of the same bound: layered
+    * BFS discovers every node via a shortest path first, and only
+    * strictly-new nodes enter the frontier. */
+  def bfs(edgesIn: DataFrame, sources: DataFrame,
+      maxHops: Option[Int] = None, pins: Pins = new Pins): Run = {
+    maxHops.foreach(requireCap("bfs", _))
     val ed = pins(edgesIn.select(col("src"), col("dst"))
       .repartition(width(edgesIn.sparkSession), col("src"))) // reread every round
-    def ckpt(df: DataFrame): DataFrame =
-      GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
     var reached = ckpt(sources.select(col("nid")).distinct()
       .select(col("nid"), lit(0L).as("d")))
     var frontier = reached
@@ -573,14 +520,8 @@ object Graph {
       rounds += 1
     } }
     if (!(frontier eq reached)) GraftSqlBridge.releaseLeaf(frontier)
-    val last = reached
-    Reached(last, rounds,
-      () => { pins.release(); GraftSqlBridge.releaseLeaf(last) })
+    Run(reached, rounds, handle(pins, reached))
   }
-
-  /** A label-propagation result: `(nid, label)` community labels, rounds
-    * executed, and the release handle. */
-  final case class Labeled(labels: DataFrame, rounds: Int, release: () => Unit)
 
   /** Synchronous label propagation (Raghavan et al., Phys. Rev. E 2007)
     * over directed `(src, dst)` edges — pass a symmetrized frame for the
@@ -592,52 +533,38 @@ object Graph {
     * driver long per round — a no-op round fixes every later round, so
     * early stop stays bit-identical to a fixed `maxRounds` SQL unroll)
     * or at the cap, which also bounds the 2-cycle oscillation
-    * synchronous LPA admits on bipartite-ish regions.
+    * synchronous LPA admits on bipartite-ish regions. Output `(nid,
+    * label)` community labels.
     *
     * Scale posture: per round one src-keyed shuffle (edge × label join),
     * one (dst, label) partial+final count, one nid-keyed mode join; the
     * changed count rides the already-checkpointed frame. Per-round
     * checkpoint truncation + block release, [[Pins]]-threaded handle.
     */
-  def lpa(edges: DataFrame, maxRounds: Int = 5): DataFrame = {
-    val l = lpaReleasable(edges, maxRounds)
-    Release.onFirstExecution(l.labels, l.release)
-  }
-
-  def lpaReleasable(edgesIn: DataFrame, maxRounds: Int = 5,
-      pins: Pins = new Pins): Labeled = {
-    require(maxRounds >= 1, "Graph.lpa: maxRounds must be >= 1")
+  def lpa(edgesIn: DataFrame, maxRounds: Int = 5,
+      pins: Pins = new Pins): Run = {
+    requireCap("lpa", maxRounds)
     // distinct on entry (the hits convention — r10 ADVICE): parallel
     // edges would double-count label votes; no-op on distinct callers.
     // Pre-partitioned on src: the per-round label join reads it in place.
     val ed = pins(edgesIn.select(col("src"), col("dst")).distinct()
       .repartition(width(edgesIn.sparkSession), col("src")))
-    def ckpt(df: DataFrame): DataFrame =
-      GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
     // (nid, label, old) — `old` rides the checkpoint so the changed
     // count is a cheap scan of the materialized frame, not a re-join
-    var cur = ckpt(ed.select(col("src").as("nid"))
+    val labels = ckpt(ed.select(col("src").as("nid"))
       .union(ed.select(col("dst").as("nid"))).distinct()
       .select(col("nid"), col("nid").as("label"), col("nid").as("old")))
-    var rounds = 0
-    var changed = true
-    withoutAqeIf(edgesIn.sparkSession, cur.count() <= IterAqeOffThreshold) { while (changed && rounds < maxRounds) {
-      val prev = cur
+    val run = iterate(labels, labels.count() <= IterAqeOffThreshold, maxRounds, pins) { prev =>
       val mode = ed.join(prev.select(col("nid"), col("label")),
           ed("src") === col("nid"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("dst").as("mn"))
         .agg(max(struct(col("c"), (-col("label")).as("neg"), col("label"))).as("m"))
         .select(col("mn"), col("m.label").as("ml"))
-      cur = ckpt(prev.select(col("nid"), col("label").as("old"))
+      prev.select(col("nid"), col("label").as("old"))
         .join(mode, col("nid") === col("mn"), "left")
-        .select(col("nid"), coalesce(col("ml"), col("old")).as("label"), col("old")))
-      changed = cur.filter(col("label") =!= col("old")).count() > 0
-      GraftSqlBridge.releaseLeaf(prev)
-      rounds += 1
-    } }
-    val last = cur
-    Labeled(last.select(col("nid"), col("label")), rounds,
-      () => { pins.release(); GraftSqlBridge.releaseLeaf(last) })
+        .select(col("nid"), coalesce(col("ml"), col("old")).as("label"), col("old"))
+    } { (_, cur, _) => cur.filter(col("label") =!= col("old")).count() == 0 }
+    run.copy(out = run.out.select(col("nid"), col("label")))
   }
 }

@@ -59,7 +59,8 @@ object Release {
     *
     * Contract: `df` becomes single-shot — execute once and keep the
     * OUTPUT; callers that materialize several times (or want release
-    * timing control) use the engine's releasable variant instead. A
+    * timing control) call the engine's release handle themselves
+    * ([[Graph.Run.release]], [[Dedup.deduplicateReleasable]]). A
     * FAILED first action does NOT consume the shot: the pinned state is
     * exactly what the retry needs, so `onFailure` deliberately leaves it
     * in place (transient executor loss stays retryable). Callers that

@@ -82,10 +82,10 @@ object TierThirty {
     val ed = hits.select(col("doc_a").as("src"), col("doc_b").as("dst"), col("w"))
       .union(hits.select(col("doc_b").as("src"), col("doc_a").as("dst"), col("w")))
     val seeds = docs.filter(col("source") === "src0").select(col("doc_id").as("nid"))
-    val sp = Graph.ssspReleasable(ed, seeds, maxRounds = SpRounds, pins = pins)
+    val sp = Graph.sssp(ed, seeds, maxRounds = SpRounds, pins = pins)
     Release.onFirstExecution(
       docs.select(col("doc_id"))
-        .join(sp.dist.select(col("nid").as("doc_id"), col("d")), Seq("doc_id"), "left")
+        .join(sp.out.select(col("nid").as("doc_id"), col("d")), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("d"), lit(-1L)).as("drift_ppm"))
         .orderBy("doc_id"),
       sp.release)

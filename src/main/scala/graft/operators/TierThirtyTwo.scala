@@ -72,9 +72,9 @@ object TierThirtyTwo {
       .select("doc_a", "doc_b"))
     val ed = hits.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(hits.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val l = Graph.lpaReleasable(ed, maxRounds = LpaRounds, pins = pins)
+    val l = Graph.lpa(ed, maxRounds = LpaRounds, pins = pins)
     Release.onFirstExecution(
-      l.labels.select(col("nid").as("doc_id"), col("label").as("community"))
+      l.out.select(col("nid").as("doc_id"), col("label").as("community"))
         .orderBy("doc_id"),
       l.release)
   }

@@ -77,7 +77,7 @@ object TierTwentyNine {
       .join(Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    Graph.hits(e, iters = HitsIters)
+    Graph.hits(e, iters = HitsIters).once
   }
 
   /** One oracle-SQL peel round: keep the alive nodes whose degree within
@@ -124,9 +124,9 @@ object TierTwentyNine {
       .select("doc_a", "doc_b"))
     val ed = hits.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(hits.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val core = Graph.kcoreReleasable(ed, k = CoreK, maxRounds = PeelRounds, pins = pins)
+    val core = Graph.kcore(ed, k = CoreK, maxRounds = PeelRounds, pins = pins)
     Release.onFirstExecution(
-      core.core.select(col("nid").as("doc_id")).orderBy("doc_id"),
+      core.out.select(col("nid").as("doc_id")).orderBy("doc_id"),
       core.release)
   }
 

@@ -92,12 +92,12 @@ object TierTwentyOne {
     * `(src, dst)` (duplicates tolerated — deduped on entry). Round 9:
     * delegates to the unified [[Graph]] engine (uniform teleport, [[Iters]]
     * rounds) — one iterate-shuffle-checkpoint skeleton shared with q128/
-    * q136/q137, with per-round block release and a single-shot auto-release
-    * on the result (execute the returned frame once; the
-    * [[Dedup.deduplicate]] contract). */
+    * q136/q137, with per-round block release; the result is the engine's
+    * single-shot [[Graph.Run.once]] form (execute the returned frame once;
+    * the [[Dedup.deduplicate]] contract). */
   private[graft] def pageRankOver(
       rawEdges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Graph.pageRank(rawEdges, iters = Iters)
+    Graph.pageRank(rawEdges, iters = Iters).once
 
   /** DSIR-style hashed importance weight per document (Xie et al. 2023:
     * n-gram features hashed into buckets; weight = how much more likely

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    uniform split cannot express.
   *
   * Round 10: both queries delegate their iteration skeletons to the
-  * unified [[Graph]] engine (q136 → [[Graph.bfsReleasable]], q137 →
+  * unified [[Graph]] engine (q136 → [[Graph.bfs]], q137 →
   * [[Graph.weightedPageRank]]) — closing the round-8/9 verdicts'
   * unreleased-persist debt: every frame either rides a [[Pins]]-threaded
   * release handle or the engine's per-round checkpoint-block release.
@@ -54,15 +54,15 @@ object TierTwentySix {
     * celled edges ⊆ anchor edges, so every celled hop count is ≥ the
     * anchor's for the same doc — the monotonicity law the spec pins.
     *
-    * Round 10: the loop lives in the unified [[Graph.bfsReleasable]]
+    * Round 10: the loop lives in the unified [[Graph.bfs]]
     * engine (frontier-driven — per round ONE dst-keyed shuffle over the
     * FRONTIER, strictly less work than the min-relaxation unroll this
     * replaced, which re-relaxed the whole reached set every round); this
     * wrapper symmetrizes the pair frame and maps the −1 periphery
     * projection. The pair detector is pinned HERE (the symmetrizing
-    * union reads it twice) and rides the engine's release handle;
-    * single-shot auto-release on the result (the [[Dedup.deduplicate]]
-    * contract). The oracle keeps the min-relaxation SQL — layered BFS
+    * union reads it twice) and rides the engine's `pins`, so the
+    * returned [[Graph.Run]]'s handle drops it; single-shot auto-release
+    * on the result (the [[Dedup.deduplicate]] contract). The oracle keeps the min-relaxation SQL — layered BFS
     * discovers every node via a shortest path first, so the two forms
     * are bit-identical at equal bound.
     */
@@ -94,10 +94,10 @@ object TierTwentySix {
     val ed = hits.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(hits.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val seeds = docs.filter(col("source") === "src0").select(col("doc_id").as("nid"))
-    val bf = Graph.bfsReleasable(ed, seeds, maxHops = Some(MaxHops), pins = pins)
+    val bf = Graph.bfs(ed, seeds, maxHops = Some(MaxHops), pins = pins)
     Release.onFirstExecution(
       docs.select(col("doc_id"))
-        .join(bf.dist.select(col("nid").as("doc_id"), col("d")), Seq("doc_id"), "left")
+        .join(bf.out.select(col("nid").as("doc_id"), col("d")), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("d"), lit(-1L)).as("hops"))
         .orderBy("doc_id"),
       bf.release)
@@ -140,8 +140,8 @@ object TierTwentySix {
     * aggregated edge frame once, one dst shuffle + a broadcast dangling
     * scalar per round, per-round checkpoint truncation AND block
     * release; the weight table rides the edge frame — no extra join);
-    * this wrapper only builds the purchase-count edges. Single-shot
-    * auto-release on the result (the [[Dedup.deduplicate]] contract).
+    * this wrapper only builds the purchase-count edges and takes the
+    * engine's single-shot [[Graph.Run.once]] form.
     */
   val q137 = Q("q137_weighted_pagerank",
     s"""WITH e AS (
@@ -160,7 +160,7 @@ object TierTwentySix {
         col("l_orderkey") === col("o_orderkey"))
       .groupBy((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
       .agg(count(lit(1)).as("w"))
-    Graph.weightedPageRank(e, iters = 3)
+    Graph.weightedPageRank(e, iters = 3).once
   }
 
   val all: Seq[Q] = Seq(q136, q137)

@@ -106,17 +106,17 @@ object TierTwentyTwo {
     // (seeded teleport, [[TrustIters]] rounds); this wrapper symmetrizes
     // the pair frame and maps the doc schema. The pair detector is pinned
     // HERE (the symmetrizing union reads it twice) and rides the engine's
-    // release handle; single-shot auto-release on the result (the
-    // [[Dedup.deduplicate]] contract).
+    // `pins`, so the returned [[Graph.Run]]'s handle drops it; single-shot
+    // auto-release on the result (the [[Dedup.deduplicate]] contract).
     val pins = new Pins
     val hits = pins(pairs.select("doc_a", "doc_b"))
     val ed = hits.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(hits.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val nodes = docs.select(col("doc_id").as("nid"),
       (col("source") === "src0").as("tele"))
-    val rk = Graph.trustReleasable(nodes, ed, iters = TrustIters, pins = pins)
+    val rk = Graph.trust(nodes, ed, iters = TrustIters, pins = pins)
     Release.onFirstExecution(
-      rk.ranks.select(col("nid").as("doc_id"), col("rank_fp").as("trust_fp")),
+      rk.out.select(col("nid").as("doc_id"), col("rank_fp").as("trust_fp")),
       rk.release)
   }
 

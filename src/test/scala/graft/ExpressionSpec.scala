@@ -389,19 +389,19 @@ class ExpressionSpec extends SparkSpec {
     val before = pinnedIds
     // SQL twin ≡ Scala engine, bit-for-bit (same integer fixed-point path)
     val prSql = rows(spark.sql("SELECT * FROM graft_pagerank('gr_edges', 4)"))
-    val pr = Graph.pageRankReleasable(edges, iters = 4)
-    assert(prSql == rows(pr.ranks) && prSql.nonEmpty)
+    val pr = Graph.pageRank(edges, iters = 4)
+    assert(prSql == rows(pr.out) && prSql.nonEmpty)
     pr.release()
 
     val wSql = rows(spark.sql("SELECT * FROM graft_weighted_pagerank('gr_wedges', 3)"))
-    val w = Graph.weightedPageRankReleasable(
+    val w = Graph.weightedPageRank(
       spark.table("gr_wedges"), iters = 3)
-    assert(wSql == rows(w.ranks))
+    assert(wSql == rows(w.out))
     w.release()
 
     val tSql = rows(spark.sql("SELECT * FROM graft_trust('gr_nodes', 'gr_edges', 2)"))
-    val t = Graph.trustReleasable(spark.table("gr_nodes"), edges, iters = 2)
-    assert(tSql == rows(t.ranks))
+    val t = Graph.trust(spark.table("gr_nodes"), edges, iters = 2)
+    assert(tSql == rows(t.out))
     assert(tSql.find(_._1 == 1L).exists(_._2 > 0), "seed must hold trust")
     t.release()
 
@@ -415,16 +415,16 @@ class ExpressionSpec extends SparkSpec {
 
     val hSql = spark.sql("SELECT * FROM graft_hits('gr_edges', 2)")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val hits = Graph.hitsReleasable(edges, iters = 2)
-    val hScala = hits.scores.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val hits = Graph.hits(edges, iters = 2)
+    val hScala = hits.out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(hSql == hScala && hSql.nonEmpty)
     hits.release()
 
     Seq(Tuple1(1L)).toDF("nid").createOrReplaceTempView("gr_spseeds")
     val sSql = rows(spark.sql("SELECT * FROM graft_sssp('gr_wedges', 'gr_spseeds')")
       .orderBy("nid"))
-    val sp = Graph.ssspReleasable(spark.table("gr_wedges"), spark.table("gr_spseeds"))
-    assert(sSql == rows(sp.dist.orderBy("nid")))
+    val sp = Graph.sssp(spark.table("gr_wedges"), spark.table("gr_spseeds"))
+    assert(sSql == rows(sp.out.orderBy("nid")))
     sp.release()
     // min cost from 1: itself 0, 3 via the direct w=1 edge, 2 via w=3
     assert(sSql == Seq((1L, 0L), (2L, 3L), (3L, 1L)), s"got $sSql")
@@ -434,8 +434,8 @@ class ExpressionSpec extends SparkSpec {
       .flatMap { case (x, y) => Seq((x, y), (y, x)) }.toDF("src", "dst")
       .createOrReplaceTempView("gr_sym2")
     val lSql = rows(spark.sql("SELECT * FROM graft_lpa('gr_sym2', 10)").orderBy("nid"))
-    val lp = Graph.lpaReleasable(spark.table("gr_sym2"), maxRounds = 10)
-    assert(lSql == rows(lp.labels.orderBy("nid")))
+    val lp = Graph.lpa(spark.table("gr_sym2"), maxRounds = 10)
+    assert(lSql == rows(lp.out.orderBy("nid")))
     lp.release()
     assert(lSql.groupBy(_._2).values.map(_.map(_._1).toSet).toSet ==
       Set(Set(1L, 2L, 3L), Set(4L, 5L, 6L)), s"got $lSql")
@@ -459,6 +459,19 @@ class ExpressionSpec extends SparkSpec {
     // arity / literal guards surface as analysis-time errors
     val err = intercept[Exception](spark.sql("SELECT * FROM graft_bfs('gr_edges')"))
     assert(err.getMessage.contains("2 or 3"), err.getMessage)
+  }
+
+  test("a round cap below 1 is rejected before any job, from SQL and from Scala") {
+    import spark.implicits._
+    import graft.operators.Graph
+    GraftFunctions.register(spark)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    edges.createOrReplaceTempView("cap_edges")
+    // zero rounds would silently return the initial teleport distribution
+    intercept[IllegalArgumentException](
+      spark.sql("SELECT * FROM graft_pagerank('cap_edges', 0)").collect())
+    val nodes = Seq((1L, true), (2L, false), (3L, false)).toDF("nid", "tele")
+    intercept[IllegalArgumentException](Graph.trust(nodes, edges, iters = 0))
   }
 
   test("graft_running_max table function from SQL ≡ Cumulative.runningMax (r10 VERDICT #8)") {

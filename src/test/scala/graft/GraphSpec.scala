@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Graph, Release}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** The unified [[Graph]] engine's own contract (round-9 VERDICT #2 — the
@@ -17,8 +18,9 @@ import org.apache.spark.sql.functions._
   *    localCheckpoint block (id-diff gates, the DedupSpec pattern), a
   *    released frame cannot be re-executed (the documented single-shot
   *    finality), a FAILED first action does NOT consume the auto-release
-  *    shot (round-9 ADVICE), and [[Release.sweep]] drains
-  *    built-but-never-executed frames.
+  *    shot (round-9 ADVICE), [[Release.sweep]] drains
+  *    built-but-never-executed frames, and no handle drops a checkpoint
+  *    leaf the caller passed in.
   */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -37,15 +39,15 @@ class GraphSpec extends SparkSpec {
   private def chain = (1L to 7L).map(i => (i, i + 1)).toDF("src", "dst")
 
   test("bfs maxHops=None runs until the frontier empties — reaches what a 4-hop unroll misses") {
-    val bf = Graph.bfsReleasable(chain, Seq(1L).toDF("nid"))
-    val dist = bf.dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val bf = Graph.bfs(chain, Seq(1L).toDF("nid"))
+    val dist = bf.out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == (1L to 8L).map(i => i -> (i - 1)).toMap, s"exact chain distances, got $dist")
     // the last round discovers the empty frontier: 7 growing + 1 empty
     assert(bf.rounds == 8, s"rounds=${bf.rounds}")
     bf.release()
 
-    val capped = Graph.bfsReleasable(chain, Seq(1L).toDF("nid"), maxHops = Some(4))
-    val d4 = capped.dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val capped = Graph.bfs(chain, Seq(1L).toDF("nid"), maxHops = Some(4))
+    val d4 = capped.out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(capped.rounds == 4)
     assert(d4 == (1L to 5L).map(i => i -> (i - 1)).toMap,
       s"the 4-hop unroll must miss nodes 6..8 (d=5..7), got $d4")
@@ -67,8 +69,8 @@ class GraphSpec extends SparkSpec {
       dist = dist ++ next.map(_ -> (dist(frontier.head) + 1))
       frontier = next
     }
-    val bf = Graph.bfsReleasable(edges, Seq(1L, 2L).toDF("nid"))
-    val got = bf.dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val bf = Graph.bfs(edges, Seq(1L, 2L).toDF("nid"))
+    val got = bf.out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     bf.release()
     assert(got == dist, s"got $got expected $dist")
     assert(!got.contains(20L) && !got.contains(21L), "island must stay unreached")
@@ -78,12 +80,12 @@ class GraphSpec extends SparkSpec {
     // a directed 3-cycle is stationary from the uniform init: round 1 is a
     // no-op, so Σ|Δr| = 0 and the engine must stop after it
     val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val eps = Graph.pageRankReleasable(cycle, iters = 5, epsilon = Some(0L))
-    val epsRows = eps.ranks.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val eps = Graph.pageRank(cycle, iters = 5, epsilon = Some(0L))
+    val epsRows = eps.out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(eps.rounds == 1, s"early stop must fire after the first no-op round, ran ${eps.rounds}")
     eps.release()
-    val fixed = Graph.pageRankReleasable(cycle, iters = 5)
-    val fixedRows = fixed.ranks.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val fixed = Graph.pageRank(cycle, iters = 5)
+    val fixedRows = fixed.out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(fixed.rounds == 5)
     fixed.release()
     assert(epsRows == fixedRows, "a monotone-contraction no-op round ⇒ every later iterate is bit-identical")
@@ -95,11 +97,11 @@ class GraphSpec extends SparkSpec {
       .join(Tables.load(spark, sf, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val eps = Graph.pageRankReleasable(e, iters = 3, epsilon = Some(0L))
-    val epsRows = eps.ranks.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val eps = Graph.pageRank(e, iters = 3, epsilon = Some(0L))
+    val epsRows = eps.out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     eps.release()
-    val fixed = Graph.pageRankReleasable(e, iters = 3)
-    val fixedRows = fixed.ranks.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val fixed = Graph.pageRank(e, iters = 3)
+    val fixedRows = fixed.out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     fixed.release()
     assert(eps.rounds == 3, s"the bipartite purchase graph must not converge in 3 rounds, stopped at ${eps.rounds}")
     assert(epsRows == fixedRows)
@@ -120,8 +122,8 @@ class GraphSpec extends SparkSpec {
         (15L * S / (100L * 3) + 85L * (contrib.getOrElse(n, 0L) + 0L) / 100L)).toMap
     }
     val expected = nodes.map(n => (n, r(n)))
-    val rk = Graph.weightedPageRankReleasable(wedges.toDF("src", "dst", "w"), iters = 3)
-    val got = rk.ranks.collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
+    val rk = Graph.weightedPageRank(wedges.toDF("src", "dst", "w"), iters = 3)
+    val got = rk.out.collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
     assert(rk.rounds == 3)
     rk.release()
     assert(got == expected, s"got $got expected $expected")
@@ -142,8 +144,8 @@ class GraphSpec extends SparkSpec {
     }
     val expected = nodes.map(nid => (nid, h.getOrElse(nid, 0L), a.getOrElse(nid, 0L)))
     val before = pinnedIds
-    val rk = Graph.hitsReleasable(edges.toDF("src", "dst"), iters = 2)
-    val got = rk.scores.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val rk = Graph.hits(edges.toDF("src", "dst"), iters = 2)
+    val got = rk.out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val mine = pinnedIds -- before
     assert(mine.nonEmpty, "hits pins the edge/node frames and the final checkpoint leaves")
     rk.release()
@@ -160,15 +162,15 @@ class GraphSpec extends SparkSpec {
       es.flatMap { case (x, y) => Seq((x, y), (y, x)) }.toDF("src", "dst")
     // triangle {1,2,3} with pendant 4—1: one peel drops 4, the next
     // observes the fixpoint
-    val tri = Graph.kcoreReleasable(sym(Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L))), k = 2)
-    assert(tri.core.collect().map(_.getLong(0)).toSeq.sorted == Seq(1L, 2L, 3L))
+    val tri = Graph.kcore(sym(Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L))), k = 2)
+    assert(tri.out.collect().map(_.getLong(0)).toSeq.sorted == Seq(1L, 2L, 3L))
     assert(tri.rounds == 2, s"drop-pendant + confirm = 2 rounds, ran ${tri.rounds}")
     tri.release()
     // a 5-chain has NO 2-core: endpoints peel first, then inward —
     // multi-round shrink ending empty (the shape a single filter misses)
     val before = pinnedIds
-    val chain = Graph.kcoreReleasable(sym((1L to 4L).map(i => (i, i + 1))), k = 2)
-    assert(chain.core.count() == 0L, "a chain must peel to nothing")
+    val chain = Graph.kcore(sym((1L to 4L).map(i => (i, i + 1))), k = 2)
+    assert(chain.out.count() == 0L, "a chain must peel to nothing")
     assert(chain.rounds == 4, s"5-chain peels in 3 shrinking rounds + 1 confirm, ran ${chain.rounds}")
     chain.release()
     val left = awaitReleased(pinnedIds -- before)
@@ -181,15 +183,15 @@ class GraphSpec extends SparkSpec {
     val before = pinnedIds
     val ed = Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 4L, 1L), (4L, 2L, 1L))
       .toDF("src", "dst", "w")
-    val sp = Graph.ssspReleasable(ed, Seq(1L).toDF("nid"), maxRounds = 10)
-    val dist = sp.dist.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val sp = Graph.sssp(ed, Seq(1L).toDF("nid"), maxRounds = 10)
+    val dist = sp.out.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(dist == Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 2L),
       s"three cheap hops must beat one expensive one, got $dist")
     assert(sp.rounds < 10, s"must stop at the fixpoint, ran ${sp.rounds}")
     // hop-distance BFS on the same graph reports 2 at distance 1 — the
     // semantics split that justifies the separate skeleton
-    val bf = Graph.bfsReleasable(ed.select("src", "dst"), Seq(1L).toDF("nid"))
-    assert(bf.dist.collect().map(r => (r.getLong(0), r.getLong(1))).toMap.apply(2L) == 1L)
+    val bf = Graph.bfs(ed.select("src", "dst"), Seq(1L).toDF("nid"))
+    assert(bf.out.collect().map(r => (r.getLong(0), r.getLong(1))).toMap.apply(2L) == 1L)
     bf.release()
     sp.release()
     val left = awaitReleased(pinnedIds -- before)
@@ -202,10 +204,10 @@ class GraphSpec extends SparkSpec {
     // two triangles joined by one bridge edge 3—4: ONE connected
     // component, but local agreement keeps the triangles apart
     val before = pinnedIds
-    val l = Graph.lpaReleasable(
+    val l = Graph.lpa(
       sym(Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L), (6L, 4L), (3L, 4L))),
       maxRounds = 10)
-    val labels = l.labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val labels = l.out.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val communities = labels.groupBy(_._2).values.map(_.keySet).toSet
     assert(communities == Set(Set(1L, 2L, 3L), Set(4L, 5L, 6L)),
       s"bridged triangles must split into the two triangles, got $communities")
@@ -218,8 +220,8 @@ class GraphSpec extends SparkSpec {
 
   test("release handles drop every pinned cache AND checkpoint block; released frames are final") {
     val before = pinnedIds
-    val rk = Graph.pageRankReleasable(chain, iters = 2)
-    rk.ranks.count()
+    val rk = Graph.pageRank(chain, iters = 2)
+    rk.out.count()
     val mine = pinnedIds -- before
     assert(mine.nonEmpty, "the engine pins at least the edge frame and the final checkpoint leaf")
     rk.release()
@@ -228,11 +230,11 @@ class GraphSpec extends SparkSpec {
     // FINALITY (round-9 VERDICT #3): the lineage bottoms out in a dropped
     // localCheckpoint leaf — a second materialization must fail, not
     // silently recompute
-    intercept[Exception] { rk.ranks.count() }
+    intercept[Exception] { rk.out.count() }
 
     val bfore = pinnedIds
-    val bf = Graph.bfsReleasable(chain, Seq(1L).toDF("nid"), maxHops = Some(2))
-    bf.dist.count()
+    val bf = Graph.bfs(chain, Seq(1L).toDF("nid"), maxHops = Some(2))
+    bf.out.count()
     val bmine = pinnedIds -- bfore
     assert(bmine.nonEmpty)
     bf.release()
@@ -240,9 +242,47 @@ class GraphSpec extends SparkSpec {
     assert(bleft.isEmpty, s"bfs release must drop caches and checkpoint blocks; still pinned: $bleft")
   }
 
+  test("every engine's release handle drops its own state and spares the caller's checkpointed input") {
+    def leaf(df: DataFrame): DataFrame = GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
+    // triangle {1,2,3} + pendant 4—1, symmetrized; every input is a
+    // localCheckpoint leaf the TEST owns
+    val sym = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L))
+      .flatMap { case (x, y) => Seq((x, y), (y, x)) }
+    val edges = leaf(sym.toDF("src", "dst"))
+    val wedges = leaf(sym.map { case (x, y) => (x, y, x + y) }.toDF("src", "dst", "w"))
+    val nodes = leaf((1L to 4L).map(n => (n, n == 1L)).toDF("nid", "tele"))
+    val sources = leaf(Seq(1L).toDF("nid"))
+    val inputs = Seq(edges -> 8L, wedges -> 8L, nodes -> 4L, sources -> 1L)
+    val inputIds = inputs.flatMap(i => GraftSqlBridge.leafIds(i._1)).toSet
+    val engines: Seq[(String, () => Graph.Run)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(edges)),
+      "weightedPageRank" -> (() => Graph.weightedPageRank(wedges)),
+      "trust" -> (() => Graph.trust(nodes, edges)),
+      "hits" -> (() => Graph.hits(edges)),
+      "kcore" -> (() => Graph.kcore(edges, k = 2)),
+      "sssp" -> (() => Graph.sssp(wedges, sources)),
+      "bfs" -> (() => Graph.bfs(edges, sources)),
+      "lpa" -> (() => Graph.lpa(edges)))
+    engines.foreach { case (name, engine) =>
+      val before = pinnedIds
+      val run = engine()
+      run.out.collect()
+      val mine = pinnedIds -- before
+      assert(mine.nonEmpty, s"$name pins its own frames and checkpoint leaves")
+      run.release()
+      val left = awaitReleased(mine)
+      assert(left.isEmpty, s"$name release must drop its own pins; still pinned: $left")
+      assert(inputIds.subsetOf(pinnedIds),
+        s"$name dropped a caller-owned input leaf: ${inputIds -- pinnedIds}")
+      inputs.foreach { case (in, n) =>
+        assert(in.count() == n, s"$name: the caller's input must still count")
+      }
+    }
+  }
+
   test("auto-release fires on first SUCCESS only — a failed action keeps the frame retryable") {
     val before = pinnedIds
-    val out = Graph.pageRank(chain, iters = 2)
+    val out = Graph.pageRank(chain, iters = 2).once
     // a derived action that fails at runtime: onFailure must NOT consume
     // the shot (round-9 ADVICE — transient failures stay retryable)
     intercept[Exception] {
@@ -258,7 +298,7 @@ class GraphSpec extends SparkSpec {
     Release.sweep(spark) // drain leftovers from earlier tests for a clean gauge
     val before = pinnedIds
     val outstandingBefore = Release.outstanding(spark)
-    Graph.pageRank(chain, iters = 2) // built, never executed — a plan-audit shape
+    Graph.pageRank(chain, iters = 2).once // built, never executed — a plan-audit shape
     assert(Release.outstanding(spark) == outstandingBefore + 1)
     val mine = pinnedIds -- before
     assert(mine.nonEmpty, "the abandoned build left pinned state behind")
@@ -293,19 +333,19 @@ class GraphSpec extends SparkSpec {
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val multi = Seq.fill(3)(base).flatten.toDF("src", "dst")
     val simple = base.toDF("src", "dst")
-    val cm = Graph.kcoreReleasable(multi, k = 2)
-    val csim = Graph.kcoreReleasable(simple, k = 2)
-    val gotM = cm.core.collect().map(_.getLong(0)).toSet
-    val gotS = csim.core.collect().map(_.getLong(0)).toSet
+    val cm = Graph.kcore(multi, k = 2)
+    val csim = Graph.kcore(simple, k = 2)
+    val gotM = cm.out.collect().map(_.getLong(0)).toSet
+    val gotS = csim.out.collect().map(_.getLong(0)).toSet
     cm.release(); csim.release()
     // with duplicate counting the pendant 3—4 edge would fake degree 3 ≥ 2
     // and node 4 would survive the peel
     assert(gotM == Set(1L, 2L, 3L) && gotM == gotS,
       s"multigraph input must peel like the simple graph: $gotM vs $gotS")
-    val lm = Graph.lpaReleasable(multi, maxRounds = 5)
-    val ls = Graph.lpaReleasable(simple, maxRounds = 5)
-    val labM = lm.labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val labS = ls.labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lm = Graph.lpa(multi, maxRounds = 5)
+    val ls = Graph.lpa(simple, maxRounds = 5)
+    val labM = lm.out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val labS = ls.out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     lm.release(); ls.release()
     assert(labM == labS, "duplicate edges must not change label votes")
   }

@@ -77,7 +77,7 @@ class TierThirtySpec extends SparkSpec {
       s"celled reach must be anchor-reached; extras: ${reached144 -- anchorReach}")
     // the engine reaches the fixpoint inside the shared round cap
     val ed = spark.createDataFrame(cost).toDF("src", "dst", "w")
-    val sp = Graph.ssspReleasable(ed,
+    val sp = Graph.sssp(ed,
       spark.createDataFrame(seeds.toSeq.map(Tuple1(_))).toDF("nid"), maxRounds = 10)
     assert(sp.rounds < 10, s"relaxation must converge inside the cap, ran ${sp.rounds}")
     sp.release()

@@ -78,9 +78,9 @@ class TierTwentyNineSpec extends SparkSpec {
     // this proves the cap is slack, not load-bearing, on real data)
     val ed = spark.createDataFrame(pairs.flatMap { case (x, y) => Seq((x, y), (y, x)) })
       .toDF("src", "dst")
-    val c = Graph.kcoreReleasable(ed, k = 2, maxRounds = 10)
+    val c = Graph.kcore(ed, k = 2, maxRounds = 10)
     assert(c.rounds < 10, s"peel must converge inside the cap, ran ${c.rounds}")
-    assert(c.core.collect().map(_.getLong(0)).toSeq.sorted == expected)
+    assert(c.out.collect().map(_.getLong(0)).toSeq.sorted == expected)
     c.release()
   }
 
