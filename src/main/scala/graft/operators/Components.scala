@@ -112,28 +112,48 @@ object Components {
     * one to compose back) — the super-graph the inner [[connected]]
     * sees has at most one node per touched cluster and one edge per
     * delta pair, so a steady-state ingest folds millions of new pairs
-    * without ever re-reading the historical edge set.
+    * without ever re-reading the historical edge set. `newEdges` is
+    * materialized once (its plan is typically a store probe); when it
+    * is empty, or every new edge falls inside an existing cluster, no
+    * [[connected]] job runs at all — the common steady-state batch that
+    * finds no near-duplicate costs one edge checkpoint.
     *
-    * The result (like [[connected]]'s) rides on lineage-truncated
-    * checkpoint leaves: materialize it once (or persist a copy) and
-    * release via `GraftSqlBridge.releaseLeaves(result)` — the
-    * [[Dedup.artifacts]] discipline.
+    * Leaf ownership: the result's plan embeds the caller's `labels`
+    * (on the ΔE = ∅ short-circuit the result IS `labels`, re-projected)
+    * next to delta's own checkpoint leaves (the edge leaf and the
+    * super-solve labels). Materialize it once, then release with
+    * `GraftSqlBridge.releaseLeavesExcept(result, leafIds(labels))` —
+    * never with a whole-tree release while `labels` is still in use, and
+    * delta itself never drops a leaf of `labels` or `newEdges`
+    * ([[Dedup.maintain]] and [[SemanticDedup.maintain]] follow this).
     */
   def delta(labels: DataFrame, newEdges: DataFrame, maxRounds: Int = 100): DataFrame = {
-    val ends = newEdges.select(col("src").as("id"))
-      .unionAll(newEdges.select(col("dst").as("id"))).distinct()
+    val edges = truncate(newEdges.select("src", "dst"))
+    if (edges.isEmpty) {
+      GraftSqlBridge.releaseLeaf(edges)
+      return labels.select("id", "lbl")
+    }
+    val ends = edges.select(col("src").as("id"))
+      .unionAll(edges.select(col("dst").as("id"))).distinct()
     val fresh = ends.join(labels.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("lbl"))
     val all = labels.select("id", "lbl").unionAll(fresh)
-    val superEdges = newEdges
+    val superEdges = truncate(edges
       .join(all.select(col("id").as("src"), col("lbl").as("lsrc")), "src")
       .join(all.select(col("id").as("dst"), col("lbl").as("ldst")), "dst")
       .select(col("lsrc").as("src"), col("ldst").as("dst"))
-      .filter(col("src") =!= col("dst"))
+      .filter(col("src") =!= col("dst")))
+    // every new edge landed inside one existing cluster: nothing merges
+    if (superEdges.isEmpty) {
+      GraftSqlBridge.releaseLeaf(superEdges)
+      return all
+    }
     val touched = superEdges.select(col("src").as("id"))
       .unionAll(superEdges.select(col("dst").as("id"))).distinct()
     val sup = connected(touched, superEdges, maxRounds)
       .select(col("id").as("lbl"), col("lbl").as("nlbl"))
+    // connected's labels are their own leaf: the super-edges are dead
+    GraftSqlBridge.releaseLeaf(superEdges)
     all.join(sup, Seq("lbl"), "left")
       .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
   }
@@ -149,7 +169,9 @@ object Components {
   /** Per-task union-find node cap for [[preContractPass]]: bounds the
     * map at ~64 MiB per task (2^22 entries × ~16 B); edges arriving
     * after the cap pass through raw — correctness never depends on the
-    * cap, only the reduction ratio does. */
+    * cap, only the reduction ratio does. The default of
+    * [[connectedWithStats]]' `preContractNodeCap`; specs pass a small cap
+    * to force the pass-through side. */
   private[graft] val PreContractNodeCap = 1 << 22
 
   /** MAP-SIDE PRE-CONTRACTION (r15, guide §2.3 "aggregate before you
@@ -172,8 +194,10 @@ object Components {
     * entries; past the cap remaining edges stream through untouched
     * (an adversarially diffuse partition degrades to a partial
     * reduction, never to an error). ComponentsSpec pins
-    * preContract-on ≡ off on paths and random graphs. */
-  private def preContractPass(canon: DataFrame): DataFrame = {
+    * preContract-on ≡ off on paths and random graphs, and the labels
+    * identical with the cap forced below and above a partition's node
+    * count. */
+  private def preContractPass(canon: DataFrame, nodeCap: Int): DataFrame = {
     val s = canon.sparkSession
     import s.implicits._
     canon.select(col("u").cast("long"), col("v").cast("long"))
@@ -188,7 +212,7 @@ object Components {
           r
         }
         val passThrough = it.flatMap { case (a, b) =>
-          if (parent.size < PreContractNodeCap) {
+          if (parent.size < nodeCap) {
             parent.getOrElseUpdate(a, a)
             parent.getOrElseUpdate(b, b)
             val (ra, rb) = (find(a), find(b))
@@ -213,7 +237,8 @@ object Components {
   private[graft] def connectedWithStats(
       nodes: DataFrame, edges: DataFrame, maxRounds: Int = 100,
       localEdgeThreshold: Long = DefaultLocalEdgeThreshold,
-      preContract: Boolean = true): Result = {
+      preContract: Boolean = true,
+      preContractNodeCap: Int = PreContractNodeCap): Result = {
     // active contracted edge set, canonical (u < v); materializing this
     // runs the upstream detector exactly once — through the map-side
     // pre-contraction pass by default (preContract = false is the
@@ -223,7 +248,8 @@ object Components {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
-    var cur = truncate(if (preContract) preContractPass(canon) else canon)
+    var cur = truncate(
+      if (preContract) preContractPass(canon, preContractNodeCap) else canon)
     // node -> super-node pointer, composed across rounds
     var mapping = truncate(nodes.select(col("id"), col("id").as("lbl")))
     var rounds = 0

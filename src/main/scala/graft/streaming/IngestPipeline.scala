@@ -56,8 +56,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * corpus size since the store is 16 bytes/doc, or bucket-join it when
   * pinned); stage 4 reads only the batch's probed cells (bounded
   * driver metadata → static partition filter); stage 5 moves only the
-  * touched super-edges. Nothing re-reads, re-signs, or re-clusters the
-  * corpus — per-batch cost is proportional to the batch.
+  * touched super-edges, and a batch that finds no pair merging two
+  * clusters runs no components solve at all. [[absorb]] materializes
+  * the gated rows, their embeds and the admitted rows once each. Nothing
+  * re-reads, re-signs, or re-clusters the corpus, but one step is still
+  * O(labels): every absorb checkpoints the whole updated labels frame
+  * (corpus ∪ admissions), even when it equals the previous one. A base
+  * labeling plus per-batch overrides would make that step proportional
+  * to the batch too; it is not built.
   */
 object IngestPipeline {
 
@@ -130,16 +136,21 @@ object IngestPipeline {
   /** The full admission screen, batch-shaped — stages 1–4 over any
     * `(doc_id, text)` frame against the frozen artifacts. The SAME call
     * serves the batch law and every micro-batch (the s22 posture). */
-  def screen(h: Handle, batch: DataFrame): DataFrame = {
-    val gated = TierSeven.hammingAdmit(
+  def screen(h: Handle, batch: DataFrame): DataFrame =
+    SemanticAdmit.screen(gate(h, batch), h.vocab, h.storePath, h.thr)
+
+  /** Stages 1–3: quality gate, exact-dup Bloom, SimHash Hamming screen. */
+  private def gate(h: Handle, batch: DataFrame): DataFrame =
+    TierSeven.hammingAdmit(
       batch
         .filter(TierFour.qualityCol(col("text")) >= 2)
         .filter(!Bloom.mightContainCol(h.words, xxhash64(col("text")),
           bits = BloomBits, hashes = BloomHashes))
         .withColumn("simhash", TextOps.simhashCol(col("text"))),
       h.sigStore).drop("simhash")
-    SemanticAdmit.screen(gated, h.vocab, h.storePath, h.thr)
-  }
+
+  private def leaf(df: DataFrame): DataFrame =
+    GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
 
   // existence probe first, NO blanket catch (ADVICE r14): a transient
   // ledger read failure must FAIL the batch so Spark retries it, not
@@ -162,6 +173,9 @@ object IngestPipeline {
   def absorb(h: Handle, batch: DataFrame, batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     if (batchId.exists(ledgered(spark, h.outPath, _))) return
+    // the screen, materialized stage by stage, each intermediate once:
+    // the gated rows, their embeds (read by the screen's cell collect,
+    // its verify join, and the cluster fold), and the admitted rows.
     // localCheckpoint, NOT persist: the screen's logical plan references
     // its own stages many times over (probe set ∪ own, the 4-chunk
     // anti-join chain), and maintain's pair probe would re-embed that
@@ -169,8 +183,9 @@ object IngestPipeline {
     // the driver dies ANALYZING it long before data moves (measured:
     // 280 s of SparkPlanInfo.fromSparkPlan on a 4-row batch). Truncating
     // lineage here makes every downstream reference a shallow leaf read.
-    val admitted = GraftSqlBridge.freshLeaf(
-      screen(h, batch.select("doc_id", "text")).localCheckpoint(true))
+    val gated = leaf(gate(h, batch.select("doc_id", "text")))
+    val emb = leaf(SemanticAdmit.embedOf(gated, h.vocab))
+    val admitted = leaf(SemanticAdmit.screenEmbedded(gated, emb, h.storePath, h.thr))
     batchId match {
       case Some(id) => admitted.write.mode("overwrite")
         .parquet(s"${h.outPath}/admitted/bid=$id")
@@ -181,9 +196,9 @@ object IngestPipeline {
     // BEFORE the store absorb and shares the batch id with the store's
     // own ledger, so a crash between the two replays consistently
     h.advance(SemanticDedup.maintain(h.storePath, h.labels,
-      SemanticAdmit.embedOf(admitted, h.vocab), h.thr, batchId = batchId,
+      SemanticAdmit.embedsOf(admitted, emb), h.thr, batchId = batchId,
       ingestId = "ingest_pipeline"))
-    GraftSqlBridge.releaseLeaves(admitted)
+    Seq(gated, emb, admitted).foreach(GraftSqlBridge.releaseLeaf)
     batchId.foreach { id =>
       spark.sql(s"SELECT CAST($id AS BIGINT) AS batch_id")
         .coalesce(1).write.mode("append").parquet(s"${h.outPath}/ledger")

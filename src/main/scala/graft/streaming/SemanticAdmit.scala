@@ -62,9 +62,17 @@ object SemanticAdmit {
     * semantic signal and are admitted, matching the batch celled
     * detector, which excludes zero vectors from the pair universe. */
   def screen(docs: DataFrame, vocab: DataFrame, storePath: String,
+      thr: Double): DataFrame =
+    screenEmbedded(docs, embedOf(docs, vocab), storePath, thr)
+
+  /** [[screen]] over embeds the caller already holds — `emb` is
+    * `embedOf(docs, vocab)`, or a materialized copy of it, so a caller
+    * that reuses the embeds afterwards (the store absorb, the cluster
+    * fold) embeds each doc once. */
+  def screenEmbedded(docs: DataFrame, emb: DataFrame, storePath: String,
       thr: Double): DataFrame = {
     val spark = docs.sparkSession
-    val live = embedOf(docs, vocab).filter(dotc(col("e"), col("e")) > 0)
+    val live = emb.filter(dotc(col("e"), col("e")) > 0)
     val cents = spark.read.parquet(s"$storePath/centroids")
     val own = TierNine.assignTo(live, cents)
     val probed = TierEleven.probeAssign(live, cents, own, probe2 = true)
@@ -91,6 +99,10 @@ object SemanticAdmit {
     docs.join(twins, Seq("doc_id"), "left_anti")
   }
 
+  /** The rows of `emb` (a screened frame's embeds) whose doc was admitted. */
+  private[streaming] def embedsOf(admitted: DataFrame, emb: DataFrame): DataFrame =
+    emb.join(admitted.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
+
   // existence probe first, NO blanket catch (ADVICE r14): a transient
   // ledger read failure must FAIL the batch so Spark retries it, not
   // silently read as "fresh" and double-admit an absorbed batch
@@ -112,8 +124,10 @@ object SemanticAdmit {
       grow: Boolean = false): Unit = {
     val spark = batch.sparkSession
     if (batchId.exists(absorbed(spark, outPath, _))) return
-    val admitted = screen(batch, vocab, storePath, thr)
-      .persist() // read twice below (write + optional grow); dropped before return
+    // the embeds serve the screen and the grow absorb; the admitted rows
+    // are read twice (write + optional grow); both dropped before return
+    val emb = embedOf(batch, vocab).persist()
+    val admitted = screenEmbedded(batch, emb, storePath, thr).persist()
     // deterministic partition dir per ledgered batch (ADVICE r14): a
     // crash-window replay overwrites instead of double-appending, so
     // admitted/ is exactly-once; unledgered batch calls keep the flat
@@ -124,9 +138,10 @@ object SemanticAdmit {
       case None => admitted.write.mode("append").parquet(s"$outPath/admitted")
     }
     if (grow) IvfStore.append(spark, storePath,
-      embedOf(admitted, vocab).filter(dotc(col("e"), col("e")) > 0),
+      embedsOf(admitted, emb).filter(dotc(col("e"), col("e")) > 0),
       batchId = batchId, ingestId = "semantic_admit")
     admitted.unpersist(blocking = false)
+    emb.unpersist(blocking = false)
     batchId.foreach { id =>
       spark.sql(s"SELECT CAST($id AS BIGINT) AS batch_id")
         .coalesce(1).write.mode("append").parquet(s"$outPath/ledger")

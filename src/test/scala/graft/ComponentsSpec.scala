@@ -1,12 +1,17 @@
 package graft
 
 import graft.operators.Components
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** Connected components (hash-min label propagation) against a pure-Scala
   * union-find oracle — random graphs plus the adversarial shapes: long
   * chains (force multi-round propagation well past round 1), isolated
-  * nodes, and duplicate/self edges.
+  * nodes, and duplicate/self edges. The delta fold's short-circuits are
+  * pinned by the jobs they do NOT start, and the pre-contraction cap on
+  * both sides of a partition's node count.
   */
 class ComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -21,6 +26,52 @@ class ComponentsSpec extends SparkSpec {
     // canonical label = min id of the component
     (0L until n).map(i => i -> find(i)).toMap
   }
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `body`'s result plus the number of Spark jobs it started from inside
+    * `Components.connectedWithStats`: jobs whose own call site passes
+    * through it, and jobs of the SQL executions it started (adaptive
+    * query stages run on pool threads, so only their execution id ties
+    * them to the caller). Listener events arrive in order, so once a
+    * marker job submitted after `body` is seen, every job `body` started
+    * has been counted. */
+  private def withConnectedJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val site = "connectedWithStats"
+    val marker = s"components-spec-marker-${System.nanoTime()}"
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val hits = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.details.contains(site) =>
+          executions.add(s.executionId.toString)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (e.stageInfos.exists(_.details.contains(site)) ||
+          props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .exists(executions.contains))
+          hits.incrementAndGet()
+        if (props.exists(_.getProperty("spark.job.description") == marker))
+          seen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job never reached the listener")
+      (out, hits.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def pinned: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   private def run(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] =
     Components.connected(
@@ -202,5 +253,85 @@ class ComponentsSpec extends SparkSpec {
       Seq(folded, full)
         .foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaves(_))
     }
+  }
+
+  test("delta short-circuit: ΔE = ∅ and ΔE inside existing clusters start no connected job") {
+    val nodes = spark.range(1L, 11L).select(col("id"))
+    val base = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("src", "dst")
+    val lbl0 = Components.connected(nodes, base)
+    val before = labelMap(lbl0)
+    def check(name: String, d: Seq[(Long, Long)], expected: Map[Long, Long]): Unit = {
+      // the edges arrive as a caller-owned checkpoint leaf over 4
+      // partitions (an empty local relation would plan to zero tasks and
+      // start no job on any path): delta must spare it and the labels'
+      // leaves on every path
+      val edges = spark.sparkContext.parallelize(d, 4).toDF("src", "dst")
+        .localCheckpoint(true)
+      val callerLeaves = GraftSqlBridge.leafIds(lbl0) ++ GraftSqlBridge.leafIds(edges)
+      val (got, jobs) = withConnectedJobs {
+        val out = Components.delta(lbl0, edges)
+        (out, labelMap(out))
+      }
+      assert(jobs == 0, s"$name: the fold must not run connected, started $jobs jobs")
+      assert(got._2 == expected, s"$name: must equal labels ∪ fresh singletons")
+      val allIds = (expected.keySet ++ d.flatMap(e => Seq(e._1, e._2))).toSeq.sorted
+      val full = Components.connected(allIds.toDF("id"),
+        base.unionAll(d.toDF("src", "dst")))
+      assert(got._2 == labelMap(full), s"$name: must equal the full recompute")
+      assert(callerLeaves.subsetOf(pinned), s"$name: delta dropped a caller-owned leaf")
+      GraftSqlBridge.releaseLeavesExcept(got._1, GraftSqlBridge.leafIds(lbl0))
+      GraftSqlBridge.releaseLeaves(full)
+      GraftSqlBridge.releaseLeaf(edges)
+    }
+    check("ΔE = ∅", Seq.empty, before)
+    // every edge lands in one existing cluster (or is a self-loop), so the
+    // rewritten super-edge set is empty; 11 is a fresh singleton
+    check("ΔE ⊆ clusters", Seq((1L, 3L), (2L, 1L), (6L, 5L), (4L, 4L), (11L, 11L)),
+      before + (11L -> 11L))
+    // control: a merging edge does reach connected (the detector is live)
+    val ((merged, mergedMap), jobs) = withConnectedJobs {
+      val out = Components.delta(lbl0, Seq((3L, 5L)).toDF("src", "dst"))
+      (out, labelMap(out))
+    }
+    assert(jobs > 0, "a merging delta must run the super-solve")
+    assert(mergedMap(6L) == 1L && mergedMap(4L) == 4L)
+    GraftSqlBridge.releaseLeavesExcept(merged, GraftSqlBridge.leafIds(lbl0))
+    GraftSqlBridge.releaseLeaves(lbl0)
+  }
+
+  test("pre-contraction node cap: labels identical below and above a partition's node count") {
+    // a cap of 4 fills the per-task union-find after a couple of edges,
+    // so nearly every edge passes through raw; the default cap holds
+    // every node of a partition (hundreds here). Both must label alike,
+    // through the local endgame and through the distributed rounds.
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val n = 300L
+    val edgeGen = Gen.zip(Gen.chooseNum(0L, n - 1), Gen.chooseNum(0L, n - 1))
+    val edges = (0 until 400).flatMap(i =>
+      edgeGen.apply(Gen.Parameters.default, Seed(40000L + i)))
+    val nodes = spark.range(n).select(col("id"))
+    val path = spark.range(1999L).select(col("id").as("src"), (col("id") + 1L).as("dst"))
+    def labelsOf(nodes: org.apache.spark.sql.DataFrame, e: org.apache.spark.sql.DataFrame,
+        cap: Int, threshold: Long): Map[Long, Long] = {
+      val res = Components.connectedWithStats(nodes, e,
+        localEdgeThreshold = threshold, preContractNodeCap = cap)
+      val got = labelMap(res.labels)
+      GraftSqlBridge.releaseLeaf(res.labels)
+      got
+    }
+    val expected = unionFind(n, edges)
+    for (threshold <- Seq(Components.DefaultLocalEdgeThreshold, 0L)) {
+      val e = edges.toDF("src", "dst").repartition(4)
+      val below = labelsOf(nodes, e, 4, threshold)
+      val above = labelsOf(nodes, e, Components.PreContractNodeCap, threshold)
+      assert(below == above, s"threshold $threshold: the cap changed the labels")
+      assert(above == expected, s"threshold $threshold: diverged from union-find")
+    }
+    val pathNodes = spark.range(2000L).select(col("id"))
+    val pathBelow = labelsOf(pathNodes, path, 4, Components.DefaultLocalEdgeThreshold)
+    assert(pathBelow == labelsOf(pathNodes, path, Components.PreContractNodeCap,
+      Components.DefaultLocalEdgeThreshold), "the cap changed the path labeling")
+    assert(pathBelow.values.toSet == Set(0L))
   }
 }

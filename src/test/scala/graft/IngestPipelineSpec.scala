@@ -3,7 +3,7 @@ package graft
 import graft.operators.{Components, Cumulative, IvfStore, TextOps, TierFour,
   TierNineteen}
 import graft.streaming.{IngestPipeline, SemanticAdmit}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** s49 — THE FULL INGEST PIPELINE END TO END (VERDICT r13 #5): quality
@@ -20,7 +20,13 @@ import org.apache.spark.sql.functions._
   *  - grow: a later twin of an earlier ADMISSION is rejected (first
   *    arrival wins — the admitted doc was absorbed into the store);
   *  - replay: a re-delivered ledgered batch changes nothing (admitted
-  *    rows, store, labels).
+  *    rows, store, labels);
+  *  - in-batch twins: two fresh docs that are each other's semantic
+  *    twins are both admitted (the screen probes only the store) and
+  *    merged by the cluster fold — labels ≡ a full recompute over
+  *    store ∪ batch (the non-empty `Components.delta` path);
+  *  - leaks: ledgered absorbs leave only the current labels leaf (plus
+  *    the handle's `sigStore` and `vocab`) pinned.
   */
 class IngestPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -235,5 +241,111 @@ class IngestPipelineSpec extends SparkSpec {
     h.release()
     Cumulative.releaseAll()
     spark.catalog.clearCache()
+  }
+
+  private val SqNorm = "aggregate(zip_with(e, e, (x, y) -> x * y), 0D, (a, x) -> a + x)"
+
+  /** A handle over the fixture corpus at threshold `thr`, plus twin
+    * pairs of fresh docs: each pair is one in-vocab token bag in two
+    * orders (same embed and SimHash, different text), skewed enough that
+    * no corpus doc reaches `thr`, and clear of the quality gate, the
+    * Bloom filter and the Hamming screen. */
+  private def twinFixture(thr: Double, nPairs: Int)
+      : (IngestPipeline.Handle, Seq[((Long, String), (Long, String))]) = {
+    val corpus = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val h = IngestPipeline.build(spark, corpus,
+      java.nio.file.Files.createTempDirectory("ingest_store").toString,
+      java.nio.file.Files.createTempDirectory("ingest_out").toString,
+      emb => IvfStore.train(emb, k = 4), thr)
+    val corpusEmb = SemanticAdmit.embedOf(corpus, h.vocab).filter(expr(SqNorm) > 0)
+      .collect().map(_.getSeq[Double](1).toVector)
+    val corpusSigs = corpus.select(TextOps.simhashCol(col("text")))
+      .collect().map(_.getLong(0))
+    val toks = corpus.select(explode(split(col("text"), " ")).as("t"))
+      .filter(length(col("t")) >= 4).distinct().orderBy("t")
+      .collect().map(_.getString(0)).toSeq
+    val bags = for (a <- toks; b <- toks if a != b)
+      yield (Seq.fill(16)(a) ++ Seq.fill(6)(b)).mkString(" ")
+    val cand = bags.toDF("text")
+      .filter(TierFour.qualityCol(col("text")) >= 2)
+      .filter(!graft.functions.Bloom.mightContainCol(h.words, xxhash64(col("text")),
+        bits = IngestPipeline.BloomBits, hashes = IngestPipeline.BloomHashes))
+      .withColumn("doc_id", monotonically_increasing_id())
+      .withColumn("sig", TextOps.simhashCol(col("text")))
+    val sigOf = cand.select("doc_id", "sig").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fresh = SemanticAdmit.embedOf(cand, h.vocab).join(cand, col("vec_id") === col("doc_id"))
+      .select("text", "e", "doc_id").collect().toSeq
+      .map(r => (r.getString(0), r.getSeq[Double](1).toVector, r.getLong(2)))
+      .filter { case (_, e, id) =>
+        e.exists(_ != 0) && corpusEmb.forall(c => cos(e, c) < thr - 0.05) &&
+          corpusSigs.forall(c => java.lang.Long.bitCount(sigOf(id) ^ c) >= 4)
+      }
+    assert(fresh.size >= nPairs, s"fixture: only ${fresh.size} twin candidates")
+    // one bag per dominant token, so the pairs are distinct bags
+    val picked = fresh.groupBy(_._1.takeWhile(_ != ' ')).values.map(_.head)
+      .toSeq.sortBy(_._1).take(nPairs)
+    assert(picked.size == nPairs, "fixture: too few distinct twin bags")
+    val pairs = picked.zipWithIndex.map { case ((t, _, _), i) =>
+      val reordered = t.split(" ").reverse.mkString(" ")
+      ((9100L + 2 * i, t), (9101L + 2 * i, reordered))
+    }
+    (h, pairs)
+  }
+
+  private def labelMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("in-batch semantic twins: both admitted, labels after absorb ≡ full recompute over store ∪ batch") {
+    val thr = 0.9
+    val (h, pairs) = twinFixture(thr, 2)
+    val corpus = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val docs = pairs.flatMap(p => Seq(p._1, p._2))
+    val batch = (docs :+ (9199L -> "zq9x wq7k vv3m")).toDF("doc_id", "text")
+    IngestPipeline.absorb(h, batch, batchId = Some(0L))
+    val admitted = spark.read.parquet(s"${h.outPath}/admitted").select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    assert(admitted == docs.map(_._1).toSet + 9199L,
+      s"the screen probes only the store, so every twin is admitted; got $admitted")
+    val unionEmb = SemanticAdmit.embedOf(corpus.unionByName(batch), h.vocab)
+      .filter(expr(SqNorm) > 0)
+    val full = Components.connected(unionEmb.select(col("vec_id").as("id")),
+      TierNineteen.pairsOverCents(unionEmb,
+        spark.read.parquet(s"${h.storePath}/centroids"), thr)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val got = labelMap(h.labels)
+    assert(got == labelMap(full) + (9199L -> 9199L),
+      "labels after absorb must equal the full recompute over store ∪ batch")
+    pairs.foreach { case ((a, _), (b, _)) =>
+      assert(got(a) == got(b), s"twins $a, $b must share a cluster")
+    }
+    GraftSqlBridge.releaseLeaves(full)
+    h.release()
+    Cumulative.releaseAll()
+  }
+
+  test("two ledgered absorbs leave only the current labels leaf, sigStore and vocab pinned") {
+    val (h, pairs) = twinFixture(0.9, 2)
+    def pins: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet ++
+      spark.sparkContext.getRDDStorageInfo.map(_.id)
+    h.sigStore.count() // the handle's persisted sides are pinned before the baseline
+    val labels0 = GraftSqlBridge.leafIds(h.labels)
+    assert(labels0.subsetOf(pins), "fixture: the build's labels leaf must be pinned")
+    val before = pins
+    // each batch is one twin pair: both absorbs run the merging fold
+    pairs.zipWithIndex.foreach { case ((a, b), i) =>
+      IngestPipeline.absorb(h, Seq(a, b).toDF("doc_id", "text"), batchId = Some(i.toLong))
+    }
+    val current = GraftSqlBridge.leafIds(h.labels)
+    assert(current.nonEmpty && (current & before).isEmpty)
+    // unpersist drops the registration at once; blocks drain asynchronously
+    val deadline = System.nanoTime() + 30_000_000_000L
+    while ((pins -- before) != current && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(pins -- before == current,
+      s"absorb left extra pins: ${(pins -- before) -- current}")
+    assert((pins & labels0).isEmpty, "the previous labels leaf must be released")
+    h.release()
+    assert((pins & current).isEmpty, "release must drop the labels leaf")
+    Cumulative.releaseAll()
   }
 }
