@@ -114,14 +114,13 @@ object Components {
     * delta pair, so a steady-state ingest folds millions of new pairs
     * without ever re-reading the historical edge set. `newEdges` is
     * materialized once (its plan is typically a store probe); when it
-    * is empty, or every new edge falls inside an existing cluster, no
-    * [[connected]] job runs at all — the common steady-state batch that
-    * finds no near-duplicate costs one edge checkpoint.
+    * is empty no [[connected]] job runs at all — the common steady-state
+    * batch that finds no near-duplicate costs one edge checkpoint.
     *
     * Leaf ownership: the result's plan embeds the caller's `labels`
     * (on the ΔE = ∅ short-circuit the result IS `labels`, re-projected)
-    * next to delta's own checkpoint leaves (the edge leaf and the
-    * super-solve labels). Materialize it once, then release with
+    * next to delta's own checkpoint leaves (the edge leaf and
+    * [[connected]]'s labels). Materialize it once, then release with
     * `GraftSqlBridge.releaseLeavesExcept(result, leafIds(labels))` —
     * never with a whole-tree release while `labels` is still in use, and
     * delta itself never drops a leaf of `labels` or `newEdges`
@@ -138,22 +137,15 @@ object Components {
     val fresh = ends.join(labels.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("lbl"))
     val all = labels.select("id", "lbl").unionAll(fresh)
-    val superEdges = truncate(edges
+    val superEdges = edges
       .join(all.select(col("id").as("src"), col("lbl").as("lsrc")), "src")
       .join(all.select(col("id").as("dst"), col("lbl").as("ldst")), "dst")
       .select(col("lsrc").as("src"), col("ldst").as("dst"))
-      .filter(col("src") =!= col("dst")))
-    // every new edge landed inside one existing cluster: nothing merges
-    if (superEdges.isEmpty) {
-      GraftSqlBridge.releaseLeaf(superEdges)
-      return all
-    }
+      .filter(col("src") =!= col("dst"))
     val touched = superEdges.select(col("src").as("id"))
       .unionAll(superEdges.select(col("dst").as("id"))).distinct()
     val sup = connected(touched, superEdges, maxRounds)
       .select(col("id").as("lbl"), col("lbl").as("nlbl"))
-    // connected's labels are their own leaf: the super-edges are dead
-    GraftSqlBridge.releaseLeaf(superEdges)
     all.join(sup, Seq("lbl"), "left")
       .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
   }

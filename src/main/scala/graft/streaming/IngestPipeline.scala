@@ -134,10 +134,18 @@ object IngestPipeline {
   }
 
   /** The full admission screen, batch-shaped — stages 1–4 over any
-    * `(doc_id, text)` frame against the frozen artifacts. The SAME call
-    * serves the batch law and every micro-batch (the s22 posture). */
-  def screen(h: Handle, batch: DataFrame): DataFrame =
-    SemanticAdmit.screen(gate(h, batch), h.vocab, h.storePath, h.thr)
+    * `(doc_id, text)` frame against the frozen artifacts. The batch law
+    * and every micro-batch ([[absorb]]) run the SAME two functions,
+    * [[gate]] then [[screenOf]] (the s22 posture); `absorb` only
+    * checkpoints between them. */
+  def screen(h: Handle, batch: DataFrame): DataFrame = {
+    val gated = gate(h, batch)
+    screenOf(h, gated, SemanticAdmit.embedOf(gated, h.vocab))
+  }
+
+  /** Stage 4, the semantic screen, over gated rows and their embeds. */
+  private def screenOf(h: Handle, gated: DataFrame, emb: DataFrame): DataFrame =
+    SemanticAdmit.screenEmbedded(gated, emb, h.storePath, h.thr)
 
   /** Stages 1–3: quality gate, exact-dup Bloom, SimHash Hamming screen. */
   private def gate(h: Handle, batch: DataFrame): DataFrame =
@@ -185,7 +193,7 @@ object IngestPipeline {
     // lineage here makes every downstream reference a shallow leaf read.
     val gated = leaf(gate(h, batch.select("doc_id", "text")))
     val emb = leaf(SemanticAdmit.embedOf(gated, h.vocab))
-    val admitted = leaf(SemanticAdmit.screenEmbedded(gated, emb, h.storePath, h.thr))
+    val admitted = leaf(screenOf(h, gated, emb))
     batchId match {
       case Some(id) => admitted.write.mode("overwrite")
         .parquet(s"${h.outPath}/admitted/bid=$id")

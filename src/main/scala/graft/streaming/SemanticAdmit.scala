@@ -124,9 +124,10 @@ object SemanticAdmit {
       grow: Boolean = false): Unit = {
     val spark = batch.sparkSession
     if (batchId.exists(absorbed(spark, outPath, _))) return
-    // the embeds serve the screen and the grow absorb; the admitted rows
-    // are read twice (write + optional grow); both dropped before return
-    val emb = embedOf(batch, vocab).persist()
+    // with grow, the embeds serve the screen and the store absorb, so
+    // they are cached; the admitted rows are read twice (write +
+    // optional grow); both dropped before return
+    val emb = if (grow) embedOf(batch, vocab).persist() else embedOf(batch, vocab)
     val admitted = screenEmbedded(batch, emb, storePath, thr).persist()
     // deterministic partition dir per ledgered batch (ADVICE r14): a
     // crash-window replay overwrites instead of double-appending, so
@@ -141,7 +142,7 @@ object SemanticAdmit {
       embedsOf(admitted, emb).filter(dotc(col("e"), col("e")) > 0),
       batchId = batchId, ingestId = "semantic_admit")
     admitted.unpersist(blocking = false)
-    emb.unpersist(blocking = false)
+    if (grow) emb.unpersist(blocking = false)
     batchId.foreach { id =>
       spark.sql(s"SELECT CAST($id AS BIGINT) AS batch_id")
         .coalesce(1).write.mode("append").parquet(s"$outPath/ledger")

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 /** Connected components (hash-min label propagation) against a pure-Scala
   * union-find oracle — random graphs plus the adversarial shapes: long
   * chains (force multi-round propagation well past round 1), isolated
-  * nodes, and duplicate/self edges. The delta fold's short-circuits are
-  * pinned by the jobs they do NOT start, and the pre-contraction cap on
-  * both sides of a partition's node count.
+  * nodes, and duplicate/self edges. The delta fold's ΔE = ∅ short-circuit
+  * is pinned by the jobs it does NOT start, and the pre-contraction cap
+  * on both sides of a partition's node count.
   */
 class ComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -255,12 +255,13 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
-  test("delta short-circuit: ΔE = ∅ and ΔE inside existing clusters start no connected job") {
+  test("delta: ΔE = ∅ starts no connected job; ΔE inside existing clusters ≡ full recompute") {
     val nodes = spark.range(1L, 11L).select(col("id"))
     val base = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("src", "dst")
     val lbl0 = Components.connected(nodes, base)
     val before = labelMap(lbl0)
-    def check(name: String, d: Seq[(Long, Long)], expected: Map[Long, Long]): Unit = {
+    def check(name: String, d: Seq[(Long, Long)], expected: Map[Long, Long],
+        shortCircuit: Boolean): Unit = {
       // the edges arrive as a caller-owned checkpoint leaf over 4
       // partitions (an empty local relation would plan to zero tasks and
       // start no job on any path): delta must spare it and the labels'
@@ -272,7 +273,8 @@ class ComponentsSpec extends SparkSpec {
         val out = Components.delta(lbl0, edges)
         (out, labelMap(out))
       }
-      assert(jobs == 0, s"$name: the fold must not run connected, started $jobs jobs")
+      if (shortCircuit)
+        assert(jobs == 0, s"$name: the fold must not run connected, started $jobs jobs")
       assert(got._2 == expected, s"$name: must equal labels ∪ fresh singletons")
       val allIds = (expected.keySet ++ d.flatMap(e => Seq(e._1, e._2))).toSeq.sorted
       val full = Components.connected(allIds.toDF("id"),
@@ -283,11 +285,11 @@ class ComponentsSpec extends SparkSpec {
       GraftSqlBridge.releaseLeaves(full)
       GraftSqlBridge.releaseLeaf(edges)
     }
-    check("ΔE = ∅", Seq.empty, before)
+    check("ΔE = ∅", Seq.empty, before, shortCircuit = true)
     // every edge lands in one existing cluster (or is a self-loop), so the
     // rewritten super-edge set is empty; 11 is a fresh singleton
     check("ΔE ⊆ clusters", Seq((1L, 3L), (2L, 1L), (6L, 5L), (4L, 4L), (11L, 11L)),
-      before + (11L -> 11L))
+      before + (11L -> 11L), shortCircuit = false)
     // control: a merging edge does reach connected (the detector is live)
     val ((merged, mergedMap), jobs) = withConnectedJobs {
       val out = Components.delta(lbl0, Seq((3L, 5L)).toDF("src", "dst"))
