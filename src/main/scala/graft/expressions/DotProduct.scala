@@ -1,6 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,16 +77,20 @@ case class DotProduct(left: Expression, right: Expression)
   * expressions, sketch probes, and whole-plan table functions). Idempotent;
   * query functions call this so `call_function("graft_dot", …)` / SQL
   * `graft_dot(a, b)` / `SELECT … FROM graft_simhash_pairs('v')` resolve in
-  * any session.
+  * any session. Only names the session lacks are registered, so a session
+  * built with [[GraftExtensions]] and repeated calls (the ingest path makes
+  * several per batch) keep the existing registrations and log nothing.
   */
 object GraftFunctions {
   def register(spark: SparkSession): Unit = {
+    val scalars = spark.sessionState.functionRegistry
     SqlSurface.scalars.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!scalars.functionExists(FunctionIdentifier(name)))
+        scalars.createOrReplaceTempFunction(name, builder, "built-in")
     }
     SqlSurface.tables.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.GraftSqlBridge.registerTableFunction(spark, name, builder)
+      if (org.apache.spark.sql.GraftSqlBridge.tableFunctionInfo(spark, name).isEmpty)
+        org.apache.spark.sql.GraftSqlBridge.registerTableFunction(spark, name, builder)
     }
   }
 }

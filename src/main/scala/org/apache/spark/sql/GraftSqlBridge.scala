@@ -38,6 +38,12 @@ object GraftSqlBridge {
     spark.sessionState.tableFunctionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
+  /** The registered table function `name`'s info, if the session has one. */
+  def tableFunctionInfo(spark: SparkSession, name: String)
+      : Option[catalyst.expressions.ExpressionInfo] =
+    spark.sessionState.tableFunctionRegistry
+      .lookupFunction(catalyst.FunctionIdentifier(name))
+
   /** The analyzed logical plan beneath a DataFrame (resolved attributes). */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.GraftFunctions
+import graft.expressions.{GraftFunctions, SqlSurface}
 import org.apache.spark.sql.functions._
 
 /** The custom codegen'd DotProduct expression: numerically identical to the
@@ -37,6 +37,28 @@ class ExpressionSpec extends SparkSpec {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.expressions.GraftExtensions().apply(ext) // must not throw
     // runtime resolution via the registry path is covered by the tests above
+  }
+
+  test("GraftFunctions.register keeps existing registrations and registers only missing names") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    val scalars = spark.sessionState.functionRegistry
+    def infos(): Map[String, Option[ExpressionInfo]] =
+      (SqlSurface.scalars.map { case (n, _, _) =>
+        n -> scalars.lookupFunction(FunctionIdentifier(n)) } ++
+       SqlSurface.tables.map { case (n, _, _) =>
+        n -> org.apache.spark.sql.GraftSqlBridge.tableFunctionInfo(spark, n) }).toMap
+    GraftFunctions.register(spark)
+    val first = infos()
+    GraftFunctions.register(spark)
+    val second = infos()
+    first.foreach { case (name, info) =>
+      assert(info.isDefined && second(name).isDefined, s"$name is not registered")
+      assert(second(name).get eq info.get, s"$name was registered again")
+    }
+    SqlSurface.scalars.foreach { case (name, _, _) =>
+      assert(scalars.lookupFunctionBuilder(FunctionIdentifier(name)).isDefined, name)
+    }
   }
 
   // ── the SQL surface: every sketch/dedup probe reachable from pure SQL ──

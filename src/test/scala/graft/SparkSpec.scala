@@ -11,6 +11,9 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // Spark sizes its generated-class cache once per JVM: the suites share
+    // the engine's size so they run the code paths a real session runs
+    .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toString)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .config("spark.ui.enabled", "false")

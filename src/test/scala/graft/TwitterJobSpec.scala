@@ -51,4 +51,31 @@ class TwitterJobSpec extends SparkSpec {
       assert(d.exists(_.endsWith("2000000000")) && d.exists(_.endsWith("3000000000")), d.take(5))
     } finally queries.foreach(_.stop())
   }
+
+  test("warm triggers of the four pipelines reuse their generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("twitterjob-codegen").toString
+    val in = MemoryStream[String]
+    val queries = TwitterJob.start(spark, in.toDF(),
+      TwitterJob.Config(influxDir = dir, trigger = Trigger.ProcessingTime(0)))
+    // each round moves event time past the 300 s watermark delay, so every
+    // round also finalizes windows in the append-mode pipelines
+    def round(r: Int): Unit = {
+      val t0 = r * 400000L
+      in.addData(
+        tweet(s"round $r #spark", t0 + 1000),
+        tweet(s"round $r #spark #flink", t0 + 2000),
+        tweet(s"round $r #flink", t0 + 6000))
+      queries.foreach(_.processAllAvailable())
+    }
+    try {
+      (0 until 3).foreach(round)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (3 until 8).foreach(round)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      // 10 measured at the engine's cache size; Spark's default 100-class
+      // cache is smaller than the pipelines' working set and recompiled 420
+      assert(compiles <= 20, s"$compiles classes compiled over five warm rounds")
+    } finally queries.foreach(_.stop())
+  }
 }
