@@ -11,14 +11,16 @@ object Verify {
     // dumps just those queries; unset = the full driver run
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
+    val run = SparkEntry.queries
       .filter { case (n, _) => only.forall(f => f.exists(n.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = run.flatMap { case (name, fn) =>
+      val failure =
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"); None }
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(s"$name (${e.getClass.getName})")
+        }
       // the result is on disk — drop EVERYTHING this query pinned (rank
       // caches, persisted intermediates, Components' localCheckpoint
       // blocks) so a 59-query session doesn't accumulate memory/disk
@@ -26,7 +28,10 @@ object Verify {
       operators.Cumulative.releaseAll()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      failure
     }
+    System.err.println(s"[verify] summary: ${run.size - failed.size} passed, " +
+      s"${failed.size} failed" + (if (failed.isEmpty) "" else failed.mkString(": ", ", ", "")))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

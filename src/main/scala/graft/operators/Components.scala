@@ -119,19 +119,16 @@ object Components {
     *
     * Leaf ownership: the result's plan embeds the caller's `labels`
     * (on the ΔE = ∅ short-circuit the result IS `labels`, re-projected)
-    * next to delta's own checkpoint leaves (the edge leaf and
-    * [[connected]]'s labels). Materialize it once, then release with
-    * `GraftSqlBridge.releaseLeavesExcept(result, leafIds(labels))` —
-    * never with a whole-tree release while `labels` is still in use, and
-    * delta itself never drops a leaf of `labels` or `newEdges`
+    * next to delta's own checkpoint leaves — the edge leaf and
+    * [[connected]]'s labels — which delta records in `pins`. Materialize
+    * the result once, then `pins.release()`: that drops delta's leaves
+    * and nothing of `labels` or `newEdges`, which stay the caller's
     * ([[Dedup.maintain]] and [[SemanticDedup.maintain]] follow this).
     */
-  def delta(labels: DataFrame, newEdges: DataFrame, maxRounds: Int = 100): DataFrame = {
-    val edges = truncate(newEdges.select("src", "dst"))
-    if (edges.isEmpty) {
-      GraftSqlBridge.releaseLeaf(edges)
-      return labels.select("id", "lbl")
-    }
+  def delta(labels: DataFrame, newEdges: DataFrame, pins: Pins,
+      maxRounds: Int = 100): DataFrame = {
+    val edges = pins.leaf(newEdges.select("src", "dst"))
+    if (edges.isEmpty) return labels.select("id", "lbl")
     val ends = edges.select(col("src").as("id"))
       .unionAll(edges.select(col("dst").as("id"))).distinct()
     val fresh = ends.join(labels.select("id"), Seq("id"), "left_anti")
@@ -144,19 +141,11 @@ object Components {
       .filter(col("src") =!= col("dst"))
     val touched = superEdges.select(col("src").as("id"))
       .unionAll(superEdges.select(col("dst").as("id"))).distinct()
-    val sup = connected(touched, superEdges, maxRounds)
+    val sup = pins.track(connected(touched, superEdges, maxRounds))
       .select(col("id").as("lbl"), col("lbl").as("nlbl"))
     all.join(sup, Seq("lbl"), "left")
       .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
   }
-
-  // every checkpoint goes through freshLeaf: localCheckpoint PRESERVES
-  // the replaced plan's optimizer stats, and join-size estimates
-  // multiply — compounding them across rounds grows the BigInt estimate
-  // geometrically until stats estimation itself hangs the driver (see
-  // GraftSqlBridge.freshLeaf)
-  private def truncate(df: DataFrame): DataFrame =
-    GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
 
   /** Per-task union-find node cap for [[preContractPass]]: bounds the
     * map at ~64 MiB per task (2^22 entries × ~16 B); edges arriving
@@ -240,10 +229,10 @@ object Components {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
-    var cur = truncate(
+    var cur = Pins.checkpoint(
       if (preContract) preContractPass(canon, preContractNodeCap) else canon)
     // node -> super-node pointer, composed across rounds
-    var mapping = truncate(nodes.select(col("id"), col("id").as("lbl")))
+    var mapping = Pins.checkpoint(nodes.select(col("id"), col("id").as("lbl")))
     var rounds = 0
     var active = cur.count()
     var slowRounds = 0
@@ -261,13 +250,13 @@ object Components {
       // (w,x)}) — instead of a groupBy over both orientations (halves the
       // agg input and skips materializing the 2× union). Nodes with no
       // smaller neighbor have no row here; the left joins below keep them.
-      val l = truncate(cur.groupBy(col("v").as("node")).agg(min(col("u")).as("nm"))
+      val l = Pins.checkpoint(cur.groupBy(col("v").as("node")).agg(min(col("u")).as("nm"))
         .select(col("node"), least(col("node"), col("nm")).as("newl")))
       // contract: rewrite edges through the pointers; self-loops vanish,
       // distinct collapses the duplicates contraction creates
       val lu = l.select(col("node").as("u"), col("newl").as("lu"))
       val lv = l.select(col("node").as("v"), col("newl").as("lv"))
-      cur = truncate(cur
+      cur = Pins.checkpoint(cur
         .join(lu, Seq("u"), "left").join(lv, Seq("v"), "left")
         .select(coalesce(col("lu"), col("u")).as("a"),
           coalesce(col("lv"), col("v")).as("b"))
@@ -276,10 +265,10 @@ object Components {
         .filter(col("u") =!= col("v")).distinct())
       // compose pointers into the node mapping (nodes whose super-node is
       // already final — or isolated — keep their label)
-      mapping = truncate(prevMapping
+      mapping = Pins.checkpoint(prevMapping
         .join(l.select(col("node").as("lbl"), col("newl")), Seq("lbl"), "left")
         .select(col("id"), coalesce(col("newl"), col("lbl")).as("lbl")))
-      // every truncate() above is EAGER, so the previous round's blocks —
+      // every checkpoint above is EAGER, so the previous round's blocks —
       // and this round's pointer table — are dead now; drop them or a
       // long-lived session pins 3 RDDs per round per connected() call
       GraftSqlBridge.releaseLeaf(prevCur)
@@ -312,7 +301,7 @@ object Components {
       outcome.labels match {
         case Some(starLbl) =>
           val prevMapping = mapping
-          mapping = truncate(prevMapping
+          mapping = Pins.checkpoint(prevMapping
             .join(starLbl.select(col("node").as("lbl"), col("slbl")), Seq("lbl"), "left")
             .select(col("id"), coalesce(col("slbl"), col("lbl")).as("lbl")))
           GraftSqlBridge.releaseLeaf(prevMapping)
@@ -355,7 +344,7 @@ object Components {
       import sess.implicits._
       val localLbl = relabel.toSeq.toDF("lbl", "newl")
       val prevMapping = mapping
-      mapping = truncate(prevMapping
+      mapping = Pins.checkpoint(prevMapping
         .join(broadcast(localLbl), Seq("lbl"), "left")
         .select(col("id"), coalesce(col("newl"), col("lbl")).as("lbl")))
       GraftSqlBridge.releaseLeaf(prevMapping)
@@ -415,7 +404,7 @@ object Components {
     while (!fixed && eCount > threshold && r < maxRounds)
     Graph.withoutAqeIf(e0.sparkSession, eCount <= Graph.IterAqeOffThreshold) {
       val prev = e
-      val next = truncate(smallStar(largeStar(prev)))
+      val next = Pins.checkpoint(smallStar(largeStar(prev)))
       val nextCount = next.count()
       // both sides are distinct canonical sets: equal iff same cardinality
       // and the (next \ prev) difference is empty
@@ -434,7 +423,7 @@ object Components {
       throw new IllegalStateException(
         s"star contraction did not reach its fixpoint in $maxRounds rounds")
     }
-    val lbl = truncate(
+    val lbl = Pins.checkpoint(
       e.select(col("u").as("node"), col("v").as("nbr"))
         .unionAll(e.select(col("v").as("node"), col("u").as("nbr")))
         .groupBy("node").agg(min(col("nbr")).as("mn"))

@@ -49,23 +49,23 @@ object Dedup {
   def clusters(docs: DataFrame): DataFrame = clusters(docs, new Pins)
 
   private def clusters(docs: DataFrame, pins: Pins): DataFrame =
-    Components.connected(
+    pins.track(Components.connected(
         docs.select(col("doc_id").as("id")),
-        nearDupPairs(docs, pins).select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        nearDupPairs(docs, pins).select(col("doc_a").as("src"), col("doc_b").as("dst"))))
       .select(col("id").as("doc_id"), col("lbl").as("cluster"))
 
   /** The full dedup APPLY: exact dedup, then one survivor (min doc_id)
     * per near-dup cluster of the distinct corpus. Returns surviving rows
-    * with all caller columns — q58 semantics — PLUS a release handle that
-    * drops everything this pipeline pins: the survivor cache AND the
-    * connected-components label leaf (a localCheckpoint whose blocks
-    * otherwise live until session end). FINALITY: the labels' lineage is
-    * truncated, so after release the returned plan cannot be re-executed —
-    * call the handle only once the survivors (and anything derived from
-    * them) are materialized.
+    * with all caller columns — q58 semantics. Everything the pipeline
+    * creates — the survivor cache, the detector's internal intermediates
+    * and the connected-components label leaf (a localCheckpoint whose
+    * blocks otherwise live until session end) — is recorded in `pins`;
+    * `docs` is never. FINALITY: the labels' lineage is truncated, so
+    * after `pins.release()` the returned plan cannot be re-executed —
+    * release only once the survivors (and anything derived from them)
+    * are materialized.
     */
-  def deduplicateReleasable(docs: DataFrame): (DataFrame, () => Unit) = {
-    val pins = new Pins
+  def deduplicate(docs: DataFrame, pins: Pins): DataFrame = {
     // three consumers (pair detection, the cluster node set, the final
     // semi join) each materialize independently — cache the survivors or
     // the corpus-wide sha2 groupBy + semi join runs three times.
@@ -76,34 +76,26 @@ object Dedup {
     val keep = clusters(distinctDocs, pins)
       .filter(col("doc_id") === col("cluster"))
       .select("doc_id")
-    val out = distinctDocs.join(keep, Seq("doc_id"), "left_semi")
-    (out, () => {
-      // the detector's internal intermediates too (minhashPairs' four
-      // persists — the round-7 leak the id-diff spec caught), not just
-      // this function's own survivor cache + label leaf
-      pins.release()
-      org.apache.spark.sql.GraftSqlBridge.releaseLeaves(out)
-    })
+    distinctDocs.join(keep, Seq("doc_id"), "left_semi")
   }
 
-  /** [[deduplicateReleasable]] with the handle wired to a one-shot
-    * query-completion listener (VERDICT r7 item #5: the bare wrapper used
-    * to DISCARD the handle, silently pinning the survivor cache + the
-    * components label leaf for the session lifetime). The first execution
-    * that materializes the returned plan — a write, collect, or any action
-    * on a frame derived from it — releases everything on completion
-    * (success OR failure), then unregisters itself.
+  /** [[deduplicate]] over a fresh [[Pins]] whose release is wired to a
+    * one-shot query-completion listener (VERDICT r7 item #5: the bare
+    * wrapper used to DISCARD the handle, silently pinning the survivor
+    * cache + the components label leaf for the session lifetime). The
+    * first successful execution that materializes the returned plan — a
+    * write, collect, or any action on a frame derived from it — releases
+    * everything on completion, then unregisters itself.
     *
     * Contract: the returned frame is single-shot. Execute it once and keep
     * the OUTPUT; re-executing the same object afterwards fails (the label
-    * leaf is a lineage-truncated localCheckpoint — same finality as
-    * [[deduplicateReleasable]]'s handle). Callers that materialize several
-    * times from one plan (or want to control release timing) use
-    * [[deduplicateReleasable]].
+    * leaf is a lineage-truncated localCheckpoint). Callers that
+    * materialize several times from one plan (or want to control release
+    * timing) pass their own [[Pins]].
     */
   def deduplicate(docs: DataFrame): DataFrame = {
-    val (out, release) = deduplicateReleasable(docs)
-    Release.onFirstExecution(out, release)
+    val pins = new Pins
+    Release.onFirstExecution(deduplicate(docs, pins), () => pins.release())
   }
 
   /** The dedup-composition working set, built ONCE and shared across
@@ -158,15 +150,13 @@ object Dedup {
     // build never computes it — `pairs` stays available as a sort view
     // over the pinned rows for q26-shaped callers (r16)
     val pairsU = pins(TierFour.minhashPairsUnsortedOver(t, v, pins))
-    val labels = pins(Components.connected(
+    val labels = pins(pins.track(Components.connected(
         docs.select(col("doc_id").as("id")),
-        pairsU.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        pairsU.select(col("doc_a").as("src"), col("doc_b").as("dst"))))
       .select(col("id").as("doc_id"), col("lbl").as("cluster")))
     val scores = pins(TierEleven.classifierScoresOf(docs, Some(pins), Some(v)))
-    Artifacts(pairsU.orderBy("doc_a", "doc_b"), labels, scores, () => {
-      pins.release()
-      org.apache.spark.sql.GraftSqlBridge.releaseLeaves(labels)
-    }, pairsUnsorted = pairsU)
+    Artifacts(pairsU.orderBy("doc_a", "doc_b"), labels, scores,
+      () => pins.release(), pairsUnsorted = pairsU)
   }
 
   private def labOf(a: Artifacts): DataFrame =
@@ -233,11 +223,12 @@ object Dedup {
     * `(doc_id, cluster)` frame — an eager lineage-truncated leaf,
     * materialized BEFORE the absorb step (the probe plan reads the
     * postings table lazily; checkpointing first pins the pre-append
-    * read). Release with `GraftSqlBridge.releaseLeaves`. The input
-    * `labels` frame is NOT consumed: maintain releases only its own
-    * internal leaves, so a chained loop can keep (or release) each
-    * round's labels itself — DedupMaintainSpec pins the previous
-    * round's frame still readable after the next maintain.
+    * read) — a bare leaf; drop it with `GraftSqlBridge.releaseLeaf`.
+    * The input `labels` frame is NOT consumed: maintain releases only
+    * the leaves it and [[Components.delta]] created, so a chained loop
+    * can keep (or release) each round's labels itself —
+    * DedupMaintainSpec pins the previous round's frame still readable
+    * after the next maintain.
     *
     * Law (DedupMaintainSpec): `maintain(build(D); B₁); … ; Bₖ)` ≡ the
     * one-shot `Components.connected` over the frozen-token-space pair
@@ -261,20 +252,12 @@ object Dedup {
     val seeded = lbl0.unionByName(
       nd.select(col("doc_id").as("id"), col("doc_id").as("lbl"))
         .join(lbl0.select("id"), Seq("id"), "left_anti"))
+    val pins = new Pins
     val updated = Components.delta(seeded,
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), pins)
       .select(col("id").as("doc_id"), col("lbl").as("cluster"))
-    val out = org.apache.spark.sql.GraftSqlBridge.freshLeaf(
-      updated.localCheckpoint(true))
-    // release ONLY the delta-internal leaves: the composed plan also
-    // embeds the caller's `labels` frame, which in the chained-ingest
-    // case is itself a checkpointed leaf (the previous maintain's
-    // output) — unpersisting it would destroy a caller-owned input
-    // (lineage truncated ⇒ unrecoverable; ADVICE r13). The input stays
-    // caller-owned: release it yourself once the chain is done.
-    org.apache.spark.sql.GraftSqlBridge.releaseLeavesExcept(updated,
-      org.apache.spark.sql.GraftSqlBridge.leafIds(labels)
-        ++ org.apache.spark.sql.GraftSqlBridge.leafIds(newDocs))
+    val out = Pins.checkpoint(updated)
+    pins.release()
     SigIndex.append(spark, name, nd, buckets)
     out
   }

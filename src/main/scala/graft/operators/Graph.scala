@@ -45,11 +45,12 @@ import org.apache.spark.sql.functions._
   *    round cap for fixed SQL unrolls), one membership count per round.
   *
   * Scale posture shared by all: per-round lineage truncation through
-  * eager `localCheckpoint` + [[GraftSqlBridge.freshLeaf]] (plans and
-  * optimizer stats stay O(1) per round — the [[Components]] discipline;
-  * production swaps reliable `checkpoint()` for executor-loss tolerance),
-  * per-round RELEASE of the previous round's checkpoint blocks, and a
-  * [[Pins]]-threaded release handle on the result, so a library caller
+  * [[Pins.checkpoint]] (plans and optimizer stats stay O(1) per round —
+  * the [[Components]] discipline; production swaps reliable
+  * `checkpoint()` for executor-loss tolerance), per-round RELEASE of the
+  * previous round's checkpoint blocks, and the run's [[Pins]] — its
+  * persists plus the final round's leaves — as the release handle on
+  * the result, so a library caller
   * composing these in a long-lived session pins nothing beyond the live
   * round. The one-frame engines share a single round loop ([[iterate]]);
   * [[hits]] and [[bfs]] carry two frames per round and keep their own.
@@ -99,23 +100,13 @@ object Graph {
   private def requireCap(engine: String, cap: Int): Unit =
     require(cap >= 1, s"Graph.$engine: the round cap must be >= 1, got $cap")
 
-  /** Eager per-round lineage truncation ([[Components]]): an iterative
-    * frame referencing its predecessor doubles the plan every round. */
-  private def ckpt(df: DataFrame): DataFrame =
-    GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
-
-  /** The release handle: the run's pins, then the engine's own final
-    * checkpoint leaves (each a bare leaf — never a plan walk, which would
-    * reach the caller's input lineage). */
-  private def handle(pins: Pins, leaves: DataFrame*): () => Unit =
-    () => { pins.release(); leaves.foreach(GraftSqlBridge.releaseLeaf) }
-
   /** The shared round loop of the one-frame engines ([[damped]],
     * [[kcore]], [[sssp]], [[lpa]]). From `init`, each round checkpoints
     * `step(prev)`, asks `stop(prev, cur, round)`, then drops the previous
     * round's checkpoint blocks (the stop test was their last reader; a
     * non-leaf `init` projection makes that a no-op). At most `cap`
-    * rounds, AQE-off while `small` ([[withoutAqeIf]]). */
+    * rounds, AQE-off while `small` ([[withoutAqeIf]]). The final leaf
+    * joins the run's `pins`, whose release is the run's handle. */
   private def iterate(init: DataFrame, small: Boolean, cap: Int, pins: Pins)(
       step: DataFrame => DataFrame)(stop: (DataFrame, DataFrame, Int) => Boolean): Run = {
     var cur = init
@@ -123,12 +114,12 @@ object Graph {
     var stopped = false
     withoutAqeIf(init.sparkSession, small) { while (!stopped && rounds < cap) {
       val prev = cur
-      cur = ckpt(step(prev))
+      cur = Pins.checkpoint(step(prev))
       rounds += 1
       stopped = stop(prev, cur, rounds)
       GraftSqlBridge.releaseLeaf(prev)
     } }
-    Run(cur, rounds, handle(pins, cur))
+    Run(pins.track(cur), rounds, () => pins.release())
   }
 
   /** Teleport policy: who receives teleport + dangling mass, and the exact
@@ -372,9 +363,9 @@ object Graph {
     // over them (r16)
     var leaves = Seq.empty[DataFrame]
     withoutAqeIf(nodes.sparkSession, n <= IterAqeOffThreshold) { for (_ <- 1 to iters) {
-      val rawA = ckpt(inflow("src", "dst", h))
+      val rawA = Pins.checkpoint(inflow("src", "dst", h))
       a = normalized(rawA)
-      val rawH = ckpt(inflow("dst", "src", a))
+      val rawH = Pins.checkpoint(inflow("dst", "src", a))
       h = normalized(rawH)
       // the previous round's raw leaves have no readers left. Released as
       // bare leaves: round 0's h is a projection over the caller's input
@@ -388,7 +379,8 @@ object Graph {
       .select(col("nid"), coalesce(col("hub_fp"), lit(0L)).as("hub_fp"),
         coalesce(col("auth_fp"), lit(0L)).as("auth_fp"))
       .orderBy("nid")
-    Run(out, iters, handle(pins, leaves: _*))
+    leaves.foreach(pins.track)
+    Run(out, iters, () => pins.release())
   }
 
   /** k-core decomposition membership (Seidman 1983) by iterative peeling:
@@ -418,7 +410,7 @@ object Graph {
     // on src so the alive-semijoin's edge side never re-shuffles (r16).
     val ed = pins(edgesIn.select(col("src"), col("dst")).distinct()
       .repartition(width(edgesIn.sparkSession), col("src")))
-    val alive = ckpt(ed.select(col("src").as("nid"))
+    val alive = Pins.checkpoint(ed.select(col("src").as("nid"))
       .union(ed.select(col("dst").as("nid"))).distinct())
     var size = alive.count()
     iterate(alive, size <= IterAqeOffThreshold, maxRounds, pins) { prev =>
@@ -460,7 +452,7 @@ object Graph {
     // Pre-partitioned on src: the per-round relax join reads it in place.
     val ed = pins(edgesIn.select(col("src"), col("dst"), col("w"))
       .repartition(width(edgesIn.sparkSession), col("src")))
-    val dist = ckpt(sources.select(col("nid")).distinct()
+    val dist = Pins.checkpoint(sources.select(col("nid")).distinct()
       .select(col("nid"), lit(0L).as("d")))
     def sig(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)), coalesce(sum("d"), lit(0L))).head()
@@ -493,7 +485,7 @@ object Graph {
     maxHops.foreach(requireCap("bfs", _))
     val ed = pins(edgesIn.select(col("src"), col("dst"))
       .repartition(width(edgesIn.sparkSession), col("src"))) // reread every round
-    var reached = ckpt(sources.select(col("nid")).distinct()
+    var reached = Pins.checkpoint(sources.select(col("nid")).distinct()
       .select(col("nid"), lit(0L).as("d")))
     var frontier = reached
     var rounds = 0
@@ -504,13 +496,13 @@ object Graph {
       // relax the FRONTIER only (|frontier| ≤ |V|, usually ≪), then
       // anti-join the reached set: a node discovered twice in the same
       // round collapses in the distinct; one discovered earlier is dropped
-      val next = ckpt(ed.join(frontier, ed("src") === frontier("nid"))
+      val next = Pins.checkpoint(ed.join(frontier, ed("src") === frontier("nid"))
         .select(col("dst").as("nid")).distinct()
         .join(reached.select(col("nid"), lit(true).as("seen")), Seq("nid"), "left")
         .filter(col("seen").isNull)
         .select(col("nid"), lit(hop).as("d")))
       val prevReached = reached
-      reached = ckpt(prevReached.union(next))
+      reached = Pins.checkpoint(prevReached.union(next))
       // both checkpoints above are eager — the old frontier and the old
       // reached set have no readers left
       if (!(frontier eq prevReached)) GraftSqlBridge.releaseLeaf(frontier)
@@ -520,7 +512,7 @@ object Graph {
       rounds += 1
     } }
     if (!(frontier eq reached)) GraftSqlBridge.releaseLeaf(frontier)
-    Run(reached, rounds, handle(pins, reached))
+    Run(pins.track(reached), rounds, () => pins.release())
   }
 
   /** Synchronous label propagation (Raghavan et al., Phys. Rev. E 2007)
@@ -551,7 +543,7 @@ object Graph {
       .repartition(width(edgesIn.sparkSession), col("src")))
     // (nid, label, old) — `old` rides the checkpoint so the changed
     // count is a cheap scan of the materialized frame, not a re-join
-    val labels = ckpt(ed.select(col("src").as("nid"))
+    val labels = Pins.checkpoint(ed.select(col("src").as("nid"))
       .union(ed.select(col("dst").as("nid"))).distinct()
       .select(col("nid"), col("nid").as("label"), col("nid").as("old")))
     val run = iterate(labels, labels.count() <= IterAqeOffThreshold, maxRounds, pins) { prev =>

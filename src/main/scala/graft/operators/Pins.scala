@@ -1,14 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 
-/** Collects the `persist()`s a composed pipeline takes, so the pipeline's
-  * release handle can drop them ALL — not just the ones its top-level
-  * function happened to create. Round 7's leak audit (DedupSpec's id-diff
-  * release gates) showed [[Dedup.deduplicateReleasable]]'s handle covered
-  * its own survivor cache and the components label leaf but not the four
-  * intermediates [[TierFour.minhashPairs]] pins internally; threading one
-  * of these through the call chain closes that class of leak structurally.
+/** Owns the state a composed pipeline creates — its `persist()`s AND its
+  * eager checkpoint leaves — so one [[release]] drops all of it. The code
+  * that creates a leaf records it here; callers never search a plan for
+  * leaves to drop, so a release can never reach a checkpointed frame the
+  * caller passed in (a plan walk over a composed tree did, and destroyed
+  * the caller's input). Round 7's leak audit (DedupSpec's id-diff release
+  * gates) is why the collector is threaded through the call chain: the
+  * intermediates [[TierFour.minhashPairs]] pins internally are released
+  * with the pipeline that asked for them.
   *
   * Single-threaded builder use; release is idempotent. Queries driven by
   * Verify/Bench don't need it (their per-query sweep unpersists
@@ -16,20 +18,49 @@ import org.apache.spark.sql.DataFrame
   * collector.
   */
 final class Pins {
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val drops = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
-  /** Persist `df` and remember it for [[release]]. */
-  def apply(df: DataFrame): DataFrame = { buf += df.persist(); df }
-
-  /** Remember an ALREADY-persisted `df` for [[release]] (for callees that
-    * manage their own persist but delegate release, e.g.
-    * [[Cumulative.rowNumber]]'s range-boundary cache). */
-  def track(df: DataFrame): DataFrame = { buf += df; df }
-
-  def release(): Unit = {
-    buf.foreach(_.unpersist(blocking = false))
-    buf.clear()
+  /** Persist `df` and remember it for [[release]], which unpersists it —
+    * never drops blocks, so persisting a caller's checkpointed frame
+    * leaves that frame intact. */
+  def apply(df: DataFrame): DataFrame = {
+    drops += (() => df.unpersist(blocking = false))
+    df.persist()
   }
+
+  /** [[Pins.checkpoint]] `df` and remember the leaf for [[release]]. */
+  def leaf(df: DataFrame): DataFrame = track(Pins.checkpoint(df))
+
+  /** Remember a frame the caller itself created, ALREADY persisted or
+    * checkpointed — [[Cumulative.rowNumber]]'s range-boundary cache,
+    * [[Components.connected]]'s labels leaf. [[release]] drops the
+    * blocks of a bare checkpoint leaf ([[GraftSqlBridge.releaseLeaf]])
+    * and unpersists anything else. Never track a frame you did not
+    * create: its blocks are not yours to drop. */
+  def track(df: DataFrame): DataFrame = {
+    drops += (() => if (!GraftSqlBridge.releaseLeaf(df)) df.unpersist(blocking = false))
+    df
+  }
+
+  /** Drop everything recorded, in recording order. FINALITY: plans over
+    * a released leaf cannot be re-executed. */
+  def release(): Unit = {
+    drops.foreach(_())
+    drops.clear()
+  }
+}
+
+object Pins {
+  /** The one eager lineage-truncating checkpoint every engine uses.
+    * Iterative frames that reference their predecessor double their plan
+    * every round, and a maintain fold re-embeds its input plans many
+    * times over; truncation keeps every downstream reference a shallow
+    * leaf read. The leaf is restamped with its materialized size
+    * ([[GraftSqlBridge.freshLeaf]]): `localCheckpoint` keeps the replaced
+    * plan's optimizer stats, and join-size estimates multiply across
+    * rounds until stats estimation itself hangs the driver. */
+  def checkpoint(df: DataFrame): DataFrame =
+    GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
 }
 
 /** The single-shot auto-release shape shared by the library pipelines
@@ -54,13 +85,14 @@ object Release {
   /** Register a one-shot query-completion listener firing `release` after
     * the first SUCCESSFUL execution whose analyzed plan contains `df`'s —
     * matched by node identity, so derived frames (`df.select(…)`, a
-    * parquet write of a join over it) trigger too. Returns `df` for
-    * call-site chaining.
+    * parquet write of a join over it) trigger too. Returns the frame to
+    * execute: `df` under a fresh all-columns projection, the node the
+    * listener matches.
     *
     * Contract: `df` becomes single-shot — execute once and keep the
     * OUTPUT; callers that materialize several times (or want release
-    * timing control) call the engine's release handle themselves
-    * ([[Graph.Run.release]], [[Dedup.deduplicateReleasable]]). A
+    * timing control) release themselves: [[Graph.Run.release]], or the
+    * [[Pins]] they passed in ([[Dedup.deduplicate]]'s two-argument form). A
     * FAILED first action does NOT consume the shot: the pinned state is
     * exactly what the retry needs, so `onFailure` deliberately leaves it
     * in place (transient executor loss stays retryable). Callers that
@@ -70,8 +102,14 @@ object Release {
     val spark = df.sparkSession
     // match on the ANALYZED tree: actions compose over Dataset.logicalPlan
     // (= the analyzed/commandExecuted plan), so the raw logical nodes never
-    // appear in a derived action's execution
-    val marker = df.queryExecution.analyzed
+    // appear in a derived action's execution. The marker is a node built
+    // HERE, not `df`'s own: completion events reach the listener
+    // asynchronously, and an engine's last action before returning (sssp's
+    // fixpoint probe reads its final leaf) could otherwise be delivered
+    // after registration and fire the release before the caller's first
+    // read — which then fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    val marked = df.select(org.apache.spark.sql.functions.col("*"))
+    val marker = marked.queryExecution.analyzed
     val listener: QueryExecutionListener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         if (qe.analyzed.exists(_ eq marker) && outstandingReleases.remove(this) != null) {
@@ -83,7 +121,7 @@ object Release {
     }
     outstandingReleases.put(listener, (spark, release))
     spark.listenerManager.register(listener)
-    df
+    marked
   }
 
   /** Number of auto-release listeners registered on `spark` that have not

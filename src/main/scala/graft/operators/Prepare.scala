@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *      shipped with the pipeline, the s34 discipline) and must clear
   *      `floorPpm` — the "keep what looks like the target" admission
   *      (DSIR's selection step) in the position where it shields dedup.
-  *   4. DEDUP ([[Dedup.deduplicateReleasable]]) — exact digests, then
+  *   4. DEDUP ([[Dedup.deduplicate]]) — exact digests, then
   *      MinHash/LSH near-dup clusters, one survivor per cluster.
   *   4b. optional SEMANTIC DEDUP (`semanticDedup = true`) — SemDeDup's
   *      position in the order: hash-embed near-dup pairs
@@ -46,11 +46,12 @@ import org.apache.spark.sql.functions._
   *      before dedup re-opens).
   *
   * Returns the prepared frame `(doc_id, text, split)` plus the per-stage
-  * counts a dataset card quotes. Upstream intermediates are swept before
-  * returning; the returned frame is an eager `localCheckpoint` — fully
-  * materialized and SELF-CONTAINED (no lineage into the swept caches;
-  * blocks spill to disk rather than recompute) — and Verify/Bench's
-  * per-query sweep releases it as usual.
+  * counts a dataset card quotes. Every cache and checkpoint leaf the
+  * stages create is recorded in one [[Pins]] and released before
+  * returning; `docs` is never touched. The returned frame is an eager
+  * `localCheckpoint` — fully materialized and SELF-CONTAINED (no lineage
+  * into the released state; blocks spill to disk rather than
+  * recompute) — and Verify/Bench's per-query sweep releases it as usual.
   */
 object Prepare {
 
@@ -93,7 +94,9 @@ object Prepare {
             .filter(col("admitted") === 1L).select("doc_id"),
           Seq("doc_id"), "left_semi")
       }
-    val gated = (dsirGate match {
+    // the state every later stage creates, released together at the end
+    val pins = new Pins
+    val gated = pins(dsirGate match {
       case None => tokenGated
       case Some(DsirGate(weights, unseenPpm, floorPpm)) =>
         // same two-read shape as the gopher branch: score + semi-join
@@ -102,39 +105,37 @@ object Prepare {
           TierTwentyOne.dsirApply(pinned, weights, unseenPpm)
             .filter(col("dsir_ppm") >= floorPpm).select("doc_id"),
           Seq("doc_id"), "left_semi")
-    }).persist() // feeds its count + three dedup consumers
+    }) // feeds its count + three dedup consumers
     val afterGates = gated.count()
     gatePins.release()
-    val (mhSurvivors, releaseDedup) = Dedup.deduplicateReleasable(gated)
+    val mhSurvivors = Dedup.deduplicate(gated, pins)
     // optional SEMANTIC pass (SemDeDup's position in the order: after the
     // lexical whole-doc dedup, before the substring strip) — hash-embed
     // near-dup pairs (the celled production detector, text-only) → components →
     // keep each cluster's min doc_id. The survivor rule and the
-    // self-labeled-min shortcut are Dedup.deduplicateReleasable's.
-    val semPins = new Pins
+    // self-labeled-min shortcut are Dedup.deduplicate's.
     val (survivors, semanticDropped) =
       if (!semanticDedup) (mhSurvivors, 0L)
       else {
-        val base = semPins(mhSurvivors) // embeds + node set + final semi join
+        val base = pins(mhSurvivors) // embeds + node set + final semi join
         val nBase = base.count()
-        val pairs = TierNineteen.celledEmbedPairsOf(base, 0.95, pins = Some(semPins))
+        val pairs = TierNineteen.celledEmbedPairsOf(base, 0.95, pins = Some(pins))
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        val keep = Components.connected(base.select(col("doc_id").as("id")), pairs)
+        val keep = pins.track(Components.connected(base.select(col("doc_id").as("id")), pairs))
           .filter(col("id") === col("lbl")).select(col("id").as("doc_id"))
         val kept = base.join(keep, Seq("doc_id"), "left_semi")
         (kept, nBase - kept.count())
       }
-    val stripPins = new Pins
     val (cleaned, strippedTokens) =
       if (!stripSpans) (survivors, 0L)
       else {
-        val stripped = stripPins(TierFourteen.stripForeignSpans(survivors, stripPins))
+        val stripped = pins(TierFourteen.stripForeignSpans(survivors, pins))
         val removed = stripped.agg(sum(col("n_removed"))).head.getLong(0)
         (stripped.filter(col("clean_text") =!= "")
           .select(col("doc_id"), col("clean_text").as("text")), removed)
       }
     // EAGER localCheckpoint, not persist: the release below frees the
-    // dedup stage's checkpoint leaves, so the returned frame must not
+    // dedup stages' checkpoint leaves, so the returned frame must not
     // keep lineage through them — checkpoint blocks are MEMORY_AND_DISK
     // (spill, never recompute), making `out` self-contained
     val out = cleaned
@@ -150,13 +151,7 @@ object Prepare {
     // afterDedup counts dedup SURVIVORS; the strip stage can only drop
     // further (fully-stripped-empty docs), never add
     val afterDedup = if (stripSpans) survivors.count() else bySplit.values.sum
-    releaseDedup()
-    if (semanticDedup) { // the semantic stage's embeds/vocab caches + its
-      semPins.release()  // Components label leaf free with the dedup stage
-      org.apache.spark.sql.GraftSqlBridge.releaseLeaves(survivors)
-    }
-    stripPins.release()
-    gated.unpersist(blocking = false)
+    pins.release()
     val report = Report(input, afterGates, afterDedup,
       bySplit.getOrElse("train", 0L), bySplit.getOrElse("valid", 0L),
       bySplit.getOrElse("test", 0L), strippedTokens, semanticDropped)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** INCREMENTAL SEMANTIC (embedding-family) CLUSTER MAINTENANCE — the
@@ -44,21 +44,22 @@ object SemanticDedup {
     * (quantizer = `centroids`, e.g. [[IvfStore.train]]'s Lloyd step over
     * the corpus), detect the corpus' celled pairs against the PERSISTED
     * centroid bits, and return the initial `(vec_id, cluster)` labels —
-    * a lineage-truncated leaf (release via
-    * `GraftSqlBridge.releaseLeaves`; the [[Dedup.maintain]] finality
+    * a bare lineage-truncated leaf (drop it with
+    * `GraftSqlBridge.releaseLeaf`; the [[Dedup.maintain]] finality
     * contract). `emb` must be `(vec_id, e)` with zero vectors excluded. */
   def build(spark: SparkSession, emb: DataFrame, path: String,
       centroids: DataFrame, thr: Double): DataFrame = {
     graft.expressions.GraftFunctions.register(spark)
     IvfStore.build(spark, emb, path, centroids, mirrored = true)
     val frozen = spark.read.parquet(s"$path/centroids")
-    val labels = Components.connected(
+    val pins = new Pins
+    val labels = pins.track(Components.connected(
         emb.select(col("vec_id").as("id")),
         TierNineteen.pairsOverCents(emb, frozen, thr)
-          .select(col("doc_a").as("src"), col("doc_b").as("dst")))
+          .select(col("doc_a").as("src"), col("doc_b").as("dst"))))
       .select(col("id").as("vec_id"), col("lbl").as("cluster"))
-    val out = GraftSqlBridge.freshLeaf(labels.localCheckpoint(true))
-    GraftSqlBridge.releaseLeaves(labels)
+    val out = Pins.checkpoint(labels)
+    pins.release()
     out
   }
 
@@ -72,10 +73,11 @@ object SemanticDedup {
     *
     * The returned frame is an eager lineage-truncated leaf, materialized
     * BEFORE the absorb (the probe plan reads the store lazily;
-    * checkpointing first pins the pre-append read). The input `labels`
-    * frame is NOT consumed — only maintain's own internal leaves are
-    * released ([[GraftSqlBridge.releaseLeavesExcept]]), so a chained
-    * loop keeps or releases each round's labels itself. */
+    * checkpointing first pins the pre-append read). Neither input is
+    * consumed — maintain releases only the leaves it and
+    * [[Components.delta]] created, so a chained loop keeps or releases
+    * each round's labels itself, and the store append below still reads
+    * the batch (the ingest pipeline hands it in as a checkpoint leaf). */
   def maintain(path: String, labels: DataFrame, newVecs: DataFrame,
       thr: Double, batchId: Option[Long] = None,
       ingestId: String = "semantic_dedup"): DataFrame = {
@@ -88,15 +90,12 @@ object SemanticDedup {
     val seeded = lbl0.unionByName(
       nv.select(col("vec_id").as("id"), col("vec_id").as("lbl"))
         .join(lbl0.select("id"), Seq("id"), "left_anti"))
+    val pins = new Pins
     val updated = Components.delta(seeded,
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), pins)
       .select(col("id").as("vec_id"), col("lbl").as("cluster"))
-    val out = GraftSqlBridge.freshLeaf(updated.localCheckpoint(true))
-    // spare BOTH caller-owned inputs: labels AND newVecs can be
-    // checkpointed leaves (the ingest pipeline hands in its screened
-    // batch as one), and the store append below still reads the batch
-    GraftSqlBridge.releaseLeavesExcept(updated,
-      GraftSqlBridge.leafIds(labels) ++ GraftSqlBridge.leafIds(newVecs))
+    val out = Pins.checkpoint(updated)
+    pins.release()
     IvfStore.append(spark, path, live, batchId = batchId, ingestId = ingestId)
     out
   }

@@ -114,7 +114,8 @@ object TierFour {
     *
     * The no-arg overload leaks its four internal persists by design —
     * correct under Verify/Bench's per-query sweep. Library pipelines that
-    * must release ([[Dedup.deduplicateReleasable]]) pass their [[Pins]].
+    * must release ([[Dedup.deduplicate]]'s two-argument form) pass their
+    * [[Pins]].
     */
   def minhashPairs(t0: DataFrame): DataFrame = minhashPairs(t0, new Pins)
 

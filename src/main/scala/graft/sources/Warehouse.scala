@@ -127,17 +127,6 @@ object Warehouse {
     spark.catalog.refreshTable(table)
   }
 
-  /** Fold a parquet DIRECTORY (not a catalog table) to a single file with
-    * rows preserved exactly — the ledger-compaction discipline: every
-    * ledger-writing ingest operator ([[graft.operators.IvfStore]],
-    * [[graft.streaming.SemanticAdmit]]) appends one tiny file per
-    * micro-batch and re-reads the whole directory per replay check, so
-    * after 10⁴ batches the at-least-once guard is file-open-bound.
-    * Same swap convention as [[compactBucketed]]: materialize fully under
-    * `<dir>_cpt_tmp`, move the old directory aside, rename in, drop —
-    * a crash mid-swap strands a `_cpt_*` directory but never loses a
-    * row. No-op (false) when the directory is missing or already a
-    * single file. */
   /** True when `dir` exists on the warehouse filesystem — the narrow
     * "is there a ledger yet" probe the at-least-once replay guards need
     * (ADVICE r14: a `try read catch { _ => false }` also swallows real
@@ -149,6 +138,17 @@ object Warehouse {
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
+  /** Fold a parquet DIRECTORY (not a catalog table) to a single file with
+    * rows preserved exactly — the ledger-compaction discipline: every
+    * ledger-writing ingest operator ([[graft.operators.IvfStore]],
+    * [[graft.streaming.SemanticAdmit]]) appends one tiny file per
+    * micro-batch and re-reads the whole directory per replay check, so
+    * after 10⁴ batches the at-least-once guard is file-open-bound.
+    * Same swap convention as [[compactBucketed]]: materialize fully under
+    * `<dir>_cpt_tmp`, move the old directory aside, rename in, drop —
+    * a crash mid-swap strands a `_cpt_*` directory but never loses a
+    * row. No-op (false) when the directory is missing or already a
+    * single file. */
   def foldToOneFile(spark: SparkSession, dir: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.Bloom
-import graft.operators.{SemanticDedup, TextOps, TierFour, TierSeven}
+import graft.operators.{Pins, SemanticDedup, TextOps, TierFour, TierSeven}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -88,18 +88,18 @@ object IngestPipeline {
       @volatile private var labelsRef: DataFrame) {
 
     /** Current `(vec_id, cluster)` labels over corpus ∪ admissions —
-      * a lineage-truncated leaf; read freely, never re-execute after
-      * [[release]]. */
+      * a bare lineage-truncated leaf the handle owns; read freely, never
+      * re-execute after [[release]]. */
     def labels: DataFrame = labelsRef
 
     private[IngestPipeline] def advance(next: DataFrame): Unit = {
       val prev = labelsRef
       labelsRef = next
-      GraftSqlBridge.releaseLeaves(prev)
+      GraftSqlBridge.releaseLeaf(prev)
     }
 
     def release(): Unit = {
-      GraftSqlBridge.releaseLeaves(labelsRef)
+      GraftSqlBridge.releaseLeaf(labelsRef)
       sigStore.unpersist(blocking = false)
       vocab.unpersist(blocking = false)
     }
@@ -157,13 +157,12 @@ object IngestPipeline {
         .withColumn("simhash", TextOps.simhashCol(col("text"))),
       h.sigStore).drop("simhash")
 
-  private def leaf(df: DataFrame): DataFrame =
-    GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
-
-  // existence probe first, NO blanket catch (ADVICE r14): a transient
-  // ledger read failure must FAIL the batch so Spark retries it, not
-  // silently read as "fresh" and double-process an absorbed batch
-  private def ledgered(spark: SparkSession, outPath: String, id: Long): Boolean =
+  /** True when batch `id` is in `outPath/ledger` — the replay guard of
+    * every ledgered absorb here and in [[SemanticAdmit.absorb]].
+    * Existence probe first, NO blanket catch (ADVICE r14): a transient
+    * ledger read failure must FAIL the batch so Spark retries it, not
+    * silently read as "fresh" and double-process an absorbed batch. */
+  private[streaming] def ledgered(spark: SparkSession, outPath: String, id: Long): Boolean =
     graft.sources.Warehouse.dirExists(spark, s"$outPath/ledger") &&
       spark.read.parquet(s"$outPath/ledger")
         .filter(col("batch_id") === id).head(1).nonEmpty
@@ -191,9 +190,10 @@ object IngestPipeline {
     // the driver dies ANALYZING it long before data moves (measured:
     // 280 s of SparkPlanInfo.fromSparkPlan on a 4-row batch). Truncating
     // lineage here makes every downstream reference a shallow leaf read.
-    val gated = leaf(gate(h, batch.select("doc_id", "text")))
-    val emb = leaf(SemanticAdmit.embedOf(gated, h.vocab))
-    val admitted = leaf(screenOf(h, gated, emb))
+    val pins = new Pins
+    val gated = pins.leaf(gate(h, batch.select("doc_id", "text")))
+    val emb = pins.leaf(SemanticAdmit.embedOf(gated, h.vocab))
+    val admitted = pins.leaf(screenOf(h, gated, emb))
     batchId match {
       case Some(id) => admitted.write.mode("overwrite")
         .parquet(s"${h.outPath}/admitted/bid=$id")
@@ -206,7 +206,7 @@ object IngestPipeline {
     h.advance(SemanticDedup.maintain(h.storePath, h.labels,
       SemanticAdmit.embedsOf(admitted, emb), h.thr, batchId = batchId,
       ingestId = "ingest_pipeline"))
-    Seq(gated, emb, admitted).foreach(GraftSqlBridge.releaseLeaf)
+    pins.release()
     batchId.foreach { id =>
       spark.sql(s"SELECT CAST($id AS BIGINT) AS batch_id")
         .coalesce(1).write.mode("append").parquet(s"${h.outPath}/ledger")

@@ -103,14 +103,6 @@ object SemanticAdmit {
   private[streaming] def embedsOf(admitted: DataFrame, emb: DataFrame): DataFrame =
     emb.join(admitted.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
 
-  // existence probe first, NO blanket catch (ADVICE r14): a transient
-  // ledger read failure must FAIL the batch so Spark retries it, not
-  // silently read as "fresh" and double-admit an absorbed batch
-  private def absorbed(spark: SparkSession, outPath: String, batchId: Long): Boolean =
-    graft.sources.Warehouse.dirExists(spark, s"$outPath/ledger") &&
-      spark.read.parquet(s"$outPath/ledger")
-        .filter(col("batch_id") === batchId).head(1).nonEmpty
-
   /** One micro-batch through the screen with the replay contract
     * ([[IvfStore.append]]'s): admitted rows land under
     * `outPath/admitted/bid=<id>` (overwrite — replay-idempotent even in
@@ -123,7 +115,7 @@ object SemanticAdmit {
       outPath: String, thr: Double, batchId: Option[Long] = None,
       grow: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    if (batchId.exists(absorbed(spark, outPath, _))) return
+    if (batchId.exists(IngestPipeline.ledgered(spark, outPath, _))) return
     // with grow, the embeds serve the screen and the store absorb, so
     // they are cached; the admitted rows are read twice (write +
     // optional grow); both dropped before return
@@ -151,8 +143,9 @@ object SemanticAdmit {
 
   /** Fold the admission ledger at `outPath/ledger` to one file, rows
     * preserved exactly — [[absorb]] appends a 1-row file per micro-batch
-    * and [[absorbed]] re-reads the whole directory per batch, so a
-    * long-running ingest's replay guard becomes file-open-bound without
+    * and its replay guard ([[IngestPipeline.ledgered]]) re-reads the
+    * whole directory per batch, so a long-running ingest's replay guard
+    * becomes file-open-bound without
     * this (the [[graft.operators.IvfStore.compact]] ledger discipline;
     * VERDICT r13 #4). Safe to call between batches at any cadence;
     * replay-skip behavior is identical across a fold

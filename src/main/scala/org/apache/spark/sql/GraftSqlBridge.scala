@@ -2,10 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into `private[sql]` plan construction — the standard extension-
+/** Bridge into Spark's `private[sql]` internals — the standard extension-
   * library escape hatch (Spark offers no public "DataFrame from custom
   * LogicalPlan" API; every Catalyst-extending library ships one of these).
-  * Kept to the two one-liners the graft planner nodes need.
+  * Everything the engine reaches past the public API goes through this
+  * one file, so a Spark upgrade touches one place: plan construction
+  * ([[ofRows]], [[analyzed]]), Column ↔ Expression conversion, SQL
+  * table-function registration, and the checkpoint-leaf handling
+  * ([[freshLeaf]], [[releaseLeaf]], [[leafIds]]).
   */
 object GraftSqlBridge {
 
@@ -84,26 +88,15 @@ object GraftSqlBridge {
     * blocks are plain persisted RDDs in the block manager and otherwise
     * live until the session ends. The data is NOT recomputable afterwards
     * (lineage was truncated), so only call this on intermediates that
-    * will never be read again. No-op for non-LogicalRDD plans. */
-  def releaseLeaf(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
-    case _ => ()
+    * will never be read again. No-op, returning false, for a frame that
+    * is not a bare LogicalRDD leaf. */
+  def releaseLeaf(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false); true
+    case _ => false
   }
 
-  /** [[releaseLeaf]] for COMPOSED plans: drop the blocks behind every
-    * LogicalRDD leaf anywhere in the plan tree — the release-handle shape
-    * for library pipelines whose lineage bottoms out in localCheckpoint
-    * leaves wrapped by further operators ([[graft.operators.Dedup]]'s
-    * labels semi-join). Same finality contract as [[releaseLeaf]]: the
-    * plan cannot be re-executed afterwards. */
-  def releaseLeaves(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
-
-  /** The RDD ids behind a plan's LogicalRDD leaves — the exclusion set
-    * for [[releaseLeavesExcept]]. */
+  /** The RDD ids behind a plan's LogicalRDD leaves — what a spec checks
+    * against the block manager to see which checkpoints are still live. */
   def leafIds(df: DataFrame): Set[Int] = {
     val b = Set.newBuilder[Int]
     df.queryExecution.analyzed.foreach {
@@ -112,18 +105,4 @@ object GraftSqlBridge {
     }
     b.result()
   }
-
-  /** [[releaseLeaves]] that spares the leaves in `keep` — for composed
-    * pipelines whose plan embeds a CALLER-OWNED checkpointed input (e.g.
-    * [[graft.operators.Dedup.maintain]]'s labels frame in a chained
-    * ingest loop): releasing the whole tree would destroy the caller's
-    * frame (lineage truncated ⇒ unrecoverable). Capture the input's ids
-    * with [[leafIds]] BEFORE building the composed plan, release with
-    * this afterwards. */
-  def releaseLeavesExcept(df: DataFrame, keep: Set[Int]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD if !keep(lr.rdd.id) =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Components
+import graft.operators.{Components, Pins}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -213,7 +213,8 @@ class ComponentsSpec extends SparkSpec {
     // a duplicate of an existing edge, and an intra-cluster no-op (1–3)
     val d1 = Seq((3L, 5L), (7L, 8L), (11L, 12L), (9L, 9L), (1L, 2L), (1L, 3L))
       .toDF("src", "dst")
-    val inc1 = Components.delta(lbl0, d1)
+    val pins = new Pins // records every delta leaf of the directed cases
+    val inc1 = Components.delta(lbl0, d1, pins)
     val full1 = Components.connected(
       spark.range(1L, 13L).select(col("id")), base.unionAll(d1))
     val gotInc1 = inc1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -224,14 +225,14 @@ class ComponentsSpec extends SparkSpec {
     // second fold CHAINS through the first (6 joined cluster 1 via the
     // first delta; now 12 joins through 6) — folds compose
     val d2 = Seq((6L, 12L)).toDF("src", "dst")
-    val inc2 = Components.delta(inc1, d2)
+    val inc2 = Components.delta(inc1, d2, pins)
     val full2 = Components.connected(
       spark.range(1L, 13L).select(col("id")), base.unionAll(d1).unionAll(d2))
     assert(inc2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == full2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
       "chained delta folds must keep matching the full recompute")
-    Seq(lbl0, inc1, full1, inc2, full2)
-      .foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaves(_))
+    pins.release()
+    Seq(lbl0, full1, full2).foreach(GraftSqlBridge.releaseLeaf)
     // randomized: 60 nodes, 90 edges in three batches, fold twice
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
@@ -242,16 +243,17 @@ class ComponentsSpec extends SparkSpec {
       val (b0, rest) = edges.splitAt(30)
       val (b1, b2) = rest.splitAt(30)
       val n = spark.range(1L, 61L).select(col("id"))
+      val pins = new Pins
       val folded = Components.delta(
-        Components.delta(Components.connected(n, b0.toDF("src", "dst")),
-          b1.toDF("src", "dst")),
-        b2.toDF("src", "dst"))
+        Components.delta(pins.track(Components.connected(n, b0.toDF("src", "dst"))),
+          b1.toDF("src", "dst"), pins),
+        b2.toDF("src", "dst"), pins)
       val full = Components.connected(n, edges.toDF("src", "dst"))
       assert(folded.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         == full.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
         s"seed $seed: two chained folds diverged from the full recompute")
-      Seq(folded, full)
-        .foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaves(_))
+      pins.release()
+      GraftSqlBridge.releaseLeaf(full)
     }
   }
 
@@ -269,8 +271,9 @@ class ComponentsSpec extends SparkSpec {
       val edges = spark.sparkContext.parallelize(d, 4).toDF("src", "dst")
         .localCheckpoint(true)
       val callerLeaves = GraftSqlBridge.leafIds(lbl0) ++ GraftSqlBridge.leafIds(edges)
+      val pins = new Pins
       val (got, jobs) = withConnectedJobs {
-        val out = Components.delta(lbl0, edges)
+        val out = Components.delta(lbl0, edges, pins)
         (out, labelMap(out))
       }
       if (shortCircuit)
@@ -281,8 +284,9 @@ class ComponentsSpec extends SparkSpec {
         base.unionAll(d.toDF("src", "dst")))
       assert(got._2 == labelMap(full), s"$name: must equal the full recompute")
       assert(callerLeaves.subsetOf(pinned), s"$name: delta dropped a caller-owned leaf")
-      GraftSqlBridge.releaseLeavesExcept(got._1, GraftSqlBridge.leafIds(lbl0))
-      GraftSqlBridge.releaseLeaves(full)
+      pins.release()
+      assert(callerLeaves.subsetOf(pinned), s"$name: pins.release() dropped a caller-owned leaf")
+      GraftSqlBridge.releaseLeaf(full)
       GraftSqlBridge.releaseLeaf(edges)
     }
     check("ΔE = ∅", Seq.empty, before, shortCircuit = true)
@@ -291,14 +295,15 @@ class ComponentsSpec extends SparkSpec {
     check("ΔE ⊆ clusters", Seq((1L, 3L), (2L, 1L), (6L, 5L), (4L, 4L), (11L, 11L)),
       before + (11L -> 11L), shortCircuit = false)
     // control: a merging edge does reach connected (the detector is live)
-    val ((merged, mergedMap), jobs) = withConnectedJobs {
-      val out = Components.delta(lbl0, Seq((3L, 5L)).toDF("src", "dst"))
+    val pins = new Pins
+    val ((_, mergedMap), jobs) = withConnectedJobs {
+      val out = Components.delta(lbl0, Seq((3L, 5L)).toDF("src", "dst"), pins)
       (out, labelMap(out))
     }
     assert(jobs > 0, "a merging delta must run the super-solve")
     assert(mergedMap(6L) == 1L && mergedMap(4L) == 4L)
-    GraftSqlBridge.releaseLeavesExcept(merged, GraftSqlBridge.leafIds(lbl0))
-    GraftSqlBridge.releaseLeaves(lbl0)
+    pins.release()
+    GraftSqlBridge.releaseLeaf(lbl0)
   }
 
   test("pre-contraction node cap: labels identical below and above a partition's node count") {

@@ -27,17 +27,18 @@ class DedupMaintainSpec extends SparkSpec {
     assert(unseen.isEmpty, "fixture invariant: corpus covers the vocabulary")
     val name = SigIndex.scratchName(spark, "maintain_spec")
     SigIndex.build(corpus, name)
-    val labels0 = Components.connected(
+    val leaf0 = Components.connected(
         corpus.select(col("doc_id").as("id")),
         TierFour.minhashPairs(TextOps.tokOf(corpus))
           .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-      .select(col("id").as("doc_id"), col("lbl").as("cluster"))
+    val labels0 = leaf0.select(col("id").as("doc_id"), col("lbl").as("cluster"))
     val m1 = Dedup.maintain(name, labels0, b1)
     val m1Rows = m1.count()
     val m2 = Dedup.maintain(name, m1, b2)
     // maintain must NOT consume its input: m1 is a checkpointed leaf fed
     // into the second call, and the internal release must spare it
-    // (ADVICE r13 — releaseLeavesExcept) so the caller can still read it
+    // (ADVICE r13 — maintain releases only the leaves it created) so the
+    // caller can still read it
     assert(m1.count() == m1Rows,
       "the previous round's labels must survive the next maintain")
     val got = m2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -53,8 +54,8 @@ class DedupMaintainSpec extends SparkSpec {
     assert(b1.collect().map(_.getLong(0)).exists(id => got(id) != id) ||
       b2.collect().map(_.getLong(0)).exists(id => got(id) != id),
       "fixture must attach at least one batch doc to an existing cluster")
-    Seq(labels0, m1, m2, fullLabels)
-      .foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaves(_))
+    Seq(leaf0, m1, m2, fullLabels)
+      .foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaf)
     spark.catalog.clearCache()
   }
 }

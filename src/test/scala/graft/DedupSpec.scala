@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Dedup, TierFour, TierThree}
+import graft.operators.{Dedup, Pins, TierFour, TierThree}
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 
 /** The Dedup library facade against pure-Scala recomputation: exact stage
@@ -86,16 +87,39 @@ class DedupSpec extends SparkSpec {
       s"deduplicate must release everything it pinned after its first execution; still pinned: $left")
   }
 
-  test("deduplicateReleasable's handle drops the pinned cache (VERDICT r5 nit)") {
+  test("deduplicate(docs, pins): pins.release() drops the pinned cache (VERDICT r5 nit)") {
     val docs = Tables.load(spark, sf, "documents")
     val before = pinnedIds
-    val (out, release) = Dedup.deduplicateReleasable(docs)
+    val pins = new Pins
+    val out = Dedup.deduplicate(docs, pins)
     out.count() // materialize — the pipeline pins its survivor cache
     val mine = pinnedIds -- before
     assert(mine.nonEmpty, "pipeline should have pinned at least the survivor cache")
-    release()
+    pins.release()
     val left = awaitReleased(mine)
     assert(left.isEmpty,
       s"release handle must drop everything the pipeline pinned; still pinned: $left")
+  }
+
+  test("both release forms spare the caller's checkpointed documents leaf") {
+    // a test-owned checkpoint leaf: the pipeline's plan embeds it, and a
+    // release that walked that plan dropped its blocks (the caller's next
+    // read then failed with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    val docs = Tables.load(spark, sf, "documents").localCheckpoint(true)
+    val n = docs.count()
+    val leaf = GraftSqlBridge.leafIds(docs)
+    def intact(form: String): Unit = {
+      assert(leaf.subsetOf(pinnedIds), s"$form dropped the caller's documents leaf")
+      assert(docs.count() == n, s"$form: the caller's frame must still read")
+    }
+    val before = pinnedIds
+    Dedup.deduplicate(docs).count() // the single-shot release fires here
+    awaitReleased(pinnedIds -- before)
+    intact("deduplicate(docs)")
+    val pins = new Pins
+    Dedup.deduplicate(docs, pins).count()
+    pins.release()
+    intact("deduplicate(docs, pins) + pins.release()")
+    GraftSqlBridge.releaseLeaf(docs)
   }
 }

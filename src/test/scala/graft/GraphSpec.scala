@@ -294,6 +294,40 @@ class GraphSpec extends SparkSpec {
     assert(left.isEmpty, s"first SUCCESS must release the engine's pins; still pinned: $left")
   }
 
+  test("auto-release ignores completion events of the engine's own actions delivered late") {
+    // hold every SQL-execution end event back until the frame is returned:
+    // sssp's last fixpoint probe reads its final leaf, and a listener
+    // matching that leaf saw the probe's late event as the caller's first
+    // execution — the release fired before any read
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val delivered = new java.util.concurrent.atomic.AtomicLong()
+    val hold = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionEnd =>
+          gate.await(30, java.util.concurrent.TimeUnit.SECONDS)
+          delivered.incrementAndGet()
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(hold)
+    val before = pinnedIds
+    val out = try {
+      val ed = Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 4L, 1L), (4L, 2L, 1L))
+        .toDF("src", "dst", "w")
+      Graph.sssp(ed, Seq(1L).toDF("nid"), maxRounds = 10).once
+    } finally gate.countDown()
+    // drain the held-back events before the first read
+    var seen = -1L
+    while (seen != delivered.get()) { seen = delivered.get(); Thread.sleep(500) }
+    spark.sparkContext.removeSparkListener(hold)
+    val dist = out.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(dist == Map(1L -> 0L, 2L -> 3L, 3L -> 1L, 4L -> 2L))
+    val left = awaitReleased(pinnedIds -- before)
+    assert(left.isEmpty, s"the first read must fire the release; still pinned: $left")
+  }
+
   test("Release.sweep drains built-but-never-executed auto-release frames (round-9 ADVICE)") {
     Release.sweep(spark) // drain leftovers from earlier tests for a clean gauge
     val before = pinnedIds

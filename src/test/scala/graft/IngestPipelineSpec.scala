@@ -319,7 +319,7 @@ class IngestPipelineSpec extends SparkSpec {
     pairs.foreach { case ((a, _), (b, _)) =>
       assert(got(a) == got(b), s"twins $a, $b must share a cluster")
     }
-    GraftSqlBridge.releaseLeaves(full)
+    GraftSqlBridge.releaseLeaf(full)
     h.release()
     Cumulative.releaseAll()
   }

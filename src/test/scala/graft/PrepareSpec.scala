@@ -165,4 +165,20 @@ class PrepareSpec extends SparkSpec {
     assert(out2.select("doc_id", "split").collect().map(x => (x.getLong(0), x.getString(1))).sortBy(_._1).toSeq ==
       out.select("doc_id", "split").collect().map(x => (x.getLong(0), x.getString(1))).sortBy(_._1).toSeq)
   }
+
+  test("semanticDedup spares the caller's checkpointed documents leaf") {
+    // the dedup and semantic stages' plans embed the caller's input; a
+    // release that walked them dropped this leaf's blocks (the caller's
+    // next read then failed with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
+      .localCheckpoint(true)
+    val n = docs.count()
+    val leaf = org.apache.spark.sql.GraftSqlBridge.leafIds(docs)
+    val (out, _) = Prepare.corpus(docs, semanticDedup = true)
+    assert(leaf.subsetOf(spark.sparkContext.getPersistentRDDs.keySet.toSet),
+      "Prepare.corpus dropped the caller's documents leaf")
+    assert(docs.count() == n, "the caller's frame must still read")
+    Seq(out, docs).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaf)
+    graft.operators.Cumulative.releaseAll()
+  }
 }

@@ -58,8 +58,8 @@ class SemanticMaintainSpec extends SparkSpec {
     val zb = Seq((zeroId, Seq.fill(dim)(0.0))).toDF("vec_id", "e")
     val m2 = SemanticDedup.maintain(path, m1, b2.unionByName(zb), Thr,
       batchId = Some(1L))
-    // maintain must NOT consume its input (the releaseLeavesExcept
-    // contract shared with Dedup.maintain)
+    // maintain must NOT consume its input (it releases only the leaves
+    // it created — the contract shared with Dedup.maintain)
     assert(m1.count() == m1Rows,
       "the previous round's labels must survive the next maintain")
 
@@ -91,7 +91,7 @@ class SemanticMaintainSpec extends SparkSpec {
       "zero vectors must not enter the store")
 
     Seq(labels0, m1, m2, m3, oneShotLabels)
-      .foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaves(_))
+      .foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaf)
     spark.catalog.clearCache()
   }
 
