@@ -43,9 +43,7 @@ object Bench {
     val sharedMode = sys.env.getOrElse("SPARK_GRAFT_SHARED", "1") != "0"
 
     // queries persist() small shared intermediates; drop them so a timed
-    // plan never reads an earlier pass's cache (releaseAll also clears the
-    // rank-cache registry's references, which clearCache alone leaves
-    // growing for the session lifetime). clearCache only empties the SQL
+    // plan never reads an earlier pass's cache. clearCache only empties the SQL
     // cache manager — localCheckpoint blocks (Components' per-round
     // truncation) are plain persisted RDDs in the block manager; drop
     // those too or they accumulate across the suite's 3 passes. The
@@ -55,7 +53,6 @@ object Bench {
     // timed queries absorb the cleanup + memory pressure of earlier ones
     // (measured: q23 2.96 s solo vs 9.28 s late in the full suite).
     def deepClean(): Unit = {
-      graft.operators.Cumulative.releaseAll()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       System.gc()
@@ -78,10 +75,9 @@ object Bench {
 
     // face timing: keep the shared handle's blocks (`keep`) warm — that
     // is the point of the sweep — but drop everything ELSE (the previous
-    // face's own pinned intermediates, rank caches, checkpoint leaves)
-    // so each face still starts cold on its own work
+    // face's own pinned intermediates and checkpoint leaves) so each face
+    // still starts cold on its own work
     def execFace(name: String, keep: Set[Int])(plan: => DataFrame): Double = {
-      graft.operators.Cumulative.releaseAll()
       spark.sparkContext.getPersistentRDDs
         .foreach { case (id, rdd) => if (!keep(id)) rdd.unpersist(blocking = false) }
       System.gc()

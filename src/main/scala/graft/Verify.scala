@@ -21,11 +21,10 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Some(s"$name (${e.getClass.getName})")
         }
-      // the result is on disk — drop EVERYTHING this query pinned (rank
-      // caches, persisted intermediates, Components' localCheckpoint
-      // blocks) so a 59-query session doesn't accumulate memory/disk
-      // pressure; same hygiene as Bench's per-query sweep
-      operators.Cumulative.releaseAll()
+      // the result is on disk — drop EVERYTHING this query pinned
+      // (persisted intermediates, Components' localCheckpoint blocks) so
+      // a 290-query session doesn't accumulate memory/disk pressure; same
+      // hygiene as Bench's per-query sweep
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       failure

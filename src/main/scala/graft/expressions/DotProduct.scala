@@ -77,7 +77,8 @@ case class DotProduct(left: Expression, right: Expression)
   * expressions, sketch probes, and whole-plan table functions). Idempotent;
   * query functions call this so `call_function("graft_dot", …)` / SQL
   * `graft_dot(a, b)` / `SELECT … FROM graft_simhash_pairs('v')` resolve in
-  * any session. Only names the session lacks are registered, so a session
+  * any session, and the whole-operator plans ([[graft.plans.GraftPlans]])
+  * plan natively in it. Only names the session lacks are registered, so a session
   * built with [[GraftExtensions]] and repeated calls (the ingest path makes
   * several per batch) keep the existing registrations and log nothing.
   */
@@ -92,6 +93,7 @@ object GraftFunctions {
       if (org.apache.spark.sql.GraftSqlBridge.tableFunctionInfo(spark, name).isEmpty)
         org.apache.spark.sql.GraftSqlBridge.registerTableFunction(spark, name, builder)
     }
+    graft.plans.GraftPlans.ensure(spark)
   }
 }
 
@@ -117,9 +119,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
           classOf[SqlSurface.type].getName, name),
         builder))
     }
-    // whole-operator extension: plans graft.plans.AsOfJoin natively, and
-    // prunes columns through it (custom nodes are optimizer barriers)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.PruneAsOfJoinColumns)
+    // whole-operator extensions: the native AsOfJoin and PrefixScan
+    // plans, and column pruning through AsOfJoin
+    graft.plans.GraftPlans.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    graft.plans.GraftPlans.optimizations.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

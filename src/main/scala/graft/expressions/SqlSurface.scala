@@ -426,10 +426,10 @@ object SqlSurface {
       "graft_running_max(table STRING, sort_cols STRING, value STRING" +
         "[, out STRING[, exclusive INT]]) - scale-safe running maximum of" +
         " `value` over the total order given by the comma-separated" +
-        " `sort_cols` (Cumulative.runningMax: two-pass distributed prefix" +
-        " max — range partition, per-partition fold, broadcast carry-ins;" +
-        " no SinglePartition window). exclusive=1 reports the PRE-row" +
-        " high-water mark (Long.MinValue identity on the first row, so" +
+        " `sort_cols` (Cumulative.runningMax: one PrefixScan plan node —" +
+        " range partition, per-partition max, each partition's carry-in" +
+        " from the earlier ones; no SinglePartition window). exclusive=1" +
+        " reports the PRE-row high-water mark (Long.MinValue identity on the first row, so" +
         " `value > out` is the q164 record test)",
       exprs => {
         arity("graft_running_max", exprs, 3, 4, 5)

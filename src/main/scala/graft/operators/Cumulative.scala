@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import graft.plans.PrefixScan
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,15 +10,13 @@ import org.apache.spark.sql.types._
   *
   * `row_number()/count(*) OVER (ORDER BY …)` forces every row through ONE
   * task (Spark warns "No Partition Defined for Window operation"); fine at
-  * sf0.1, impossible at 100 TB. The scalable shape is the classic two-pass
-  * prefix sum:
-  *   1. range-partition + sort by the total order (shuffle, parallel);
-  *      persist so the sampled range boundaries are pinned across jobs —
-  *      re-executing `repartitionByRange` resamples and would misalign the
-  *      offset pass with the data pass;
-  *   2. count rows per partition (a metadata-sized job: ≤ #partitions
-  *      numbers to the driver — the same scale of driver traffic AQE uses);
-  *   3. per-partition scan adds (exclusive prefix offset + local index).
+  * sf0.1, impossible at 100 TB. Each function here is one lazy
+  * [[graft.plans.PrefixScan]] plan node — the classic two-pass prefix scan:
+  * range-partition + sort by the total order, one summary per partition
+  * (≤ #partitions numbers to the driver), then a per-partition scan from
+  * each partition's carry-in. Building a frame runs no job; every
+  * execution re-runs its shuffle and keeps nothing, so a caller that reads
+  * one result from several actions or branches persists it.
   *
   * Output is identical to the window-function formulation by construction
   * (provided the sort key is a total order); [[graft.CumulativeSpec]] pins
@@ -31,129 +27,31 @@ import org.apache.spark.sql.types._
   */
 object Cumulative {
 
-  /** Caches pinned by [[rowNumber]] (the range-partitioned copies whose
-    * sampled boundaries must stay stable while downstream plans execute).
-    * They cannot be dropped inside rowNumber — unpersisting would let a
-    * re-execution RESAMPLE the range boundaries and misalign the offset
-    * pass — so a long-lived session releases them BETWEEN queries via
-    * [[releaseAll]] (Verify does, after each result is materialized;
-    * Bench's per-query clearCache covers it too). */
-  private val retained = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Drop every cache pinned by [[rowNumber]] since the last call. ONLY
-    * safe once all downstream results of those rank plans are
-    * materialized: re-executing a released rank plan would RESAMPLE the
-    * range boundaries under its already-fixed offset array — build a
-    * fresh rank (rowNumber again) instead of re-running a released one. */
-  def releaseAll(): Unit = retained.synchronized {
-    retained.foreach(_.unpersist(blocking = false))
-    retained.clear()
-  }
+  /** No-op: the rank frames hold no state between executions. Kept for
+    * callers of the retired rank-cache registry this call used to drop. */
+  def releaseAll(): Unit = ()
 
   /** Append `outName` = 1-based BIGINT `row_number()` over the given TOTAL
     * order (duplicate sort keys would make the assignment within the tie
     * nondeterministic — callers pass a key that is unique by construction).
-    * No single-partition stage anywhere in the plan.
-    *
-    * Ownership contract: `df` must NOT be externally persisted — this
-    * method temporarily caches it (so range sampling doesn't re-execute
-    * the lineage) and drops that cache once the partitioned copy is
-    * materialized; on an already-cached input the unpersist would evict
-    * the caller's cache.
     */
   def rowNumber(spark: SparkSession, df: DataFrame, sortCols: Seq[Column],
-      outName: String, partitions: Int = 0, pins: Option[Pins] = None): DataFrame = {
-    val p = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // repartitionByRange SAMPLES its input to pick boundaries, then the
-    // shuffle reads it again — persist so an expensive lineage (for the
-    // vocab: corpus tokenize + distinct) executes once, not twice
-    val in = df.persist()
-    val parted = in
-      .repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist() // pin sampled range boundaries across the two passes
-    // a pipeline that owns its release (Dedup's handle) tracks the
-    // boundary cache in ITS pins; otherwise the session-global registry
-    // holds it until the next releaseAll() sweep
-    pins match {
-      case Some(ps) => ps.track(parted)
-      case None     => retained.synchronized { retained += parted }
-    }
-    val perPartition = parted
-      .groupBy(spark_partition_id().as("pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // parted's cache is materialized by the count above; the pre-shuffle
-    // lineage cache has served its purpose (sampling + shuffle read) — drop
-    // it so long sessions (Verify runs 50 queries) don't pin both copies
-    in.unpersist()
-    val offsets = (0 until p).scanLeft(0L) {
-      case (acc, pid) => acc + perPartition.getOrElse(pid, 0L)
-    }.toArray // exclusive prefix: offsets(pid) = rows before partition pid
-    val outSchema = StructType(df.schema.fields :+ StructField(outName, LongType))
-    // mapPartitionsWithIndex on the RDD, NOT Dataset.mapPartitions +
-    // TaskContext.getPartitionId(): a narrow downstream chain (broadcast
-    // join → union) fuses this map into a stage whose task indices are
-    // the UNION's partition numbering, so TaskContext reports an id ≥ p
-    // for the second union leg (measured: ArrayIndexOutOfBounds in the
-    // q281 face). The RDD partition index is structural and survives any
-    // downstream plan shape.
-    spark.createDataFrame(
-      parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val base = offsets(pid)
-        var i = 0L
-        it.map { r =>
-          i += 1
-          Row.fromSeq(r.toSeq :+ (base + i))
-        }
-      }, outSchema)
-  }
+      outName: String, partitions: Int = 0): DataFrame =
+    PrefixScan.of(df, sortCols, PrefixScan.Sum, None, outName, partitions)
 
   /** Append `outName` = INCLUSIVE BIGINT running MAX of `value` over the
-    * given TOTAL order — `max(value) OVER (ORDER BY …)` without the
-    * single-partition window: the [[runningSum]] two-pass shape with
-    * per-partition MAXES as the offset array (prefix max instead of
-    * prefix sum — max is just as associative). `value` must be integral
-    * and non-null. `exclusive = true` reports the max over STRICTLY
-    * EARLIER rows instead (`… ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-    * PRECEDING`) — Long.MinValue on the global first row, the form a
+    * given TOTAL order — `max(value) OVER (ORDER BY …)`. `value` must be
+    * integral and non-null. `exclusive = true` reports the max over
+    * STRICTLY EARLIER rows instead (`… ROWS BETWEEN UNBOUNDED PRECEDING AND
+    * 1 PRECEDING`) — Long.MinValue on the global first row, the form a
     * record-breaking test (`value > excl_hwm`) wants.
     */
   def runningMax(spark: SparkSession, df: DataFrame, sortCols: Seq[Column],
       value: Column, outName: String, partitions: Int = 0,
       exclusive: Boolean = false): DataFrame = {
-    val p = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val resolved = df.select(value.as("__rm_probe")).schema.head.dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(resolved),
-      s"runningMax value must be integral, got ${resolved.catalogString}")
-    val in = df.withColumn("__rm_v", value.cast(LongType)).persist()
-    val parted = in
-      .repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist()
-    retained.synchronized { retained += parted }
-    val perPartition = parted
-      .groupBy(spark_partition_id().as("pid"))
-      .agg(max(col("__rm_v")).as("m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    in.unpersist()
-    // exclusive prefix max: offsets(pid) = max over all earlier partitions
-    val offsets = (0 until p).scanLeft(Long.MinValue) {
-      case (acc, pid) => math.max(acc, perPartition.getOrElse(pid, Long.MinValue))
-    }.toArray
-    val outSchema = StructType(in.schema.fields :+ StructField(outName, LongType))
-    // RDD partition index, not TaskContext — see rowNumber's union hazard
-    spark.createDataFrame(
-      parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var acc = offsets(pid)
-        val vIdx = outSchema.fieldIndex("__rm_v")
-        it.map { r =>
-          val before = acc
-          acc = math.max(acc, r.getLong(vIdx))
-          Row.fromSeq(r.toSeq :+ (if (exclusive) before else acc))
-        }
-      }, outSchema).drop("__rm_v")
+    requireIntegral(df, value, "runningMax value must be integral")
+    PrefixScan.of(df, sortCols, PrefixScan.Max(exclusive), Some(value.cast(LongType)),
+      outName, partitions)
   }
 
   /** Cumulative count over the total order (ts, event_id); returns
@@ -163,116 +61,39 @@ object Cumulative {
       Seq(col("ts"), col("event_id")), "running_cnt", partitions)
 
   /** Append `outName` = the NEXT row's `value` under the given TOTAL
-    * order — `lead(value) OVER (ORDER BY …)` without the single-partition
-    * window, NULL on the global last row. Same two-pass shape as
-    * [[rowNumber]]: range-partition + sort, then ONE bounded driver read
-    * (each partition's FIRST value — ≤ #partitions longs) stitches the
-    * partition boundaries, and a per-partition scan with one-row
-    * lookahead emits the lead. `value` must be integral (the neighbor
-    * arithmetic consumers do — value gaps, interval widths — is exact
-    * Int64); same ownership/release contract as [[rowNumber]].
+    * order — `lead(value) OVER (ORDER BY …)`, NULL on the global last row.
+    * Each partition's FIRST value stitches the boundaries: a partition's
+    * last row reads the first value of the next non-empty partition.
+    * `value` must be integral and non-null (the neighbor arithmetic
+    * consumers do — value gaps, interval widths — is exact Int64).
     */
   def leadValue(spark: SparkSession, df: DataFrame, sortCols: Seq[Column],
       value: Column, outName: String, partitions: Int = 0): DataFrame = {
-    val p = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val resolved = df.select(value.as("__ld_probe")).schema.head.dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(resolved),
-      s"leadValue value must be integral, got ${resolved.catalogString}")
-    val in = df.withColumn("__ld_v", value.cast(LongType)).persist()
-    val parted = in
-      .repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist() // pin sampled range boundaries across the two passes
-    retained.synchronized { retained += parted }
-    // first sorted value per non-empty partition — bounded driver read
-    val vIdxIn = parted.schema.fieldIndex("__ld_v")
-    implicit val firstEnc: Encoder[(Int, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaInt,
-        org.apache.spark.sql.Encoders.scalaLong)
-    val firsts = parted.mapPartitions { it =>
-      if (it.hasNext) Iterator.single(
-        (TaskContext.getPartitionId(), it.next().getLong(vIdxIn)))
-      else Iterator.empty
-    }.collect().toMap
-    in.unpersist()
-    // boundary lead for partition pid = the first value of the next
-    // NON-EMPTY partition (range partitions can be empty on skewed keys)
-    val boundary: Array[Option[Long]] = Array.tabulate(p) { pid =>
-      ((pid + 1) until p).collectFirst {
-        case q if firsts.contains(q) => firsts(q)
-      }
-    }
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outName, LongType, nullable = true))
-    // RDD partition index, not TaskContext — see rowNumber's union hazard
-    spark.createDataFrame(
-      parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val bnd: Any = boundary(pid).map(Long.box).orNull
-        new Iterator[Row] {
-          private var cur: Row = if (it.hasNext) it.next() else null
-          def hasNext: Boolean = cur != null
-          def next(): Row = {
-            val nxt: Row = if (it.hasNext) it.next() else null
-            val lead: Any = if (nxt != null) Long.box(nxt.getLong(vIdxIn)) else bnd
-            // drop the internal __ld_v column (last), append the lead
-            val out = Row.fromSeq(cur.toSeq.dropRight(1) :+ lead)
-            cur = nxt
-            out
-          }
-        }
-      }, outSchema)
+    requireIntegral(df, value, "leadValue value must be integral")
+    PrefixScan.of(df, sortCols, PrefixScan.Lead, Some(value.cast(LongType)),
+      outName, partitions)
   }
 
   /** Append `outName` = INCLUSIVE BIGINT running sum of `value` over the
-    * given TOTAL order — `sum(value) OVER (ORDER BY …)` without the
-    * single-partition window: the same two-pass shape as [[rowNumber]],
-    * with per-partition SUMS as the offset array (still ≤ #partitions longs
-    * to the driver). `value` must be integral (cast upstream — float
-    * accumulation order would change the answer); a NULL value counts as 0
-    * — the one deviation from the window form, which emits NULL cum until
-    * the first non-null (an NPE here would otherwise surface on the
-    * executor mid-scan); same ownership contract
-    * and [[releaseAll]] cache discipline as [[rowNumber]]. CumulativeSpec
+    * given TOTAL order — `sum(value) OVER (ORDER BY …)`. `value` must be
+    * integral (cast upstream — float accumulation order would change the
+    * answer); a NULL value counts as 0 — the one deviation from the window
+    * form, which emits NULL cum until the first non-null. CumulativeSpec
     * pins row-for-row equality with the window form on non-null values.
     */
   def runningSum(spark: SparkSession, df: DataFrame, sortCols: Seq[Column],
       value: Column, outName: String, partitions: Int = 0): DataFrame = {
-    val p = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // enforce the integral contract: a DOUBLE value would silently
-    // truncate toward zero through the cast and produce a
-    // plausible-but-wrong prefix sum — resolve the column's type against
-    // this frame and fail loudly instead
-    val resolved = df.select(value.as("__rs_probe")).schema.head.dataType
+    // a DOUBLE value would silently truncate toward zero through the cast
+    // and produce a plausible-but-wrong prefix sum — fail loudly instead
+    requireIntegral(df, value, "runningSum value must be integral (cast upstream — " +
+      "float accumulation order would change the answer)")
+    PrefixScan.of(df, sortCols, PrefixScan.Sum,
+      Some(coalesce(value.cast(LongType), lit(0L))), outName, partitions)
+  }
+
+  private def requireIntegral(df: DataFrame, value: Column, what: String): Unit = {
+    val resolved = df.select(value).schema.head.dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(resolved),
-      s"runningSum value must be integral (cast upstream — float accumulation " +
-        s"order would change the answer), got ${resolved.catalogString}")
-    val in = df.withColumn("__rs_v", coalesce(value.cast(LongType), lit(0L))).persist()
-    val parted = in
-      .repartitionByRange(p, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist() // pin sampled range boundaries across the two passes
-    retained.synchronized { retained += parted }
-    val perPartition = parted
-      .groupBy(spark_partition_id().as("pid"))
-      .agg(sum(col("__rs_v")).as("s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    in.unpersist()
-    val offsets = (0 until p).scanLeft(0L) {
-      case (acc, pid) => acc + perPartition.getOrElse(pid, 0L)
-    }.toArray
-    val outSchema = StructType(in.schema.fields :+ StructField(outName, LongType))
-    // RDD partition index, not TaskContext — see rowNumber's union hazard
-    spark.createDataFrame(
-      parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var acc = offsets(pid)
-        val vIdx = outSchema.fieldIndex("__rs_v")
-        it.map { r =>
-          acc += r.getLong(vIdx)
-          Row.fromSeq(r.toSeq :+ acc)
-        }
-      }, outSchema).drop("__rs_v")
+      s"$what, got ${resolved.catalogString}")
   }
 }

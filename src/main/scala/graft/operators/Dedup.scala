@@ -134,9 +134,9 @@ object Dedup {
   }
 
   /** Build the shared [[Artifacts]] over any `(doc_id, text, source …)`
-    * frame. All three members are persisted through one internal [[Pins]]
-    * (threaded into the detector and the vocab-rank caches too — the
-    * round-7 leak class stays closed structurally). */
+    * frame. All three members, the token relation and the vocabulary are
+    * persisted through one internal [[Pins]] (threaded into the detector
+    * too — the round-7 leak class stays closed structurally). */
   def artifacts(docs: DataFrame): Artifacts = {
     val pins = new Pins
     // ONE corpus tokenize + vocabulary rank feeds both the detector and
@@ -144,7 +144,7 @@ object Dedup {
     // dictionary independently; DedupArtifactsSpec pins both members
     // against their self-training twins bit for bit)
     val t = pins(TextOps.tokOf(docs.select("doc_id", "text")))
-    val v = TextOps.vocab(t, Some(pins))
+    val v = pins(TextOps.vocab(t)) // the detector's dispatch count, its tokid join, the scores
     // the pin holds the UNSORTED detector relation; no consumer of the
     // shared handle needs q26's global (doc_a, doc_b) range-sort, so the
     // build never computes it — `pairs` stays available as a sort view
@@ -154,7 +154,7 @@ object Dedup {
         docs.select(col("doc_id").as("id")),
         pairsU.select(col("doc_a").as("src"), col("doc_b").as("dst"))))
       .select(col("id").as("doc_id"), col("lbl").as("cluster")))
-    val scores = pins(TierEleven.classifierScoresOf(docs, Some(pins), Some(v)))
+    val scores = pins(TierEleven.classifierScoresOf(docs, Some(v)))
     Artifacts(pairsU.orderBy("doc_a", "doc_b"), labels, scores,
       () => pins.release(), pairsUnsorted = pairsU)
   }

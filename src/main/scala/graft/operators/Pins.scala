@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.storage.StorageLevel
 
 /** Owns the state a composed pipeline creates — its `persist()`s AND its
   * eager checkpoint leaves — so one [[release]] drops all of it. The code
@@ -16,15 +17,21 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
   * Verify/Bench don't need it (their per-query sweep unpersists
   * everything), so the convenience entry points default to a throwaway
   * collector.
+  *
+  * Spark keeps ONE cache entry for plans that compute the same result;
+  * only the `Pins` whose `persist()` created an entry drops it. When that
+  * creator releases first, another pipeline reading the same entry
+  * recomputes its input: slower, never wrong.
   */
 final class Pins {
   private val drops = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
-  /** Persist `df` and remember it for [[release]], which unpersists it —
-    * never drops blocks, so persisting a caller's checkpointed frame
-    * leaves that frame intact. */
+  /** Persist `df`; if this call created the cache entry, remember it for
+    * [[release]], which unpersists it — never drops blocks, so persisting
+    * a caller's checkpointed frame leaves that frame intact. */
   def apply(df: DataFrame): DataFrame = {
-    drops += (() => df.unpersist(blocking = false))
+    if (df.storageLevel == StorageLevel.NONE)
+      drops += (() => df.unpersist(blocking = false))
     df.persist()
   }
 
@@ -32,11 +39,11 @@ final class Pins {
   def leaf(df: DataFrame): DataFrame = track(Pins.checkpoint(df))
 
   /** Remember a frame the caller itself created, ALREADY persisted or
-    * checkpointed — [[Cumulative.rowNumber]]'s range-boundary cache,
-    * [[Components.connected]]'s labels leaf. [[release]] drops the
-    * blocks of a bare checkpoint leaf ([[GraftSqlBridge.releaseLeaf]])
-    * and unpersists anything else. Never track a frame you did not
-    * create: its blocks are not yours to drop. */
+    * checkpointed — [[Components.connected]]'s labels leaf. [[release]]
+    * drops the blocks of a bare checkpoint leaf
+    * ([[GraftSqlBridge.releaseLeaf]]) and unpersists anything else.
+    * Never track a frame you did not create: its blocks are not yours to
+    * drop. */
   def track(df: DataFrame): DataFrame = {
     drops += (() => if (!GraftSqlBridge.releaseLeaf(df)) df.unpersist(blocking = false))
     df

@@ -72,7 +72,7 @@ object SigIndex {
   def build(docs: DataFrame, name: String, buckets: Int = 32): Unit = {
     val spark = docs.sparkSession
     val t = TextOps.tokOf(docs.select("doc_id", "text")).persist()
-    val v = TextOps.vocab(t)
+    val v = TextOps.vocab(t).persist() // tokid, the dispatch count, the vocab table
     val tokid = TextOps.tokid(t, v).persist()
     val small = TextOps.smallVocab(v)
     Seq("postings", "vocab", "docsets").foreach(t => dropStale(spark, s"${name}_$t"))
@@ -84,6 +84,7 @@ object SigIndex {
         buckets, "doc_id")
     t.unpersist()
     tokid.unpersist()
+    v.unpersist()
   }
 
   /** Merge an already-probed batch INTO the index — the second half of the

@@ -97,19 +97,16 @@ object TextOps {
     * identical to the window form by construction (total order on distinct
     * tokens), so every affine hash built on `tid` still oracle-matches.
     */
-  def vocab(t: DataFrame): DataFrame = vocab(t, None)
-
-  def vocab(t: DataFrame, pins: Option[Pins]): DataFrame =
+  def vocab(t: DataFrame): DataFrame =
     Cumulative.rowNumber(t.sparkSession, t.select("token").distinct(),
-      Seq(col("token")), "tid", pins = pins)
+      Seq(col("token")), "tid")
 
   /** Adaptive dictionary dispatch for the similarity tiers: true when the
     * corpus vocabulary fits the 64-bit bitmask fast path. Default: count
-    * the (persisted) distinct-token rank table — two small driver jobs per
-    * similarity query, O(|vocab|) on a cached intermediate, comparable to
-    * AQE's own stats traffic. Production runs that already know their
-    * corpus pin the answer and skip those plan-time jobs entirely via the
-    * session conf `spark.graft.vocabHint` (or env `SPARK_GRAFT_VOCAB_HINT`):
+    * `v` — small driver jobs, comparable to AQE's own stats traffic; the
+    * caller persists `v`, which its tokid join reads again. Production
+    * runs that already know their corpus pin the answer and skip those
+    * plan-time jobs entirely via the session conf `spark.graft.vocabHint` (or env `SPARK_GRAFT_VOCAB_HINT`):
     * `large` forces the generic path (always safe at any vocabulary size);
     * `small` forces the bitmask path and, like any planner hint, is a
     * PROMISE — the masks are only correct when |vocab| ≤ 64. Unset or any

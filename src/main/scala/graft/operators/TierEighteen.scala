@@ -161,7 +161,7 @@ object TierEighteen {
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
     val scored = TierEleven.classifierScores(s, dir)
     val ranked = Cumulative.rowNumber(s, scored,
-      Seq(col("score_c").desc, col("doc_id").asc), "rk")
+      Seq(col("score_c").desc, col("doc_id").asc), "rk").persist() // count + decile join
     val n = ranked.agg(count(lit(1)).as("n"))
     val tc = Tables.load(s, dir, "documents")
       .select(col("doc_id"),

@@ -56,7 +56,7 @@ object TierEightyEight {
     import s.implicits._
     val nDocs = docs.count()
     val t = TextOps.tokOf(docs.select("doc_id", "text")).persist()
-    val v = TextOps.vocab(t)
+    val v = TextOps.vocab(t).persist() // read by the dispatch count AND the tokid join
     val tokid = TextOps.tokid(t, v).persist()
     val bkeys = TierFour.bandKeys(tokid)
     val isTrue = expr("5 * i >= 3 * (na + nb - i)") // J ≥ 3/5, exact integers

@@ -170,11 +170,10 @@ object TierEleven {
     classifierScoresOf(Tables.load(s, dir, "documents"))
 
   /** [[classifierScores]] over an arbitrary `(doc_id, text, …)` frame —
-    * the [[Dedup.artifacts]] build path; vocab-rank caches go into the
-    * caller's [[Pins]] when provided. */
+    * the [[Dedup.artifacts]] build path, which passes its pinned
+    * vocabulary as `sharedVocab`. */
   private[graft] def classifierScoresOf(
-      docs: DataFrame, pins: Option[Pins] = None,
-      sharedVocab: Option[DataFrame] = None): DataFrame = {
+      docs: DataFrame, sharedVocab: Option[DataFrame] = None): DataFrame = {
     val s = docs.sparkSession
     val toks = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
@@ -184,7 +183,7 @@ object TierEleven {
     // (DedupArtifactsSpec pins scores ≡ the self-training q83 twin), so
     // the corpus is tokenized + rank-shuffled once, not twice (r15)
     val vocab = sharedVocab.getOrElse(Cumulative.rowNumber(s,
-        toks.select("token").distinct(), Seq(col("token")), "tid", pins = pins))
+        toks.select("token").distinct(), Seq(col("token")), "tid"))
     // one Scala source of truth for the stand-in weights (pseudoWeights —
     // scoreCol's array and this model table must never drift); the oracle
     // SQL restates the formula as the intentional second engine

@@ -140,7 +140,7 @@ object TierFiftyFive {
     val g = armRevenue(s, dir)
       .groupBy("arm", "cents").agg(count(lit(1)).as("cnt"))
     val rk = Cumulative.runningSum(s, g, Seq(col("arm"), col("cents")),
-      col("cnt"), "rs")
+      col("cnt"), "rs").persist() // read by the per-arm collect AND the join
     // two bounded rows: per-arm size + the global prefix where the arm
     // starts (arms sort ascending, so start = sum of earlier arms)
     val na = rk.groupBy("arm").agg(sum("cnt").as("na"))

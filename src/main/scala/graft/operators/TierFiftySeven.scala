@@ -188,7 +188,7 @@ object TierFiftySeven {
     val s = um.sparkSession
     val g = um.groupBy("arm", "cents").agg(count(lit(1)).as("cnt"))
     val rk = Cumulative.runningSum(s, g, Seq(col("arm"), col("cents")),
-      col("cnt"), "rs")
+      col("cnt"), "rs").persist() // read by the per-arm collect AND the join
     val na = rk.groupBy("arm").agg(sum("cnt").as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sortBy(_._1)
     val starts = na.scanLeft(0L)(_ + _._2)

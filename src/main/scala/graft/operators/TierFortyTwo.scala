@@ -96,7 +96,7 @@ object TierFortyTwo {
     val decimal =
       s.conf.getOption("spark.graft.giniDecimal").exists(_.equalsIgnoreCase("true"))
     val rk = Cumulative.rowNumber(s, rev.select("x", "user_id"),
-      Seq(col("x"), col("user_id")), "i")
+      Seq(col("x"), col("user_id")), "i").persist() // row count + Gini fold
     val nRow = rk.agg(count(lit(1))).head().getLong(0) // documented 1-long driver read
     val weight = lit(2) * col("i") - nRow - 1
     val gTerm =

@@ -124,13 +124,14 @@ object TierFour {
     // corpus tokenize + distinct shuffle would execute twice (and three of
     // the dedup queries embed this whole pipeline)
     val t = pins(t0)
-    val v = TextOps.vocab(t, Some(pins))
+    val v = pins(TextOps.vocab(t)) // read by the dispatch count AND the tokid join
     minhashPairsOver(t, v, pins)
   }
 
   /** [[minhashPairs]] over a caller-prepared token relation and vocabulary
-    * — `t` must already be pinned and `v` built over `t`'s distinct tokens
-    * ([[TextOps.vocab]]). Lets a composed build ([[Dedup.artifacts]])
+    * — `t` and `v` (`t`'s distinct tokens ranked by [[TextOps.vocab]])
+    * must already be pinned: the dispatch counts `v` and the tokid join
+    * reads it again. Lets a composed build ([[Dedup.artifacts]])
     * share ONE corpus tokenize + vocabulary rank across the detector and
     * the classifier scores instead of ranking the same dictionary twice
     * (r15). */
@@ -157,8 +158,8 @@ object TierFour {
     // 64 bits, sorted-array `array_intersect` otherwise (both O(set) per
     // pair; the naive cand⋈tokens⋈tokens join was the r02 bench hotspot).
     val verified =
-      // dispatch reads vocab's persisted rank intermediate (O(|vocab|)
-      // cached), not the corpus — or the spark.graft.vocabHint pin
+      // dispatch counts the caller's pinned vocab (O(|vocab|) cached), not
+      // the corpus — or the spark.graft.vocabHint pin
       if (TextOps.smallVocab(v)) {
         // small-dictionary fast path: the mask is 16 B/doc, so it rides the
         // postings THROUGH the bucket self-join — candidate pairs exit the

@@ -59,7 +59,7 @@ object TierHundredOne {
       .select("sa", "sb")
     val ranked = Cumulative.rowNumber(spark,
       base.withColumn("rev", reverse(col("s"))),
-      Seq(col("rev"), col("s")), "rk")
+      Seq(col("rev"), col("s")), "rk").persist() // both window sides read it
     val left = ranked.select(col("s").as("s_a"),
         explode(sequence(lit(1L), lit(w.toLong))).as("off"), col("rk"))
       .withColumn("rk_b", col("rk") + col("off"))

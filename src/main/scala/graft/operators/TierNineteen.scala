@@ -85,7 +85,7 @@ object TierNineteen {
     val vocab = Cumulative.rowNumber(s,
       docs.select(explode(split(col("text"), " ")).as("token"))
         .filter(col("token") =!= "").select("token").distinct(),
-      Seq(col("token")), "tid", pins = pins)
+      Seq(col("token")), "tid")
     val emb0 = TierSixteen.hashEmbed(docs.select("doc_id", "text"), vocab)
       .select(col("doc_id") +: (0 until 8).map(k => col(s"e$k").cast("double")): _*)
     val emb = pins.map(_(emb0)).getOrElse(emb0.persist())
@@ -189,7 +189,7 @@ object TierNineteen {
     val vocab = Cumulative.rowNumber(s,
       docs.select(explode(split(col("text"), " ")).as("token"))
         .filter(col("token") =!= "").select("token").distinct(),
-      Seq(col("token")), "tid", pins = pins)
+      Seq(col("token")), "tid")
     val emb0 = TierSixteen.hashEmbed(docs.select("doc_id", "text"), vocab)
       .select(col("doc_id").as("vec_id"),
         array((0 until 8).map(c => col(s"e$c").cast("double")): _*).as("e"))

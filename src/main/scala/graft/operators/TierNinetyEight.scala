@@ -42,7 +42,7 @@ object TierNinetyEight {
     val ranked = Cumulative.rowNumber(s, um.select("user_id", "cents"),
       Seq(col("cents"), col("user_id")), "idx")
     val cum = Cumulative.runningSum(s, ranked,
-      Seq(col("cents"), col("user_id")), col("cents"), "cum")
+      Seq(col("cents"), col("user_id")), col("cents"), "cum").persist() // totals + deciles
     val t = cum.agg(count(lit(1)), sum("cents")).collect()(0)
     val (n, total) = (t.getLong(0), t.getLong(1))
     cum

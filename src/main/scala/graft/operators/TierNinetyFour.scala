@@ -38,7 +38,7 @@ object TierNinetyFour {
     val s = um.sparkSession
     val g = um.groupBy("arm", "cents").agg(count(lit(1)).as("cnt"))
     val rk = Cumulative.runningSum(s, g, Seq(col("arm"), col("cents")),
-      col("cnt"), "rs")
+      col("cnt"), "rs").persist() // read by the per-arm collect AND the join
     val na = rk.groupBy("arm").agg(sum("cnt").as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sortBy(_._1)
     val starts = na.scanLeft(0L)(_ + _._2)
@@ -123,7 +123,7 @@ object TierNinetyFour {
     val s = gaps.sparkSession
     val cc = gaps.groupBy("event_type", "gap_s").agg(count(lit(1)).as("freq"))
     val rk = Cumulative.runningSum(s, cc, Seq(col("event_type"), col("gap_s")),
-      col("freq"), "rs")
+      col("freq"), "rs").persist() // read by the per-type collect AND the join
     val nt = rk.groupBy("event_type").agg(sum("freq").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
     val starts = nt.scanLeft(0L)(_ + _._2)

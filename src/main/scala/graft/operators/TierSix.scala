@@ -270,7 +270,7 @@ object TierSix {
     // cache the tokenize+distinct — it feeds the vocab rank and the
     // mask/tokid side (same reasoning as q23/minhashPairs)
     val t = TextOps.tok(s, dir).persist()
-    val v = TextOps.vocab(t)
+    val v = TextOps.vocab(t).persist() // read by the dispatch count AND the tokid join
     val tokid = TextOps.tokid(t, v)
     val undirected =
       if (TextOps.smallVocab(v)) {

@@ -138,7 +138,7 @@ object TierSixteen {
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
     val lm = TierSeven.lmScores(s, dir).select("doc_id", "lm_score")
     val ranked = Cumulative.rowNumber(s, lm,
-      Seq(col("lm_score").desc, col("doc_id").asc), "rk")
+      Seq(col("lm_score").desc, col("doc_id").asc), "rk").persist() // count + bucket join
     val n = ranked.agg(count(lit(1)).as("n"))
     val b = ranked.join(broadcast(n))
       .withColumn("bucket",

@@ -257,9 +257,9 @@ object TierTen {
       .filter(col("token") =!= "")
       .groupBy("token").agg(count(lit(1)).as("freq"))
     val cum = Cumulative.runningSum(s, freq,
-      Seq(col("freq").desc, col("token")), col("freq"), "cum")
+      Seq(col("freq").desc, col("token")), col("freq"), "cum").persist() // total + thresholds
     // the global total IS the last cumulative value — one agg over the
-    // already-partitioned cache, no second tokenize pass
+    // cached scan, no second tokenize pass
     val total = cum.agg(max("cum").as("total"))
     val targets = s.sql("SELECT * FROM VALUES (50L), (90L), (99L) AS t(pct)")
     cum.crossJoin(broadcast(total)).crossJoin(broadcast(targets))

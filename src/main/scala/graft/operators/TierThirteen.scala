@@ -52,8 +52,6 @@ object TierThirteen {
     val h = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         ((lit(A0) * (col("doc_id") % P) + B0) % P).as("h"))
-    // the ranked frame stays persisted until the driver's per-query
-    // Cumulative.releaseAll() sweep (the rowNumber ownership contract)
     Cumulative.rowNumber(s, h, Seq(col("h"), col("doc_id")), "rk")
       .select(col("doc_id"), col("rk"), expr("(rk - 1) div 64").as("shard"))
       .orderBy("rk")

@@ -44,7 +44,7 @@ object TierThirtyNine {
     val vocab = Cumulative.rowNumber(s,
       docs.select(explode(split(col("text"), " ")).as("token"))
         .filter(col("token") =!= "").select("token").distinct(),
-      Seq(col("token")), "tid", pins = Some(pins))
+      Seq(col("token")), "tid")
     pins(TierSixteen.hashEmbed(docs.select("doc_id", "text"), vocab)
       .select(col("doc_id") +: (0 until 8).map(k => col(s"e$k").cast("double")): _*)
       .join(docs.select("doc_id", "source"), "doc_id"))

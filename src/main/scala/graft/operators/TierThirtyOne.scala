@@ -119,8 +119,6 @@ object TierThirtyOne {
       .join(evDays, Seq("day_idx"), "left_semi")
       .groupBy("day_idx").agg(max("conc").as("peak"))
       .orderBy("day_idx")
-    // retained range-partition cache drains via the harness/spec
-    // Cumulative.releaseAll() convention (the rowNumber-caller pattern)
   }
 
   val all: Seq[Q] = Seq(q146, q147)

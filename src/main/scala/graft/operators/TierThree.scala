@@ -64,15 +64,15 @@ object TierThree {
     // t feeds the vocab rank AND the mask/self-join side — cache the
     // tokenize+distinct instead of re-running it per consumer
     val t = TextOps.tok(s, dir).persist()
-    val v = TextOps.vocab(t)
+    val v = TextOps.vocab(t).persist() // read by the dispatch count AND the tokid join
     val jaccardOut = (df: org.apache.spark.sql.DataFrame) => df
       .withColumn("j", col("i").cast("double") / (col("na") + col("nb") - col("i")))
       .filter(col("j") >= 0.6)
       .select(col("doc_a"), col("doc_b"), round(col("j"), 6).as("jaccard"))
       .orderBy("doc_a", "doc_b")
-    // dispatch reads the rank stage's persisted distinct-token table
-    // (O(|vocab|) cached, not a corpus rescan) — or skips even that when
-    // the session pins spark.graft.vocabHint (TextOps.smallVocab)
+    // dispatch counts the persisted rank table (O(|vocab|) cached, not a
+    // corpus rescan) — or skips even that when the session pins
+    // spark.graft.vocabHint (TextOps.smallVocab)
     if (TextOps.smallVocab(v)) {
       // dictionary fast path: one BIGINT mask per doc, broadcast NLJ pairs
       val m = TextOps.tokenMasks(TextOps.tokid(t, v)).persist()

@@ -100,14 +100,12 @@ object TierTwelve {
        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
        |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
     val ranked = Cumulative.rowNumber(s, TierFour.simhashSigs(s, dir),
-      Seq(col("simhash"), col("doc_id")), "rk")
+      Seq(col("simhash"), col("doc_id")), "rk").persist() // both window sides read it
     val left = ranked.select(col("doc_id").as("id_a"), col("simhash").as("sig_a"),
         explode(sequence(lit(1L), lit(5L))).as("off"), col("rk"))
       .withColumn("rk_b", col("rk") + col("off"))
     val right = ranked.select(col("doc_id").as("id_b"),
       col("simhash").as("sig_b"), col("rk").as("rk_b"))
-    // the ranked frame stays persisted until the driver's per-query
-    // Cumulative.releaseAll() sweep (the rowNumber ownership contract)
     left.join(right, "rk_b")
       .withColumn("hamming",
         expr("cast(bit_count(sig_a ^ sig_b) as bigint)"))

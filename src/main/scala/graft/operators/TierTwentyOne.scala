@@ -234,7 +234,7 @@ object TierTwentyOne {
       .select(col("vec_id"), col("cid"),
         expr(s"((vec_id % $P) * $A0 + $B0) % $P").as("h"))
     val g = Cumulative.rowNumber(s, a,
-      Seq(col("cid").asc, col("h").asc, col("vec_id").asc), "g")
+      Seq(col("cid").asc, col("h").asc, col("vec_id").asc), "g").persist() // offsets + join
     val off = g.groupBy("cid").agg(min("g").as("goff"), count(lit(1)).as("csize"))
     g.join(broadcast(off), "cid")
       .select(col("cid"), col("vec_id"), (col("g") - col("goff") + 1).as("rnk"),

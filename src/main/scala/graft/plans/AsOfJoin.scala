@@ -142,14 +142,7 @@ object Asof {
       leftKeys: Seq[String], rightKeys: Seq[String],
       leftOrd: Seq[String], rightOrd: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    // idempotent safety net for sessions not built with
-    // spark.sql.extensions=graft.expressions.GraftExtensions
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(PruneAsOfJoinColumns))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneAsOfJoinColumns
+    GraftPlans.ensure(spark)
     val lp = GraftSqlBridge.analyzed(left)
     val rp = GraftSqlBridge.analyzed(right)
     def attrs(p: LogicalPlan, names: Seq[String], side: String): Seq[Attribute] =

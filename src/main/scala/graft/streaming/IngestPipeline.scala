@@ -125,7 +125,7 @@ object IngestPipeline {
       docs.select(explode(split(col("text"), " ")).as("token"))
         .filter(col("token") =!= "").select("token").distinct(),
       Seq(col("token")), "tid").persist()
-    vocab.count() // freeze the rank table before any stream starts (s30)
+    vocab.count() // materialize the rank table's cache before any stream starts (s30)
     val emb = SemanticAdmit.embedOf(docs, vocab)
       .filter(call_function("graft_dot", col("e"), col("e")) > 0)
     val labels0 = SemanticDedup.build(spark, emb, storePath, centroids(emb), thr)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, Dedup, SharedFaces, TierNineteen}
+import graft.operators.{Dedup, SharedFaces, TierNineteen}
 
 /** The shared-artifacts bench sweep ([[Bench]], VERDICT r12 #1) is only
   * honest if every face it times computes EXACTLY what the declared
@@ -37,9 +37,7 @@ class BenchFacesSpec extends SparkSpec {
     val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
     for ((name, face) <- SharedFaces.celled) {
       val got = rows(face(spark, sf, art))
-      Cumulative.releaseAll()
       val expected = rows(SparkEntry.queries(name)(spark, sf))
-      Cumulative.releaseAll()
       assert(got == expected, s"$name: bench face must equal the declared query")
       assert(got.nonEmpty, s"$name must be non-degenerate on the fixture")
       // faces are single-shot reports; drop their residue, keep the handle
@@ -56,9 +54,7 @@ class BenchFacesSpec extends SparkSpec {
     val art = Dedup.artifacts(Tables.load(spark, sf, "documents"))
     for ((name, face) <- SharedFaces.dedup) {
       val got = rows(face(spark, sf, art))
-      Cumulative.releaseAll()
       val expected = rows(SparkEntry.queries(name)(spark, sf))
-      Cumulative.releaseAll()
       assert(got == expected, s"$name: bench face must equal the declared query")
       assert(got.nonEmpty, s"$name must be non-degenerate on the fixture")
     }
@@ -75,9 +71,7 @@ class BenchFacesSpec extends SparkSpec {
     val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
     for ((name, face) <- SharedFaces.bigram) {
       val got = rows(face(spark, sf, art))
-      Cumulative.releaseAll()
       val expected = rows(SparkEntry.queries(name)(spark, sf))
-      Cumulative.releaseAll()
       assert(got == expected, s"$name: bench face must equal the declared query")
       assert(got.nonEmpty, s"$name must be non-degenerate on the fixture")
       spark.sparkContext.getPersistentRDDs

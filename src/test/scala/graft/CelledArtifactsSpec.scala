@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNineteen}
+import graft.operators.TierNineteen
 
 /** The build-once celled-quantizer handle ([[TierNineteen.celledArtifacts]],
   * VERDICT r11 #2): every face must equal its self-training twin BIT FOR
@@ -25,11 +25,8 @@ class CelledArtifactsSpec extends SparkSpec {
       spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(artifactIds.nonEmpty, "the shared build must pin its working set")
     val solo90 = rows(TierNineteen.celledEmbedPairsOf(docs, 0.9))
-    Cumulative.releaseAll()
     val solo95 = rows(TierNineteen.celledEmbedPairsOf(docs, 0.95))
-    Cumulative.releaseAll()
     val soloNn = rows(TierNineteen.celledNnOf(docs))
-    Cumulative.releaseAll()
     assert(shared90 == solo90 && shared90.nonEmpty,
       "pairs(0.9) must equal the self-training celled detector")
     assert(shared95 == solo95 && shared95.nonEmpty,

@@ -31,7 +31,6 @@ class CumulativeSpec extends SparkSpec {
         Seq(col("ts"), col("event_id")), col("v"), "cum", partitions = 7)
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(twoPass == windowed && twoPass.nonEmpty)
-    Cumulative.releaseAll()
   }
 
   test("two-pass runningMax ≡ window-function running max (q164's high-water mark)") {
@@ -47,7 +46,6 @@ class CumulativeSpec extends SparkSpec {
         Seq(col("event_id")), col("us"), "m", partitions = 7)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(twoPass == windowed && twoPass.nonEmpty)
-    Cumulative.releaseAll()
   }
 
   test("two-pass leadValue ≡ window-function lead (boundary stitching incl. NULL last row)") {
@@ -66,7 +64,6 @@ class CumulativeSpec extends SparkSpec {
         (if (r.isNullAt(2)) null else Long.box(r.getLong(2)))).toMap
     assert(twoPass == windowed && twoPass.nonEmpty)
     assert(twoPass.values.count(_ == null) == 1, "exactly one global last row")
-    Cumulative.releaseAll()
   }
 
   test("runningSum rejects fractional value columns loudly (no silent truncation)") {

@@ -33,7 +33,6 @@ class DedupArtifactsSpec extends SparkSpec {
     assert(artifactIds.nonEmpty, "the shared build must pin its working set")
     for ((name, _, q) <- faces) {
       val declared = rows(q.run(spark, sf))
-      operators.Cumulative.releaseAll()
       assert(sharedRows(name) == declared,
         s"$name: shared-build result must equal ${q.name}")
       assert(declared.nonEmpty, s"$name must be non-degenerate on the fixture")

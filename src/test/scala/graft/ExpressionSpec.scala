@@ -181,7 +181,6 @@ class ExpressionSpec extends SparkSpec {
       assert(sql == scala && sql.nonEmpty)
     } finally {
       vocab.unpersist()
-      graft.operators.Cumulative.releaseAll()
     }
   }
 
@@ -208,7 +207,6 @@ class ExpressionSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val weights = graft.operators.TierTwentyOne.dsirModel(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    graft.operators.Cumulative.releaseAll()
     import spark.implicits._
     val wdf = weights.toDF("token", "lr_ppm")
     docs.createOrReplaceTempView("dsir_docs")
@@ -508,7 +506,6 @@ class ExpressionSpec extends SparkSpec {
         Seq(org.apache.spark.sql.functions.col("k")),
         org.apache.spark.sql.functions.col("v"), "hwm")
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(sql == scala)
     assert(sql.map(_._3) == Seq(5L, 5L, 9L, 9L, 9L), s"inclusive prefix max: $sql")
     // exclusive form: the PRE-row HWM — Long.MinValue identity on the
@@ -516,7 +513,6 @@ class ExpressionSpec extends SparkSpec {
     val excl = spark.sql(
         "SELECT * FROM graft_running_max('rm_in', 'k', 'v', 'hwm', 1)")
       .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(excl.map(_._2) == Seq(Long.MinValue, 5L, 5L, 9L, 9L),
       s"exclusive pre-row HWM: $excl")
   }
@@ -575,7 +571,6 @@ class ExpressionSpec extends SparkSpec {
     val f2 = rows(spark.sql(
       "SELECT * FROM graft_window_funnel('funnel_ev', 86400, 'view', 'purchase')"))
     assert(f2.size == 2, "variadic step list must shape the output")
-    operators.Cumulative.releaseAll()
   }
 
   test("round-13 stat twins from SQL ≡ the Scala engines (mann_kendall/page_hinkley/kendall_tau/spearman/hellinger/allocation/readability)") {
@@ -623,7 +618,6 @@ class ExpressionSpec extends SparkSpec {
       rows(operators.TierEightyNine.allocate(spark.table("al_in"), 100L)))
     assert(alloc.agg(org.apache.spark.sql.functions.sum("seats"))
       .collect().head.getLong(0) == 100L, "the SQL twin keeps the exact-total law")
-    operators.Cumulative.releaseAll()
   }
 
   test("graft_ks / graft_wasserstein / graft_lorenz / graft_gini_stump from SQL ≡ the round-14 Scala engines") {
@@ -649,7 +643,6 @@ class ExpressionSpec extends SparkSpec {
       .createOrReplaceTempView("gs_in")
     assert(rows(spark.sql("SELECT * FROM graft_gini_stump('gs_in', 20)")) ==
       rows(operators.TierNinetyNine.q278.run(spark, sf)))
-    operators.Cumulative.releaseAll()
   }
 
   test("graft_near_dup_pairs / graft_mutual_nn table functions from SQL ≡ the celled Scala engines") {
@@ -662,13 +655,11 @@ class ExpressionSpec extends SparkSpec {
     val scalaPairs = operators.TierNineteen.celledEmbedPairsOf(
         spark.table("nd_docs"), 0.95)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    operators.Cumulative.releaseAll()
     assert(sqlPairs == scalaPairs && sqlPairs.nonEmpty)
     val sqlNn = spark.sql("SELECT * FROM graft_mutual_nn('nd_docs')")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val q145 = operators.TierThirty.q145.run(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    operators.Cumulative.releaseAll()
     assert(sqlNn == q145 && sqlNn.nonEmpty,
       "mutual-NN from SQL must equal the declared q145 set")
   }
@@ -684,14 +675,12 @@ class ExpressionSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val scala = operators.TierThirtyThree.pqSearch(emb, probe)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(sql == scala && sql.nonEmpty)
     // the probe came from the table: it ranks itself first at dist 0,
     // and the rest is exactly q151's declared answer
     assert(sql.head == (0L, 0.0), s"self-match first: ${sql.head}")
     val q151 = operators.TierThirtyThree.q151.run(spark, sf)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(sql.tail.take(q151.size - 1) == q151.take(sql.tail.size),
       "pq_search minus the self-match must prefix-match q151's shortlist answer")
   }
@@ -787,10 +776,8 @@ class ExpressionSpec extends SparkSpec {
     val rsSql = spark.sql(
         "SELECT * FROM graft_resample('tw_weights', 'doc_id', 'w')")
       .collect().map(_.toSeq).toSeq
-    operators.Cumulative.releaseAll()
     val rsScala = operators.TierSeventySeven.q233.run(spark, sf)
       .collect().map(_.toSeq).toSeq
-    operators.Cumulative.releaseAll()
     assert(rsSql == rsScala && rsSql.nonEmpty, "graft_resample must equal q233")
 
     operators.TierSeventySeven.naivePositions(
@@ -799,10 +786,8 @@ class ExpressionSpec extends SparkSpec {
     val rlSql = spark.sql(
         "SELECT * FROM graft_run_lengths('tw_positions', 'pos', 'lang')")
       .collect().map(_.toSeq).toSeq
-    operators.Cumulative.releaseAll()
     val rlScala = operators.TierSeventySeven.q234.run(spark, sf)
       .collect().map(_.toSeq).toSeq
-    operators.Cumulative.releaseAll()
     assert(rlSql == rlScala && rlSql.nonEmpty, "graft_run_lengths must equal q234")
   }
 }

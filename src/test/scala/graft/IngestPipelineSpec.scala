@@ -239,7 +239,6 @@ class IngestPipelineSpec extends SparkSpec {
       "a pre-fold ledgered id must still skip after the fold")
 
     h.release()
-    Cumulative.releaseAll()
     spark.catalog.clearCache()
   }
 
@@ -321,7 +320,6 @@ class IngestPipelineSpec extends SparkSpec {
     }
     GraftSqlBridge.releaseLeaf(full)
     h.release()
-    Cumulative.releaseAll()
   }
 
   test("two ledgered absorbs leave only the current labels leaf, sigStore and vocab pinned") {
@@ -346,6 +344,5 @@ class IngestPipelineSpec extends SparkSpec {
     assert((pins & labels0).isEmpty, "the previous labels leaf must be released")
     h.release()
     assert((pins & current).isEmpty, "release must drop the labels leaf")
-    Cumulative.releaseAll()
   }
 }

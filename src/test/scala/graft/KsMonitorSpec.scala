@@ -114,7 +114,6 @@ class KsMonitorSpec extends SparkSpec {
       val (_, _, ppmShift) = TierNinetySeven.ksGridStep(
         bucketFold(rc.map(_._1), refVals.map(_ + 1000L)), rc.map(_._2))
       assert(ppmShift == 1000000L, "a fully shifted live stream maxes out")
-      graft.operators.Cumulative.releaseAll()
     } finally spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
   }
 

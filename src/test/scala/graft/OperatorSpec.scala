@@ -126,7 +126,6 @@ class OperatorSpec extends SparkSpec {
         TierEightyThree.q246, TierEightyFive.q249, TierEightyFive.q250)) {
       val plan = heavyPlan(q)
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
-      operators.Cumulative.releaseAll()
     }
   }
 
@@ -140,7 +139,6 @@ class OperatorSpec extends SparkSpec {
         TierEightyNine.q258, TierNinety.q259, TierNinety.q260)) {
       val plan = heavyPlan(q)
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
-      operators.Cumulative.releaseAll()
     }
   }
 
@@ -153,7 +151,6 @@ class OperatorSpec extends SparkSpec {
         TierNinetyFour.q267, TierNinetyFour.q268, TierNinetyFive.q270)) {
       val plan = heavyPlan(q)
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
-      operators.Cumulative.releaseAll()
     }
   }
 

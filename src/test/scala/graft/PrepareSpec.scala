@@ -60,7 +60,6 @@ class PrepareSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(ids1 == expected, "flag-on survivors ≠ direct semantic recompute")
     assert(r1.semanticDropped == (ids0 -- expected).size.toLong)
-    graft.operators.Cumulative.releaseAll()
   }
 
   test("stripSpans stage: boilerplate tokens removed after dedup, ids a subset, default-off unchanged") {
@@ -128,12 +127,11 @@ class PrepareSpec extends SparkSpec {
   }
 
   test("dsirGate stage: afterGates ≡ direct frozen-weight recompute, default-off unchanged") {
-    import graft.operators.{Cumulative, TierEleven, TierFour, TierTwentyOne}
+    import graft.operators.{TierEleven, TierFour, TierTwentyOne}
     import spark.implicits._
     val raw = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val weights = TierTwentyOne.dsirModel(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq.toDF("token", "lr_ppm")
-    Cumulative.releaseAll()
     // the exact text the screen sees: normalize → redact → row gates
     val gateText = raw.select(col("doc_id"),
         TierEleven.redact(TierEleven.normalize(col("text"))).as("text"))
@@ -154,7 +152,6 @@ class PrepareSpec extends SparkSpec {
     assert(r1.afterGates < r0.afterGates, "the floor must actually drop documents")
     val ids1 = out1.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids1.subsetOf(admitted), "every survivor cleared the floor")
-    Cumulative.releaseAll()
   }
 
   test("deterministic: a second run reproduces ids, splits, and the report") {
@@ -179,6 +176,5 @@ class PrepareSpec extends SparkSpec {
       "Prepare.corpus dropped the caller's documents leaf")
     assert(docs.count() == n, "the caller's frame must still read")
     Seq(out, docs).foreach(org.apache.spark.sql.GraftSqlBridge.releaseLeaf)
-    graft.operators.Cumulative.releaseAll()
   }
 }

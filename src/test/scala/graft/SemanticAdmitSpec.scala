@@ -156,7 +156,6 @@ class SemanticAdmitSpec extends SparkSpec {
 
     emb.unpersist()
     vocab.unpersist()
-    Cumulative.releaseAll()
   }
 
   test("s46: crash-window replay overwrites admitted/ exactly-once; a corrupt ledger FAILS the batch (ADVICE r14)") {
@@ -204,6 +203,5 @@ class SemanticAdmitSpec extends SparkSpec {
     assert(admittedRows() == Seq(90L),
       "a failed ledger probe must not have admitted anything")
     vocab.unpersist()
-    Cumulative.releaseAll()
   }
 }

@@ -95,11 +95,10 @@ class ShortDocSpec extends SparkSpec {
   }
 
   test("round-8 document queries degrade gracefully (q126/q129/q131/q132/q133)") {
-    import graft.operators.{Cumulative, TierTwentyFour, TierTwentyThree, TierTwentyTwo, TierTwentyOne}
+    import graft.operators.{TierTwentyFour, TierTwentyThree, TierTwentyTwo, TierTwentyOne}
     // q126 DSIR: the empty doc carries no tokens → absent; everyone else scored
     val dsir = TierTwentyOne.q126.run(spark, tmp).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Cumulative.releaseAll()
     assert(!dsir.contains(0L) && dsir(4L) == 6L && dsir.size == 4)
     // q129 memorization risk: only the 6-token doc carries a 5-gram
     val risk = TierTwentyTwo.q129.run(spark, tmp).collect()
@@ -116,7 +115,6 @@ class ShortDocSpec extends SparkSpec {
     // q133 communities over an EMPTY association graph: empty output, not
     // a crash (the Components empty-node-set path)
     val comm = TierTwentyFour.q133.run(spark, tmp).collect()
-    Cumulative.releaseAll()
     assert(comm.isEmpty, s"got ${comm.mkString(",")}")
   }
 }

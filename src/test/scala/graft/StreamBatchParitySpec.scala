@@ -454,7 +454,6 @@ class StreamBatchParitySpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sortBy(_._1)
         val batch = graft.operators.TierForty.q164.run(spark, sf).collect()
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-        operators.Cumulative.releaseAll()
         assert(streamed == batch && streamed.nonEmpty,
           s"live alerts must equal the batch records: ${streamed.size} vs ${batch.size}")
       } finally q.stop()
@@ -519,7 +518,6 @@ class StreamBatchParitySpec extends SparkSpec {
         val batch = graft.operators.TierSeventyNine.q237.run(spark, sf).collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
             r.getLong(4), r.getLong(5))).toSeq
-        operators.Cumulative.releaseAll()
         assert(streamed == batch && streamed.nonEmpty,
           s"live Holt chart must equal batch q237: ${streamed.size} vs ${batch.size}")
         // (trend dynamics are exercised on the constructed ramp in
@@ -564,7 +562,6 @@ class StreamBatchParitySpec extends SparkSpec {
         val batch = TierEightyOne.q242.run(spark, sf).collect()
           .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
           .toMap
-        operators.Cumulative.releaseAll()
         assert(last.keySet == batch.keySet - "_all",
           "one live sketch per event type")
         for ((t, u) <- last)
@@ -705,7 +702,6 @@ class StreamBatchParitySpec extends SparkSpec {
           .toSeq.sortBy(e => (-e._3, e._1))
         val batch = graft.operators.TierFiftyTwo.q189.run(spark, sf).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-        operators.Cumulative.releaseAll()
         assert(streamed == batch,
           s"drained sample must equal batch q189: ${streamed.size} vs ${batch.size}")
         // chunked arrival makes early borderline admits get evicted later —
@@ -806,7 +802,6 @@ class StreamBatchParitySpec extends SparkSpec {
         .sortBy(x => (x._1, x._2))
       val batch = TierThirtyTwo.q149.run(spark, sf)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      operators.Cumulative.releaseAll()
       assert(streamed == batch && streamed.nonEmpty)
     } finally q.stop()
   }
@@ -1086,7 +1081,6 @@ class StreamBatchParitySpec extends SparkSpec {
         }
         val batch = operators.TierSeventySeven.q234.run(spark, sf).collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-        operators.Cumulative.releaseAll()
         assert(agg == batch, "streamed islands must aggregate to the q234 report")
       } finally q.stop()
     } finally spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierEighteen}
+import graft.operators.TierEighteen
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -109,7 +109,6 @@ class TierEighteenSpec extends SparkSpec {
   test("tier-18 plan gates: no CartesianProduct; q119 no single-partition exchange") {
     for (q <- Seq(TierEighteen.q119, TierEighteen.q120)) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     // q120's one SinglePartition is the scalar-total agg (q46/q51 shape)

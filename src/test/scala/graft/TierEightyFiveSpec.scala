@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierEightyFive, TierNineteen}
+import graft.operators.{TierEightyFive, TierNineteen}
 import org.apache.spark.sql.functions._
 
 /** Tier-85 differentials: q249 against an in-memory greedy-witness
@@ -35,7 +35,6 @@ class TierEightyFiveSpec extends SparkSpec {
       .map { case (st, nm, u) => (st, nm, u, u * 1000000L / s1.size) }
     val got = TierEightyFive.q249.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    Cumulative.releaseAll()
     assert(got == expected, "q249 must equal the in-memory greedy replay")
     assert(got.map(_._3) == got.map(_._3).sorted.reverse &&
       got.last._3 < got.head._3, "stages must strictly attrit on the fixture")
@@ -51,7 +50,6 @@ class TierEightyFiveSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val got = TierEightyFive.q250.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    Cumulative.releaseAll()
     // monotone: tightening the band can only shrink both counts
     assert(got.map(_._1) == TierEightyFive.SweepThr.map(t => (t * 1e6).toLong))
     assert(got.map(_._2) == got.map(_._2).sorted.reverse)
@@ -68,7 +66,6 @@ class TierEightyFiveSpec extends SparkSpec {
       val nd = pairs.select(col("doc_a").as("d"))
         .unionAll(pairs.select(col("doc_b").as("d"))).distinct().count()
       pairs.unpersist(blocking = false)
-      Cumulative.releaseAll()
       val band = got.find(_._1 == (thr * 1e6).toLong).get
       assert((band._2, band._3) == (np, nd),
         s"band $thr must equal the detector run at $thr")

@@ -29,7 +29,6 @@ class TierEightyFourSpec extends SparkSpec {
     val got = TierEightyFour.q247.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected, "q247 must equal the in-memory card fold")
     // a card whose column is constant across sources reports nothing —
     // the FIXTURES.md degeneracy rule, column by column
@@ -51,7 +50,6 @@ class TierEightyFourSpec extends SparkSpec {
     }.toSeq.sortBy(r => (-r._4, r._1))
     val got = TierEightyFour.q248.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected, "q248 must equal the in-memory burstiness fold")
     assert(got.forall(_._4 >= 1000000L), "burstiness floors at 1 (cf ≥ df)")
     // the signal's point: two tokens with (near-)equal df but different

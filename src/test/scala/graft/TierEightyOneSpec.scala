@@ -34,7 +34,6 @@ class TierEightyOneSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     val got = TierEightyOne.q241.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    operators.Cumulative.releaseAll()
     assert(got("bm25")._1 == dcg(bmIds.map(gains)),
       "bm25 DCG must equal the in-memory recompute over the same ranking")
     assert(got.values.forall(_._2 == idealDcg),
@@ -83,7 +82,6 @@ class TierEightyOneSpec extends SparkSpec {
       ("_all" -> expect(allH)))
     val got = TierEightyOne.q242.run(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    operators.Cumulative.releaseAll()
     assert(got == expected, "the distributed sketch must equal the in-memory mirror")
     // non-degeneracy (the FIXTURES.md rule): the per-type sketches must
     // actually differ, and the merged row must see the larger universe

@@ -15,7 +15,6 @@ class TierEightySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val fb = TierSixtySix.bm25TopK(spark, sf, TierSixtySix.EvalTerms, TierEighty.FbK)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    operators.Cumulative.releaseAll()
     val dt = docs.flatMap { case (id, t) =>
       t.split(" ").filter(_.nonEmpty).distinct.map(tok => (id, tok))
     }
@@ -30,7 +29,6 @@ class TierEightySpec extends SparkSpec {
       .sortBy(x => (-x._4, x._1)).take(TierEighty.ExpandK)
     val got = TierEighty.q239.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.size == TierEighty.ExpandK)
     // expansion laws: no query term re-emitted; the TOP candidate is
@@ -47,7 +45,6 @@ class TierEightySpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val pairs = TierNineteen.celledEmbedPairsOf(docs, 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     def del(id: Long) = id % TierEighty.EraseMod == 0
     val expected = pairs.filter(p => del(p._1) != del(p._2))
       .map { case (a, b, c) =>
@@ -56,7 +53,6 @@ class TierEightySpec extends SparkSpec {
       }.sortBy(x => (x._1, x._2))
     val got = TierEighty.q240.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got.map(x => (x._1, x._2)) == expected.map(x => (x._1, x._2)))
     got.map(_._3).zip(expected.map(_._3)).foreach { case (g, e) =>
       assert(math.abs(g - e) < 1e-6)
@@ -73,11 +69,9 @@ class TierEightySpec extends SparkSpec {
   test("tier-80 plan gates: no CartesianProduct; q239 top-k is TakeOrdered") {
     for (q <- TierEighty.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     val p239 = TierEighty.q239.run(spark, sf).queryExecution.executedPlan.toString
-    operators.Cumulative.releaseAll()
     assert(p239.contains("TakeOrderedAndProject"), s"q239: ${p239.take(400)}")
   }
 }

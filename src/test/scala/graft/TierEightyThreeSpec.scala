@@ -35,7 +35,6 @@ class TierEightyThreeSpec extends SparkSpec {
     }.sortBy(r => (r._1, r._2))
     val got = TierEightyThree.q245.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected, "q245 must equal the in-memory ACF fold")
     assert(got.exists(_._4 > 0) && got.exists(_._4 < 0),
       "both correlation signs must live on the fixture")
@@ -59,7 +58,6 @@ class TierEightyThreeSpec extends SparkSpec {
     }
     val got = TierEightyThree.q246.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected, "q246 must equal the in-memory CCF recompute")
     assert(got.map(_._2) == (-3L to 3L).map(k => 30L - math.abs(k)),
       "overlap windows shrink with |lag|")

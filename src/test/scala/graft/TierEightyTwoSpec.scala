@@ -29,7 +29,6 @@ class TierEightyTwoSpec extends SparkSpec {
     val got = TierEightyTwo.q243.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    operators.Cumulative.releaseAll()
     assert(got == expected, "q243 must equal the in-memory TV recompute")
     assert(got.values.forall(v => v._2 >= 0 && v._2 <= 1000000L),
       "TV is a distance in [0, 1]")
@@ -62,7 +61,6 @@ class TierEightyTwoSpec extends SparkSpec {
     val got = TierEightyTwo.q244.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected, "q244 must equal the in-memory digit fold")
     assert(got.exists(_._6 == 1L) && got.exists(_._6 == 0L),
       "both deviant states must live on the fixture")

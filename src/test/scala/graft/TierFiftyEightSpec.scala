@@ -11,7 +11,6 @@ class TierFiftyEightSpec extends SparkSpec {
   test("q200 ≡ its five component queries field by field; metric grid complete") {
     val report = TierFiftyEight.q200.run(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    operators.Cumulative.releaseAll()
     assert(report.size === 11, s"eleven metrics expected: ${report.keySet}")
 
     // q166: conversion lift + significance
@@ -25,7 +24,6 @@ class TierFiftyEightSpec extends SparkSpec {
 
     // q194: CLES + significance
     val q194 = TierFiftyFive.q194.run(spark, sf).collect().head
-    operators.Cumulative.releaseAll()
     assert(report("mw_cles_ppm") === q194.getLong(3))
     assert(report("mw_significant") === q194.getLong(4))
 
@@ -42,7 +40,6 @@ class TierFiftyEightSpec extends SparkSpec {
 
     // q199: trimmed diff
     val q199 = TierFiftySeven.q199.run(spark, sf).collect().head
-    operators.Cumulative.releaseAll()
     assert(report("trimmed_diff_c2") === q199.getLong(4))
   }
 }

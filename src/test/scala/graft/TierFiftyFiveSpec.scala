@@ -30,7 +30,6 @@ class TierFiftyFiveSpec extends SparkSpec {
     val got = TierFiftyFive.q194.run(spark, sf).collect().head
     val (n0, n1, u2x, cles, sig) =
       (got.getLong(0), got.getLong(1), got.getLong(2), got.getLong(3), got.getLong(4))
-    operators.Cumulative.releaseAll()
     assert(n0 > 0 && n1 > 0)
     assert(u2x >= 0 && u2x <= 2 * n0 * n1, "U out of range")
     assert(cles >= 0 && cles <= 1000000L)
@@ -51,7 +50,6 @@ class TierFiftyFiveSpec extends SparkSpec {
     val (fn0, fn1, fr) = TierFiftyFive.mwScalars(
       xs.map(x => (1L - x._1, x._2)).toDF("arm", "cents"))
     val (fu2x, _, fsig) = TierFiftyFive.mwReport(fn0, fn1, fr)
-    operators.Cumulative.releaseAll()
     assert(fu2x + u2x == 2 * n0 * n1, "U0 + U1 must equal n0*n1")
     assert(fsig == sig, "significance must be arm-label invariant")
   }
@@ -62,7 +60,6 @@ class TierFiftyFiveSpec extends SparkSpec {
       (0 until 40).map(i => (1L, ((i % 5) + 1).toLong * 100))
     val (tn0, tn1, tr) = TierFiftyFive.mwScalars(tied.toDF("arm", "cents"))
     val (tu2x, tcles, tsig) = TierFiftyFive.mwReport(tn0, tn1, tr)
-    operators.Cumulative.releaseAll()
     val (fu, fc, fs) = floatMw(tied)
     assert(math.abs(tu2x / 2.0 - fu) < 1e-6,
       s"tied U: int ${tu2x / 2.0} float $fu — doubled average ranks must be exact under ties")
@@ -74,14 +71,12 @@ class TierFiftyFiveSpec extends SparkSpec {
       (0 until 30).map(i => (1L, i.toLong))
     val (sn0, sn1, sr) = TierFiftyFive.mwScalars(sep.toDF("arm", "cents"))
     val (su2x, scles, ssig) = TierFiftyFive.mwReport(sn0, sn1, sr)
-    operators.Cumulative.releaseAll()
     assert(su2x == 2 * 30 * 30 && scles == 1000000L && ssig == 1L)
   }
 
   test("q195 ≡ in-memory exact lower-deciles; per-arm monotone; grid complete") {
     val got = TierFiftyFive.q195.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     val ev = Tables.load(spark, sf, "events")
     val users = ev.select("user_id").distinct()
       .withColumn("arm", expr("((user_id % 2147483647) * 2654435761 + 40503) % 2147483647 % 2"))

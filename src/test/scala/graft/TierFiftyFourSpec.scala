@@ -98,7 +98,6 @@ class TierFiftyFourSpec extends SparkSpec {
     }).sortBy(x => (x._1, x._2))
     val got = TierFiftyFour.q193.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.size == srcs.size * (srcs.size - 1) / 2, "pair matrix incomplete")
     assert(got.forall(x => x._3 >= 0 && x._3 <= 1000000L))

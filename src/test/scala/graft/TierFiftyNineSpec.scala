@@ -57,7 +57,6 @@ class TierFiftyNineSpec extends SparkSpec {
 
   test("q202 ≡ direct in-memory skew stats on the fixture") {
     val got = TierFiftyNine.q202.run(spark, sf).collect().head
-    operators.Cumulative.releaseAll()
     val cnts = Tables.load(spark, sf, "events").groupBy("user_id").count()
       .collect().map(_.getLong(1)).toSeq
     val (nk, tot, mx) = (cnts.size.toLong, cnts.sum, cnts.max)
@@ -74,7 +73,6 @@ class TierFiftyNineSpec extends SparkSpec {
     val whale = flat ++ (1L to 900L).map(i => (7L, 10000L + i)) // key 7 → 910 rows
     def rep(xs: Seq[(Long, Long)]): Map[String, Long] = {
       val r = Skew.report(xs.toDF("k", "v"), col("k")).collect().head
-      operators.Cumulative.releaseAll()
       r.schema.fieldNames.zipWithIndex.map { case (f, i) => f -> r.getLong(i) }.toMap
     }
     val rf = rep(flat); val rw = rep(whale)

@@ -17,7 +17,6 @@ class TierFiftyOneSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val pairs = TierNineteen.celledEmbedPairsOf(docs, 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     val toks = docs.collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").count(_.nonEmpty).toLong).toMap
     val ids = toks.keys.toSeq
@@ -39,7 +38,6 @@ class TierFiftyOneSpec extends SparkSpec {
       .sortBy(_._1)
     val got = TierFiftyOne.q186.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._1).toSet == Set("train", "valid", "test"),
       "all three splits must be populated on the fixture")
@@ -70,7 +68,6 @@ class TierFiftyOneSpec extends SparkSpec {
     }
     val got = TierFiftyOne.q187.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._4) == got.map(_._4).sorted,
       "distinct ratio must rise with n (longer contexts repeat less)")
@@ -83,7 +80,6 @@ class TierFiftyOneSpec extends SparkSpec {
   test("tier-51 plan gates: no CartesianProduct") {
     for (q <- TierFiftyOne.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     operators.Release.sweep(spark)

@@ -98,7 +98,6 @@ class TierFiftySevenSpec extends SparkSpec {
 
   test("q199 ≡ in-memory exact trimmed means on the fixture") {
     val got = TierFiftySeven.q199.run(spark, sf).collect().head
-    operators.Cumulative.releaseAll()
     val ev = Tables.load(spark, sf, "events")
     val users = ev.select("user_id").distinct()
       .withColumn("arm", expr("((user_id % 2147483647) * 2654435761 + 40503) % 2147483647 % 2"))
@@ -116,10 +115,8 @@ class TierFiftySevenSpec extends SparkSpec {
     val base = (1L to 40L).map(u => (u % 2, 5000L + (u * 13L) % 700L))
     val whaleBase = base :+ ((1L, 100000L))
     val whaleHuge = base :+ ((1L, 10000000L))
-    def viaSpark(xs: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
-      val r = TierFiftySeven.trimmedC2(xs.toDF("arm", "cents"))
-      operators.Cumulative.releaseAll(); r
-    }
+    def viaSpark(xs: Seq[(Long, Long)]): Map[Long, (Long, Long)] =
+      TierFiftySeven.trimmedC2(xs.toDF("arm", "cents"))
     val tb = viaSpark(whaleBase); val th = viaSpark(whaleHuge)
     assert(tb(1L) === th(1L), "trimmed mean must be whale-invariant")
     assert(tb(0L) === th(0L))

@@ -31,7 +31,6 @@ class TierFiftySpec extends SparkSpec {
       .map { case ((s, d), xs) => (s, d, xs.size.toLong) }
     val got = TierFifty.q184.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._3).sum == n, "every doc lands in one cell")
     for ((_, xs) <- got.groupBy(_._2))
@@ -59,7 +58,6 @@ class TierFiftySpec extends SparkSpec {
     }
     val got = TierFifty.q185.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._2).sum == rows.size)
     // the synthetic generator ships some lines BEFORE their order date —
@@ -73,7 +71,6 @@ class TierFiftySpec extends SparkSpec {
   test("tier-50 plan gates: no CartesianProduct; the parity rank is two-pass") {
     for (q <- TierFifty.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       if (q.name.contains("parity"))
         assert(!plan.contains("SinglePartition"),

@@ -13,7 +13,6 @@ class TierFiftyThreeSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val pairs = TierNineteen.celledEmbedPairsOf(docs, 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     val toks = docs.collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").count(_.nonEmpty).toLong).toMap
     val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
@@ -35,7 +34,6 @@ class TierFiftyThreeSpec extends SparkSpec {
       mass.map(_._2).max * 1000000 / tot)
     val got = TierFiftyThree.q190.run(spark, sf).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).head
-    operators.Cumulative.releaseAll()
     assert(got == ((expected._1, expected._2, expected._3,
       expected._4.toLong, expected._5)))
     // laws: 1e6/k ≤ HHI ≤ top share ≤ 1e6 (Σsh² ≤ max·Σsh = max share),
@@ -53,7 +51,6 @@ class TierFiftyThreeSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val got = TierFiftyThree.q191.run(spark, sf).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     for ((et, xs) <- dc.groupBy(_._1)) {
       val n = xs.size.toDouble
       val mean = xs.map(_._3).sum / n
@@ -73,7 +70,6 @@ class TierFiftyThreeSpec extends SparkSpec {
   test("tier-53 plan gates: no CartesianProduct") {
     for (q <- TierFiftyThree.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     operators.Release.sweep(spark)

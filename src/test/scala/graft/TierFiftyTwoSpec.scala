@@ -17,7 +17,6 @@ class TierFiftyTwoSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val pairs = TierNineteen.celledEmbedPairsOf(docs, 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
     val parent = scala.collection.mutable.Map(nodes.map(i => i -> i): _*)
     def find(x: Long): Long =
@@ -35,7 +34,6 @@ class TierFiftyTwoSpec extends SparkSpec {
       }.sortBy(_._1)
     val got = TierFiftyTwo.q188.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.size >= 2, "fixture must produce multiple real clusters")
     got.foreach { case (c, size, np, minCos) =>
@@ -63,7 +61,6 @@ class TierFiftyTwoSpec extends SparkSpec {
     val expected = scored.sortBy { case (id, _, pr) => (-pr, id) }.take(100)
     val got = TierFiftyTwo.q189.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.size == 100)
     // weight-proportional inclusion is visible: the sample skews long
@@ -78,14 +75,12 @@ class TierFiftyTwoSpec extends SparkSpec {
     // determinism: a second run is bit-identical
     val again = TierFiftyTwo.q189.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(again == got)
   }
 
   test("tier-52 plan gates: no CartesianProduct; q189 top-k is TakeOrdered, not a global sort") {
     for (q <- TierFiftyTwo.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       if (q.name.contains("priority"))
         assert(plan.contains("TakeOrdered"),

@@ -13,7 +13,6 @@ class TierFortyEightSpec extends SparkSpec {
   test("q180 joint grid ≡ in-memory ranks; margins balanced; docs conserved") {
     val scores = TierEleven.classifierScores(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    operators.Cumulative.releaseAll()
     val toks = Tables.load(spark, sf, "documents")
       .select(col("doc_id"),
         size(filter(split(col("text"), " "), x => x =!= "")).cast("long"))
@@ -29,7 +28,6 @@ class TierFortyEightSpec extends SparkSpec {
       .map { case ((l, q), xs) => (l, q, xs.size.toLong) }
     val got = TierFortyEight.q180.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._3).sum == n, "every document lands in one cell")
     for (axis <- Seq(got.groupBy(_._1), got.groupBy(_._2)); (_, xs) <- axis) {
@@ -61,7 +59,6 @@ class TierFortyEightSpec extends SparkSpec {
       .map { case ((r, f, m), xs) => (r, f, m, xs.size.toLong) }
     val got = TierFortyEight.q181.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._4).sum == n, "every user lands in one segment")
     assert(got.forall(x => Seq(x._1, x._2, x._3).forall(c => c >= 0 && c <= 2)))
@@ -77,7 +74,6 @@ class TierFortyEightSpec extends SparkSpec {
   test("tier-48 plan gates: no CartesianProduct; decile ranks are two-pass") {
     for (q <- TierFortyEight.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       assert(!plan.contains("SinglePartition"),
         s"${q.name} must rank via the two-pass Cumulative: ${plan.take(800)}")

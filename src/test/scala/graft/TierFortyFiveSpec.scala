@@ -26,7 +26,6 @@ class TierFortyFiveSpec extends SparkSpec {
       }.sortBy(x => (x._1, x._2))
     val got = TierFortyFive.q174.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     for ((et, rows) <- got.groupBy(_._1)) {
       assert(rows.map(_._2).toSet == (0L to 6L).toSet, s"$et must cover all weekdays")
@@ -46,7 +45,6 @@ class TierFortyFiveSpec extends SparkSpec {
     }.sortBy(x => (x._1, x._2))
     val got = TierFortyFive.q175.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.size < dc.size)
     // the z² ≤ n−1 bound: at k=2 no stratum of n ≤ 4 can EVER flag —
@@ -61,14 +59,12 @@ class TierFortyFiveSpec extends SparkSpec {
     // the point of stratifying: the flag set differs from the flat q149's
     val flat = TierThirtyTwo.q149.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    operators.Cumulative.releaseAll()
     assert(got.toSet != flat, "seasonality adjustment must change what fires")
   }
 
   test("tier-45 plan gates: no CartesianProduct") {
     for (q <- TierFortyFive.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

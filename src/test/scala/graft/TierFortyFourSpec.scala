@@ -31,7 +31,6 @@ class TierFortyFourSpec extends SparkSpec {
     }
     val got = TierFortyFour.q172.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     for ((w, nNew, ret, res, _) <- got)
       assert(nNew + ret + res == byWeek(w).size, s"week $w must partition its WAU")
@@ -49,7 +48,6 @@ class TierFortyFourSpec extends SparkSpec {
     }
     val got = TierFortyFour.q173.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.forall(x => x._2 <= x._3), "DAU never exceeds MAU")
     assert(got.forall(x => x._4 > 0 && x._4 <= 1000000L))
@@ -61,7 +59,6 @@ class TierFortyFourSpec extends SparkSpec {
   test("tier-44 plan gates: no CartesianProduct beyond the pinned |weeks| broadcast") {
     for (q <- TierFortyFour.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -22,7 +22,6 @@ class TierFortyNineSpec extends SparkSpec {
     val expected = all.sortBy { case (a, b, sup, conf) => (-conf, -sup, a, b) }.take(20)
     val got = TierFortyNine.q182.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.forall(x => x._4 > 0 && x._4 <= 1000000L))
     // directionality: confidence(a→b) ≠ confidence(b→a) somewhere in
@@ -47,7 +46,6 @@ class TierFortyNineSpec extends SparkSpec {
     }
     val got = TierFortyNine.q183.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     // 30 contiguous days ⇒ 23 forecastable days per type
     assert(got.forall(_._2 == 23L), s"lag-7 over 30 days leaves 23 scored days: $got")
@@ -58,7 +56,6 @@ class TierFortyNineSpec extends SparkSpec {
   test("tier-49 plan gates: no CartesianProduct") {
     for (q <- TierFortyNine.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -36,7 +36,6 @@ class TierFortyOneSpec extends SparkSpec {
       (1L, n1, c1, c1 * 1000000 / n1, sig))
     val got = TierFortyOne.q166.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(n0 + n1 == users.size, "the hash split partitions the user universe")
     assert(got.map(_._5).distinct.size == 1, "significance is a property of the table, not the arm")
@@ -57,7 +56,6 @@ class TierFortyOneSpec extends SparkSpec {
       .sortBy(x => (x._1, x._2))
     val got = TierFortyOne.q167.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._4).sum == purchases.map(_._4).sum, "every purchase cent lands in one cell")
     assert(got.forall(_._2 >= 0), "no purchase precedes its user's first activity")
@@ -92,7 +90,6 @@ class TierFortyOneSpec extends SparkSpec {
   test("tier-41 plan gates: no CartesianProduct beyond the pinned 1-row broadcast") {
     for (q <- TierFortyOne.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -25,7 +25,6 @@ class TierFortySevenSpec extends SparkSpec {
     }
     val got = TierFortySeven.q178.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.head == (0L, n, 1000000L), "everyone survives to day 0")
     assert(got.map(_._2) == got.map(_._2).sorted.reverse, "survival never increases")
@@ -46,7 +45,6 @@ class TierFortySevenSpec extends SparkSpec {
       .map { case (g, xs) => (g, xs.size.toLong) }
     val got = TierFortySeven.q179.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     val buyers = pe.groupBy(_._1).mapValues(_.size)
     assert(got.map(_._2).sum == buyers.values.map(c => (c - 1).toLong).sum,
@@ -57,7 +55,6 @@ class TierFortySevenSpec extends SparkSpec {
   test("tier-47 plan gates: no CartesianProduct beyond the pinned offsets broadcast") {
     for (q <- TierFortySeven.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -13,10 +13,8 @@ class TierFortySixSpec extends SparkSpec {
     val pairs = TierFour.minhashPairs(TextOps.tok(spark, sf))
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     val scores = TierEleven.classifierScores(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    operators.Cumulative.releaseAll()
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("source"),
         size(filter(split(col("text"), " "), x => x =!= "")).cast("long"))
@@ -44,7 +42,6 @@ class TierFortySixSpec extends SparkSpec {
     }.sortBy(x => (x._4, x._1))
     val got = TierFortySix.q176.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.size < reps.size, "the budget must actually cut")
     assert(got.map(_._1).toSet.subsetOf(reps), "only cluster representatives are selectable")
@@ -68,7 +65,6 @@ class TierFortySixSpec extends SparkSpec {
     }
     val got = TierFortySix.q177.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.forall(x => x._2 == x._3 + x._4), "agree + differ = clusters")
     assert(got.map(_._2).sum == clusters.size)
@@ -83,7 +79,6 @@ class TierFortySixSpec extends SparkSpec {
   test("tier-46 plan gates: no CartesianProduct") {
     for (q <- TierFortySix.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

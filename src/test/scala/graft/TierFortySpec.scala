@@ -24,7 +24,6 @@ class TierFortySpec extends SparkSpec {
     }
     val got = TierForty.q164.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.size > 1 && got.size < ev.size, "records must be a proper non-trivial subset")
     assert(got.head._1 == ev.head._1, "the first arrival is by definition a record")
@@ -37,10 +36,8 @@ class TierFortySpec extends SparkSpec {
     val pairs = TierFour.minhashPairs(TextOps.tok(spark, sf))
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     val scores = TierEleven.classifierScores(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    operators.Cumulative.releaseAll()
     val parent = scala.collection.mutable.Map(scores.keys.map(k => k -> k).toSeq: _*)
     def find(x: Long): Long = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
     pairs.foreach { case (a, b) =>
@@ -54,7 +51,6 @@ class TierFortySpec extends SparkSpec {
     }
     val got = TierForty.q165.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty)
     for ((cl, _, rep, sc, minDoc) <- got) {
@@ -67,7 +63,6 @@ class TierFortySpec extends SparkSpec {
   test("tier-40 plan gates: no CartesianProduct; q164's HWM is two-pass, not SinglePartition") {
     for (q <- TierForty.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       if (q.name.contains("record"))
         assert(!plan.contains("SinglePartition"),

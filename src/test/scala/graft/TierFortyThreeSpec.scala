@@ -30,7 +30,6 @@ class TierFortyThreeSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val got = TierFortyThree.q170.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     // the auto-release fires on the ASYNC listener bus — poll briefly
     // before judging (the assertion is about WHETHER it fires, not about
     // beating the bus thread to the race)
@@ -53,14 +52,12 @@ class TierFortyThreeSpec extends SparkSpec {
     val cp = TierNineteen.celledEmbedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     val pairs = cp.map(_._3)
     // q171 declares the celled pair source (r10 VERDICT re-sourcing):
     // containment + recall vs the anchor stay floored
     val anchor = TierNineteen.embedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.8)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    operators.Cumulative.releaseAll()
     assert(cp.map(p => (p._1, p._2)).toSet.subsetOf(anchor),
       "celled pairs are cosine-verified: ⊆ anchor")
     val recall = cp.size.toDouble / anchor.size
@@ -73,7 +70,6 @@ class TierFortyThreeSpec extends SparkSpec {
       .map { case (b, xs) => (b, b * 50000, xs.size.toLong) }
     val got = TierFortyThree.q171.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._3).sum == pairs.size, "every pair lands in exactly one band")
     val (below, above) = (got.filter(_._1 < 18).map(_._3).sum, got.filter(_._1 >= 18).map(_._3).sum)
@@ -84,7 +80,6 @@ class TierFortyThreeSpec extends SparkSpec {
   test("tier-43 plan gates: no CartesianProduct beyond the documented pair anchor") {
     for (q <- TierFortyThree.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

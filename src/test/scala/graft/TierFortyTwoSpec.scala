@@ -27,7 +27,6 @@ class TierFortyTwoSpec extends SparkSpec {
       .sortBy { case (u, s, _, r) => (-r, u, s) }.take(20)
     val got = TierFortyTwo.q168.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.forall(_._4 > 0))
     assert(got.map(_._4) == got.map(_._4).sorted.reverse, "ranked by rate descending")
@@ -49,7 +48,6 @@ class TierFortyTwoSpec extends SparkSpec {
       (BigInt(1000000) * topd / s).toLong)
     val got = TierFortyTwo.q169.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).head
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got._3 >= 0 && got._3 < 1000000, "Gini lives in [0, 1)")
     assert(got._4 >= 1000000 / 10,
@@ -72,7 +70,6 @@ class TierFortyTwoSpec extends SparkSpec {
     spark.conf.set("spark.graft.giniDecimal", "true")
     try {
       val got = TierFortyTwo.giniOver(rev).collect()(0)
-      operators.Cumulative.releaseAll()
       assert(got.getLong(0) == 100L && got.getLong(1) == s.toLong)
       assert(got.getLong(2) == expectedPpm,
         s"decimal path must be exact: got ${got.getLong(2)}, want $expectedPpm")
@@ -82,7 +79,6 @@ class TierFortyTwoSpec extends SparkSpec {
     val ex = intercept[Exception] {
       TierFortyTwo.giniOver(rev).collect()
     }
-    operators.Cumulative.releaseAll()
     assert(ex.getMessage.toLowerCase.contains("overflow"),
       s"the Int64 fold must overflow loudly on this fixture: ${ex.getMessage.take(200)}")
   }
@@ -90,7 +86,6 @@ class TierFortyTwoSpec extends SparkSpec {
   test("tier-42 plan gates: no CartesianProduct; q169's rank is two-pass") {
     for (q <- TierFortyTwo.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -60,7 +60,6 @@ class TierHundredFourSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got == expected, s"got $got expected $expected")
     assert(got.nonEmpty, "fixture must contain non-singleton clusters")
-    graft.operators.Cumulative.releaseAll()
     spark.catalog.clearCache()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierHundredOne}
+import graft.operators.TierHundredOne
 import org.apache.spark.sql.functions._
 
 /** Tier-101 differentials: q281 against in-driver brute force (plus the
@@ -49,7 +49,6 @@ class TierHundredOneSpec extends SparkSpec {
 
     val cand = TierHundredOne.multiBlockPairs(spark, sdf, prefixLen = 16, w = 5)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    Cumulative.releaseAll()
     val multiCaught = truth.filter(cand)
     assert(prefixCaught.subsetOf(multiCaught),
       "the union face must keep every prefix-pass pair")
@@ -64,7 +63,6 @@ class TierHundredOneSpec extends SparkSpec {
     // the declared readout ≡ brute force restricted to the candidates
     val got = TierHundredOne.editMultiBlockedOver(spark, sdf, maxDist = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Cumulative.releaseAll()
     val expected = cand.toSeq.map { case (a, b) => lev(a, b) }
       .filter(d => d >= 1 && d <= 2)
       .groupBy(_.toLong).map { case (d, ds) => d -> ds.size.toLong }
@@ -76,7 +74,6 @@ class TierHundredOneSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val multi = TierHundredOne.q281.run(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Cumulative.releaseAll()
     assert(single.keySet.subsetOf(multi.keySet) &&
       single.forall { case (d, n) => multi(d) >= n },
       s"union-of-blocks must dominate the single pass: $multi vs $single")

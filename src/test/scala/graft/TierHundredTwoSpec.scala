@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierHundredTwo}
+import graft.operators.TierHundredTwo
 import org.apache.spark.sql.functions._
 
 /** Tier-102 differentials: q283 against an in-driver set replay, q284
@@ -73,7 +73,6 @@ class TierHundredTwoSpec extends SparkSpec {
     }
     assert(j12 < 0.8 && got.exists(p => p._1 == 1L && p._2 == 2L),
       s"containment must see the quote pair Jaccard ($j12) ignores")
-    Cumulative.releaseAll()
     spark.catalog.clearCache()
     sh.unpersist()
   }
@@ -92,7 +91,6 @@ class TierHundredTwoSpec extends SparkSpec {
     val got = TierHundredTwo.q284.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == truth, s"got ${got.size} pairs expected ${truth.size}")
-    Cumulative.releaseAll()
     spark.catalog.clearCache()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNineteen}
+import graft.operators.TierNineteen
 
 /** Tier-19 differentials: both queries against an independent in-memory
   * hash-embed + cosine recomputation (the affine family restated
@@ -52,7 +52,6 @@ class TierNineteenSpec extends SparkSpec {
       case (g, e) => assert(math.abs(g - e) < 1e-6)
     }
     assert(got.nonEmpty, "threshold 0.95 must be non-degenerate on the fixture")
-    Cumulative.releaseAll()
   }
 
   test("q122 split leakage ≡ split-filtered celled pairs; leaked ⊆ q121, recall floored") {
@@ -74,7 +73,6 @@ class TierNineteenSpec extends SparkSpec {
       }.sortBy(t => (t._1, t._2))
     val celled = TierNineteen.celledEmbedPairs(spark, sf, 0.95).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    Cumulative.releaseAll()
     val expected = leakedOf(celled)
     val got = TierNineteen.q122.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -91,7 +89,6 @@ class TierNineteenSpec extends SparkSpec {
       info(s"celled split-leakage recall vs anchor: $recall")
       assert(recall >= 0.50, s"celled leak recall $recall below measured floor")
     }
-    Cumulative.releaseAll()
   }
 
   test("celledEmbedPairs (Lloyd cells on hash embeds) recalls most q121 pairs; probe-2 wins") {
@@ -108,13 +105,11 @@ class TierNineteenSpec extends SparkSpec {
     info(s"celled embed-pair recall: single-probe $rOne, two-probe $rTwo")
     assert(rOne <= rTwo, s"widening must not lose pairs: $rOne vs $rTwo")
     assert(rTwo >= 0.50, s"two-probe recall $rTwo below measured floor")
-    Cumulative.releaseAll()
   }
 
   test("tier-19 plan gates: no CartesianProduct (broadcast-NLJ anchor allowed)") {
     for (q <- Seq(TierNineteen.q121, TierNineteen.q122)) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNinetyEight}
+import graft.operators.TierNinetyEight
 import org.apache.spark.sql.functions._
 
 /** Tier-98 differentials: q275 against an in-memory rank replay (plus
@@ -39,7 +39,6 @@ class TierNinetyEightSpec extends SparkSpec {
     assert(got.map(_._4) == got.map(_._4).sorted)
     // the fixture is genuinely concentrated: bottom decile below 10 %
     assert(got.head._4 < 100000L, "fixture must show concentration")
-    Cumulative.releaseAll()
   }
 
   test("q276 ≡ in-memory paired fold; swap symmetry; no-flip sentinel") {

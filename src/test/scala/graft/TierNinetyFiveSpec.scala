@@ -43,7 +43,6 @@ class TierNinetyFiveSpec extends SparkSpec {
     val top = cents.drop((9 * n / 10).toInt).sum
     val expected = (n, bot, top, if (bot == 0) -1L else 1000000L * top / bot)
     val got = TierNinetyFive.q270.run(spark, sf).collect().head
-    graft.operators.Cumulative.releaseAll()
     assert((got.getLong(0), got.getLong(1), got.getLong(2), got.getLong(3))
       == expected, "q270 must equal the sort-and-slice replay")
     assert(bot > 0 && top > 0, "both tails must carry mass on the fixture")
@@ -52,12 +51,10 @@ class TierNinetyFiveSpec extends SparkSpec {
   test("palmaOver laws: uniform values ⇒ count ratio; zero bottom ⇒ −1 sentinel") {
     val uni = Seq.fill(20)(100L).toDF("cents")
     val u = TierNinetyFive.palmaOver(uni).collect().head
-    graft.operators.Cumulative.releaseAll()
     // bottom 8 obs vs top 2 obs of the same value: ratio = 2/8 exactly
     assert((u.getLong(1), u.getLong(2), u.getLong(3)) == ((800L, 200L, 250000L)))
     val zeros = (Seq.fill(10)(0L) ++ Seq.fill(10)(50L)).toDF("cents")
     val z = TierNinetyFive.palmaOver(zeros).collect().head
-    graft.operators.Cumulative.releaseAll()
     assert(z.getLong(3) == -1L, "an all-zero bottom 40 % reads the sentinel")
   }
 }

@@ -34,7 +34,6 @@ class TierNinetyFourSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val byArm = um.groupBy(_._1).map { case (a, xs) => a -> xs.map(_._2).toSeq }
     val got = TierNinetyFour.q267.run(spark, sf).collect().head
-    graft.operators.Cumulative.releaseAll()
     assert((got.getLong(0), got.getLong(1)) ==
       ((byArm(0L).size.toLong, byArm(1L).size.toLong)))
     assert(got.getLong(2) == winsorMean100(byArm(0L)), "arm A winsorized mean")
@@ -49,7 +48,6 @@ class TierNinetyFourSpec extends SparkSpec {
     val um = vals.zipWithIndex.flatMap { case (v, i) =>
       Seq((0L, v), (1L, v)) }.toDF("arm", "cents")
     val w = TierNinetyFour.winsorC2(um)
-    graft.operators.Cumulative.releaseAll()
     val raw100 = vals.sum * 100 / vals.size
     val k = vals.size / 20 // = 2
     val sorted = vals.sorted
@@ -66,7 +64,6 @@ class TierNinetyFourSpec extends SparkSpec {
     // n < 20 ⇒ k = 0 ⇒ winsorized mean = plain mean
     val tiny = (1L to 7L).map(v => (0L, v * 10)).toDF("arm", "cents")
     val wt = TierNinetyFour.winsorC2(tiny)
-    graft.operators.Cumulative.releaseAll()
     assert(wt(0L)._2 == (10L to 70L by 10).sum * 100 / 7)
   }
 
@@ -90,7 +87,6 @@ class TierNinetyFourSpec extends SparkSpec {
     val got = TierNinetyFour.q268.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toSeq
-    graft.operators.Cumulative.releaseAll()
     assert(got == expected, "q268 must equal the in-memory replay")
     assert(got.forall(r => r._3 <= r._4 && r._4 <= r._5),
       "percentiles must be monotone")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNinetySeven}
+import graft.operators.TierNinetySeven
 import org.apache.spark.sql.functions._
 
 /** Tier-97 differentials: q273/q274 against in-memory CDF replays, plus
@@ -46,7 +46,6 @@ class TierNinetySevenSpec extends SparkSpec {
       == ((n0, n1, w1Num, 100L * w1Num / (n0 * n1))))
     assert(ksNum > 0 || w1Num > 0,
       "fixture arms must differ somewhere (hash split of a skewed metric)")
-    Cumulative.releaseAll()
   }
 
   test("metric laws: identity ⇒ 0; pure shift ⇒ W1 = shift, KS gap = overlap; disjoint ⇒ D = n0·n1; empty arm ⇒ −1") {
@@ -71,6 +70,5 @@ class TierNinetySevenSpec extends SparkSpec {
     val solo = (1 to 5).map(i => (0L, i.toLong))
     assert(TierNinetySeven.ksOver(solo.toDF("arm", "cents"))
       .collect().head.getLong(3) == -1L)
-    Cumulative.releaseAll()
   }
 }

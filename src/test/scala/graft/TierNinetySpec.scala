@@ -67,7 +67,6 @@ class TierNinetySpec extends SparkSpec {
     val got = TierNinety.spearmanOver(g.toDF("gk", "x", "y")).collect().head
     assert((got.getLong(0), got.getLong(1), got.getLong(2), got.getLong(3),
       got.getDouble(4)) == ((n, sxy, sxx, syy, rho)))
-    graft.operators.Cumulative.releaseAll()
   }
 
   test("q260 Page–Hinkley ≡ independently-coded sequential replay") {

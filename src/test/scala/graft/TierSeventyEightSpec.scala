@@ -14,11 +14,9 @@ class TierSeventyEightSpec extends SparkSpec {
     val bm = TierSixtySix.bm25TopK(spark, sf, TierSixtySix.EvalTerms,
         TierSeventyEight.FuseK)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    operators.Cumulative.releaseAll()
     val tq = TierSeventyEight.ttrTopK(
         Tables.load(spark, sf, "documents"), TierSeventyEight.FuseK)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    operators.Cumulative.releaseAll()
     val bmR = bm.zipWithIndex.map { case (id, i) => id -> (i + 1L) }.toMap
     val tqR = tq.zipWithIndex.map { case (id, i) => id -> (i + 1L) }.toMap
     val expected = (bm ++ tq).distinct.map { id =>
@@ -29,7 +27,6 @@ class TierSeventyEightSpec extends SparkSpec {
     }.sortBy(t => (-t._4, t._1)).take(TierSeventyEight.FuseK)
     val got = TierSeventyEight.q235.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.size == TierSeventyEight.FuseK)
     // fusion laws: rrf non-increasing down the output; both single-run
@@ -52,10 +49,8 @@ class TierSeventyEightSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents")
     val scores = operators.TierEleven.classifierScoresOf(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    operators.Cumulative.releaseAll()
     val labels = operators.TierSeventySix.raterFlags(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    operators.Cumulative.releaseAll()
     val n = scores.size.toLong
     val ranked = scores.toSeq.sortBy { case (id, c) => (-c, id) }.zipWithIndex
     val expected = ranked
@@ -69,7 +64,6 @@ class TierSeventyEightSpec extends SparkSpec {
     val got = TierSeventyEight.q236.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     // decile partition laws: ten bands, counts sum to the corpus, score
     // envelopes non-overlapping in rank order (hi of d+1 ≤ hi of d)
@@ -86,7 +80,6 @@ class TierSeventyEightSpec extends SparkSpec {
   test("tier-78 plan gates: no CartesianProduct") {
     for (q <- TierSeventyEight.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

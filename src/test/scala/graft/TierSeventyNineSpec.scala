@@ -24,7 +24,6 @@ class TierSeventyNineSpec extends SparkSpec {
     val got = TierSeventyNine.q237.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._1).distinct.size > 1, "multiple types on the fixture")
   }
@@ -75,7 +74,6 @@ class TierSeventyNineSpec extends SparkSpec {
     val got = TierSeventyNine.q238.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.exists(_._5 == 0L) && got.exists(_._5 == 1L),
       "fixture must have both diverse and non-diverse QI groups")
@@ -99,7 +97,6 @@ class TierSeventyNineSpec extends SparkSpec {
   test("tier-79 plan gates: no CartesianProduct") {
     for (q <- TierSeventyNine.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

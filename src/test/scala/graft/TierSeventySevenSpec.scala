@@ -27,7 +27,6 @@ class TierSeventySevenSpec extends SparkSpec {
     }
     val got = TierSeventySeven.q233.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     // conservation: total slots drawn = Σw div step (every boundary
     // crossing is attributed to exactly one doc)
@@ -50,7 +49,6 @@ class TierSeventySevenSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Long)].toDF("doc_id", "w")
     assert(TierSeventySeven.resampleOver(empty, "doc_id", "w",
       TierSeventySeven.SlotCount).collect().isEmpty)
-    operators.Cumulative.releaseAll()
   }
 
   test("q234 interleave audit ≡ in-memory islands; q152's interleave de-clumps") {
@@ -68,7 +66,6 @@ class TierSeventySevenSpec extends SparkSpec {
     val got = TierSeventySeven.q234.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     // the naive order clumps on the fixture (the audit is non-vacuous) …
     assert(got.exists(_._4 >= 2L), "naive easy-first order must clump some lang")
@@ -78,7 +75,6 @@ class TierSeventySevenSpec extends SparkSpec {
     // the contrast that justifies the interleave
     val interleaved = TierThirtyFour.q152.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(2))).sortBy(_._1).map(_._2)
-    operators.Cumulative.releaseAll()
     val maxRun = interleaved.foldLeft(("", 0, 0)) { case ((prev, cur, mx), s) =>
       val c = if (s == prev) cur + 1 else 1
       (s, c, math.max(mx, c))
@@ -89,7 +85,6 @@ class TierSeventySevenSpec extends SparkSpec {
   test("tier-77 plan gates: no CartesianProduct") {
     for (q <- TierSeventySeven.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -28,7 +28,6 @@ class TierSeventySixSpec extends SparkSpec {
     val np = flags.count(f => !f._2 && f._3).toLong
     val nn = flags.count(f => !f._2 && !f._3).toLong
     val got = TierSeventySix.q231.run(spark, sf).collect()(0)
-    operators.Cumulative.releaseAll()
     assert((got.getLong(0), got.getLong(1), got.getLong(2),
       got.getLong(3), got.getLong(4)) == (flags.size.toLong, pp, pn, np, nn))
     assert(got.getLong(5) == TierSeventySix.kappaPpm(pp, pn, np, nn))
@@ -61,7 +60,6 @@ class TierSeventySixSpec extends SparkSpec {
     val got = TierSeventySix.q232.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     // partition law: group sizes sum to the corpus; both flag values live
     assert(got.map(_._3).sum == total)
@@ -75,7 +73,6 @@ class TierSeventySixSpec extends SparkSpec {
   test("tier-76 plan gates: no CartesianProduct; q232's broadcast total") {
     for (q <- TierSeventySix.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -187,7 +187,6 @@ class TierSixteenSpec extends SparkSpec {
 
   private def heavyPlan(q: Q): String = {
     val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-    Cumulative.releaseAll()
     plan
   }
 
@@ -231,7 +230,6 @@ class TierSixteenSpec extends SparkSpec {
     } finally {
       q.stop()
       vocab.unpersist()
-      Cumulative.releaseAll()
     }
   }
 }

@@ -12,7 +12,6 @@ import org.apache.spark.sql.types._
 class TierThirteenSpec extends SparkSpec {
 
   private def releaseRanks(): Unit = {
-    graft.operators.Cumulative.releaseAll()
     spark.catalog.clearCache()
   }
 

@@ -23,7 +23,6 @@ class TierThirtyEightSpec extends SparkSpec {
     }
     val got = TierThirtyEight.q160.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     val daily = ud.groupBy(_._2).map { case (d, xs) => d -> xs.map(_._1).distinct.size }
     assert(got.forall { case (d, a) => a >= daily(d) },
@@ -50,7 +49,6 @@ class TierThirtyEightSpec extends SparkSpec {
     }.sortBy(x => (x._1, x._2))
     val got = TierThirtyEight.q161.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.size < dc.size)
     // cross-law vs q149: both tripwires exist because they disagree —
@@ -59,14 +57,12 @@ class TierThirtyEightSpec extends SparkSpec {
     // barely move), or at minimum both stay non-empty subsets
     val z = TierThirtyTwo.q149.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(z.nonEmpty, "the z tripwire must also fire on this fixture")
   }
 
   test("tier-38 plan gates: no CartesianProduct") {
     for (q <- TierThirtyEight.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -33,7 +33,6 @@ class TierThirtyFiveSpec extends SparkSpec {
     }.sortBy { case (c, cand, sc) => (c, -sc, cand) }
     val got = TierThirtyFive.q154.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.forall { case (c, su, sc) =>
       sc > 0 && !cs((c, su)) }, "a rec must be new to the customer and positively scored")
@@ -44,13 +43,11 @@ class TierThirtyFiveSpec extends SparkSpec {
     val pairs = TierNineteen.celledEmbedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     // q155 declares the celled pair source (r10 VERDICT re-sourcing):
     // containment + recall vs the anchor stay floored
     val anchor = TierNineteen.embedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.9)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    operators.Cumulative.releaseAll()
     assert(pairs.toSet.subsetOf(anchor), "celled pairs are cosine-verified: ⊆ anchor")
     val recall = pairs.size.toDouble / anchor.size
     info(s"celled pair recall at thr 0.9: $recall")
@@ -65,7 +62,6 @@ class TierThirtyFiveSpec extends SparkSpec {
     val expected = scored.sortBy { case (a, b, cn) => (-cn, a, b) }.take(20)
     val got = TierThirtyFive.q155.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.forall { case (a, b, cn) =>
       a < b && cn >= 1 && !edges((a, b)) }, "every prediction is a scored non-edge")
@@ -74,7 +70,6 @@ class TierThirtyFiveSpec extends SparkSpec {
   test("tier-35 plan gates: no CartesianProduct; q154's co-purchase join is salted") {
     for (q <- TierThirtyFive.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       if (q.name.contains("copurchase"))
         // the whale-customer guard (r10 VERDICT #6): the c-keyed self-join

@@ -28,7 +28,6 @@ class TierThirtyFourSpec extends SparkSpec {
     val expected = expectedOrder
     val got = TierThirtyFour.q152.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._1) == (1L to got.size).toSeq, "positions are dense 1..N")
     // round-robin: every doc of per-source rank k sits before every doc
@@ -53,7 +52,6 @@ class TierThirtyFourSpec extends SparkSpec {
       }
     val got = TierThirtyFour.q153.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     val full = got.filter(_._2 == 32L)
     assert(full.nonEmpty && full.forall(_._3 > 1),
@@ -63,7 +61,6 @@ class TierThirtyFourSpec extends SparkSpec {
   test("tier-34 plan gates: no CartesianProduct; the global rank is two-pass, not SinglePartition") {
     for (q <- TierThirtyFour.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       assert(!plan.contains("SinglePartition"),
         s"${q.name} must rank via the two-pass Cumulative, not a global window: ${plan.take(800)}")

@@ -24,7 +24,6 @@ class TierThirtyNineSpec extends SparkSpec {
         (0 until 8).map(k => col(s"e$k").cast("double")): _*)
       .collect().map(r => (r.getLong(0), r.getString(1),
         (2 until 10).map(r.getDouble))).toSeq
-    operators.Cumulative.releaseAll()
     out
   }
 
@@ -43,7 +42,6 @@ class TierThirtyNineSpec extends SparkSpec {
     } yield (a, b, r6(d))).sortBy(x => (x._1, x._2))
     val got = TierThirtyNine.q162.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got.map(x => (x._1, x._2)) == expected.map(x => (x._1, x._2)))
     got.zip(expected).foreach { case ((_, _, d), (_, _, ed)) =>
       assert(math.abs(d - ed) < 2e-6, s"$d vs $ed") }
@@ -62,7 +60,6 @@ class TierThirtyNineSpec extends SparkSpec {
     val expected = scored.sortBy { case (id, _, d) => (-d, id) }.take(20)
     val got = TierThirtyNine.q163.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got.map(_._1) == expected.map(_._1))
     got.zip(expected).foreach { case ((_, _, d), (_, _, ed)) =>
       assert(math.abs(d - ed) < 2e-6, s"$d vs $ed") }
@@ -72,7 +69,6 @@ class TierThirtyNineSpec extends SparkSpec {
   test("tier-39 plan gates: no CartesianProduct") {
     for (q <- TierThirtyNine.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     operators.Release.sweep(spark)

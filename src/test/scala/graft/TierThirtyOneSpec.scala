@@ -26,7 +26,6 @@ class TierThirtyOneSpec extends SparkSpec {
     val expected = pairs.sortBy { case (a, b, n) => (-n, a, b) }.take(20)
     val got = TierThirtyOne.q146.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.forall { case (a, b, _) => a < b })
     val nCust = cs.map(_._1).size
@@ -59,7 +58,6 @@ class TierThirtyOneSpec extends SparkSpec {
     }
     val got = TierThirtyOne.q147.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._1) == evDays, "output days = the event-day set exactly")
     assert(got.forall(_._2 >= 1), "a day with an event has a session active at it")
@@ -70,7 +68,6 @@ class TierThirtyOneSpec extends SparkSpec {
   test("tier-31 plan gates: no CartesianProduct; q147 prefix sum is two-pass, not a global Window") {
     for (q <- TierThirtyOne.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       if (q.name.contains("concurrency"))
         assert(!plan.contains("SinglePartition"),

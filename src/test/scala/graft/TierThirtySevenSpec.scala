@@ -13,7 +13,6 @@ class TierThirtySevenSpec extends SparkSpec {
     val pairs = TierFour.minhashPairs(TextOps.tok(spark, sf))
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("source"),
         size(filter(split(col("text"), " "), x => x =!= "")).cast("long"))
@@ -31,7 +30,6 @@ class TierThirtySevenSpec extends SparkSpec {
       .toSeq.sortBy(x => (x._1, x._2))
     val got = TierThirtySeven.q158.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.map(_._3).sum == pairs.size, "every pair lands in exactly one cell")
     assert(got.forall(x => x._1 <= x._2), "cells are unordered source pairs")
@@ -54,7 +52,6 @@ class TierThirtySevenSpec extends SparkSpec {
     }
     val got = TierThirtySeven.q159.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.forall(x => x._3 <= x._2 && x._5 <= x._4), "dedup never adds")
     assert(got.map(_._2).sum == docs.size, "every doc counted once")
@@ -64,7 +61,6 @@ class TierThirtySevenSpec extends SparkSpec {
   test("tier-37 plan gates: no CartesianProduct") {
     for (q <- TierThirtySeven.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

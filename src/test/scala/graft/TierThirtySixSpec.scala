@@ -20,7 +20,6 @@ class TierThirtySixSpec extends SparkSpec {
       TierThirtyThree.codebook(spark, sf, m).collect()
         .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     }
-    operators.Cumulative.releaseAll()
     def l2(a: Seq[Double], b: Seq[Double]): Double =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
     def r6(x: Double): Double =
@@ -41,7 +40,6 @@ class TierThirtySixSpec extends SparkSpec {
       .sortBy { case (id, d) => (d, id) }.take(10)
     val got = TierThirtySix.q156.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got.map(_._1) == expected.map(_._1))
     got.zip(expected).foreach { case ((_, d), (_, e)) =>
       assert(math.abs(d - e) < 2e-6, s"dist $d vs $e") }
@@ -69,7 +67,6 @@ class TierThirtySixSpec extends SparkSpec {
     } yield (a, b, ppm)).sortBy(x => (x._1, x._2))
     val got = TierThirtySix.q157.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty && got.forall(x => x._3 >= 500000L && x._3 <= 1000000L))
     assert(got.exists(_._3 == 1000000L), "full containment must appear on the fixture")
@@ -78,7 +75,6 @@ class TierThirtySixSpec extends SparkSpec {
   test("tier-36 plan gates: no CartesianProduct") {
     for (q <- TierThirtySix.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -15,7 +15,6 @@ class TierThirtySpec extends SparkSpec {
     val pairs = TierNineteen.celledEmbedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     (docs, pairs)
   }
 
@@ -45,7 +44,6 @@ class TierThirtySpec extends SparkSpec {
     val expected = docs.map(_._1).sorted.map(id => (id, dist.getOrElse(id, -1L)))
     val got = TierThirty.q144.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     seeds.foreach(s => assert(got.find(_._1 == s).exists(_._2 == 0L), s"seed $s at 0"))
     assert(got.exists(_._2 > 0) && got.exists(_._2 == -1L),
@@ -56,7 +54,6 @@ class TierThirtySpec extends SparkSpec {
     val anchor = TierNineteen.embedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(pairs.map(p => (p._1, p._2)).toSet.subsetOf(anchor.toSet),
       "celled pairs are cosine-verified: ⊆ anchor")
     val recall = pairs.size.toDouble / anchor.size
@@ -89,14 +86,12 @@ class TierThirtySpec extends SparkSpec {
     // mutual fold is pinned against the collected celled-NN frame
     val nn = TierNineteen.celledNnOf(docs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    operators.Cumulative.releaseAll()
     val expected = nn.toSeq
       .filter { case (d, (m, _)) => nn.get(m).exists(_._1 == d) && d < m }
       .map { case (d, (m, c)) => (d, m, c) }
       .sortBy(_._1)
     val got = TierThirty.q145.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty, "fixture must contain mutual pairs")
     val members = got.flatMap(p => Seq(p._1, p._2))
@@ -107,7 +102,6 @@ class TierThirtySpec extends SparkSpec {
     // is a brute pair too, so recall is the probe-coverage number
     val all = TierNineteen.embedPairsOf(docs, -1.0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    operators.Cumulative.releaseAll()
     val sym = all.flatMap { case (a, b, c) => Seq((a, b, c), (b, a, c)) }
     val bruteNn = sym.groupBy(_._1).map { case (d, es) =>
       // rank on the 6-dp ROUNDED cosine, ties to the smaller id — the
@@ -127,7 +121,6 @@ class TierThirtySpec extends SparkSpec {
   test("tier-30 plan gates: no CartesianProduct; q145 arg-max is agg, not Window") {
     for (q <- TierThirty.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
       if (q.name.contains("mutual"))
         assert(!plan.contains("Window"), s"${q.name} must arg-max via struct agg: ${plan.take(800)}")

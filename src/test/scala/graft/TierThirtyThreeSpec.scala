@@ -31,7 +31,6 @@ class TierThirtyThreeSpec extends SparkSpec {
     val cbs = books
     val got = TierThirtyThree.q150.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
-    operators.Cumulative.releaseAll()
     assert(got.size == vecs.size, "every vector is encoded")
     for ((id, e) <- vecs; m <- 0 until 4) {
       val sub = e.slice(m * SubDim, (m + 1) * SubDim)
@@ -48,7 +47,6 @@ class TierThirtyThreeSpec extends SparkSpec {
     val q = vecs(0L)
     val got = TierThirtyThree.q151.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got.size == 10)
     for ((id, d) <- got) {
       val exact = BigDecimal(l2(vecs(id), q))
@@ -68,7 +66,6 @@ class TierThirtyThreeSpec extends SparkSpec {
   test("tier-33 plan gates: no CartesianProduct") {
     for (q <- TierThirtyThree.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -13,13 +13,11 @@ class TierThirtyTwoSpec extends SparkSpec {
     val pairs = TierNineteen.celledEmbedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     // q148 declares the celled pair source (r10 VERDICT re-sourcing):
     // containment + recall vs the anchor stay floored
     val anchor = TierNineteen.embedPairsOf(
         Tables.load(spark, sf, "documents").select("doc_id", "text"), 0.9)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    operators.Cumulative.releaseAll()
     assert(pairs.toSet.subsetOf(anchor), "celled pairs are cosine-verified: ⊆ anchor")
     val recall = pairs.size.toDouble / anchor.size
     info(s"celled pair recall at thr 0.9: $recall")
@@ -46,7 +44,6 @@ class TierThirtyTwoSpec extends SparkSpec {
     val expected = labels.toSeq.sortBy(_._1)
     val got = TierThirtyTwo.q148.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     // refinement law: a label can only reach nodes inside its own
     // connected component, so every LPA community ⊆ one component
@@ -70,7 +67,6 @@ class TierThirtyTwoSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val got = TierThirtyTwo.q149.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    operators.Cumulative.releaseAll()
     val flagged = got.map(x => (x._1, x._2)).toSet
     assert(got.nonEmpty && got.size < dc.size, "flags must be a strict, non-empty subset")
     for ((et, xs) <- dc.groupBy(_._1)) {
@@ -91,7 +87,6 @@ class TierThirtyTwoSpec extends SparkSpec {
   test("tier-32 plan gates: no CartesianProduct") {
     for (q <- TierThirtyTwo.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     operators.Release.sweep(spark)

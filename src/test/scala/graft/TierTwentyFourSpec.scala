@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierTwentyFour, TierTwentyOne, TierTwentyTwo}
+import graft.operators.{TierTwentyFour, TierTwentyOne, TierTwentyTwo}
 import org.apache.spark.sql.functions._
 
 /** Tier-24 differentials: q132 against brute-force TTR/Gini (plus the
@@ -66,7 +66,6 @@ class TierTwentyFourSpec extends SparkSpec {
       .sortBy(_._1)
     val got = TierTwentyFour.q133.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    Cumulative.releaseAll()
     assert(got == expected)
     assert(got.size >= 2, "fixture association graph must split into communities")
     assert(got.exists(_._2 >= 2), "at least one genuine multi-token community")
@@ -124,7 +123,6 @@ class TierTwentyFourSpec extends SparkSpec {
   test("tier-24 plan gates: no CartesianProduct") {
     for (q <- TierTwentyFour.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
   }

@@ -50,7 +50,6 @@ class TierTwentyNineSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val pairs = TierNineteen.celledEmbedPairsOf(docs, 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    operators.Cumulative.releaseAll()
     val adj = pairs.flatMap { case (x, y) => Seq(x -> y, y -> x) }
       .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
     var alive = adj.keySet
@@ -64,7 +63,6 @@ class TierTwentyNineSpec extends SparkSpec {
     }
     val expected = alive.toSeq.sorted
     val got = TierTwentyNine.q143.run(spark, sf).collect().map(_.getLong(0)).toSeq
-    operators.Cumulative.releaseAll()
     assert(got == expected)
     assert(got.nonEmpty, "fixture must have a 2-core")
     // every core member keeps ≥ 2 neighbors INSIDE the core (the defining
@@ -93,10 +91,8 @@ class TierTwentyNineSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val anchor = TierNineteen.embedPairsOf(docs, 0.9)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    operators.Cumulative.releaseAll()
     val celled = TierNineteen.celledEmbedPairsOf(docs, 0.9)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    operators.Cumulative.releaseAll()
     assert(celled.subsetOf(anchor), "celled pairs are cosine-verified: ⊆ anchor")
     val recall = (celled & anchor).size.toDouble / anchor.size
     info(s"celled pair recall at thr 0.9: $recall")
@@ -112,7 +108,6 @@ class TierTwentyNineSpec extends SparkSpec {
       alive = next
     }
     val celledCore = TierTwentyNine.q143.run(spark, sf).collect().map(_.getLong(0)).toSet
-    operators.Cumulative.releaseAll()
     assert(celledCore.subsetOf(alive),
       s"celled 2-core must be contained in the anchor's; extras: ${celledCore -- alive}")
     assert(celledCore.nonEmpty, "celled core must not collapse on the fixture")
@@ -121,7 +116,6 @@ class TierTwentyNineSpec extends SparkSpec {
   test("tier-29 plan gates: no CartesianProduct") {
     for (q <- TierTwentyNine.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      operators.Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     // built-but-never-executed engine frames leave armed auto-release

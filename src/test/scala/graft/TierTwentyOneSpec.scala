@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNine, TierTwentyOne}
+import graft.operators.{TierNine, TierTwentyOne}
 import org.apache.spark.sql.functions._
 
 /** Tier-21 differentials: q125 against an in-memory fixed-point PageRank
@@ -105,7 +105,6 @@ class TierTwentyOneSpec extends SparkSpec {
     val got = TierTwentyOne.q126.run(spark, sf).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
     assert(got == expected)
-    Cumulative.releaseAll()
   }
 
   test("q127 cluster sample: per-cell kept count = ⌊√size⌋, ranks dense, hash-order prefix") {
@@ -126,7 +125,6 @@ class TierTwentyOneSpec extends SparkSpec {
       assert(kept(cid) == math.sqrt(xs.length.toDouble).toLong,
         s"cell $cid quota drift")
     }
-    Cumulative.releaseAll()
   }
 
   test("s34: DSIR scoring on a stream ≡ batch q126 (frozen per-token weights); unseen floor") {
@@ -136,10 +134,8 @@ class TierTwentyOneSpec extends SparkSpec {
     // learn in batch, score live (the s32 frozen-set discipline)
     val weights = TierTwentyOne.dsirModel(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq.toDF("token", "lr_ppm")
-    Cumulative.releaseAll()
     val batch = TierTwentyOne.q126.run(spark, sf).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Cumulative.releaseAll()
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val unseen = (90001L, "zzzz yyyy xxxx") // no model token — floor applies
@@ -162,11 +158,9 @@ class TierTwentyOneSpec extends SparkSpec {
   test("tier-21 plan gates: no CartesianProduct anywhere; q127 rank has no Window") {
     for (q <- TierTwentyOne.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     val p127 = TierTwentyOne.q127.run(spark, sf).queryExecution.executedPlan.toString
-    Cumulative.releaseAll()
     assert(!p127.contains("Window"), s"q127 must rank via the two-pass prefix, got: ${p127.take(800)}")
     // built-but-never-executed engine frames leave armed auto-release
     // listeners + pinned checkpoint leaves — drain them (round-9 ADVICE)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNineteen, TierTwentyOne, TierTwentySix}
+import graft.operators.{TierNineteen, TierTwentyOne, TierTwentySix}
 import org.apache.spark.sql.functions._
 
 /** Tier-26 differentials: q136 against in-memory multi-source BFS over
@@ -21,7 +21,6 @@ class TierTwentySixSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val pairs = TierNineteen.celledEmbedPairs(spark, sf, 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Cumulative.releaseAll()
     val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
     val seeds = docs.filter(_._2 == "src0").map(_._1).toSet
@@ -35,7 +34,6 @@ class TierTwentySixSpec extends SparkSpec {
     val expected = docs.map(_._1).sorted.map(id => (id, dist.getOrElse(id, -1L)))
     val got = TierTwentySix.q136.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Cumulative.releaseAll()
     assert(got == expected)
     val byId = got.toMap
     seeds.foreach(sd => assert(byId(sd) == 0L, s"seed $sd must be distance 0"))
@@ -54,7 +52,6 @@ class TierTwentySixSpec extends SparkSpec {
     val docsDf = Tables.load(spark, sf, "documents")
     val pairs = TierNineteen.embedPairsOf(docsDf.select("doc_id", "text"), 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Cumulative.releaseAll()
     val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
     val seeds = docsDf.filter(col("source") === "src0")
@@ -68,7 +65,6 @@ class TierTwentySixSpec extends SparkSpec {
     }
     val got = TierTwentySix.q136.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    Cumulative.releaseAll()
     got.foreach { case (id, d) =>
       val anchorD = dist.getOrElse(id, -1L)
       if (d >= 0)
@@ -120,7 +116,6 @@ class TierTwentySixSpec extends SparkSpec {
   test("tier-26 plan gates: no CartesianProduct") {
     for (q <- TierTwentySix.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     // built-but-never-executed engine frames leave armed auto-release

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNineteen, TierTwenty}
+import graft.operators.{TierNineteen, TierTwenty}
 import org.apache.spark.sql.functions._
 
 /** Tier-20 differentials: q123 against an in-memory prefix cut with the
@@ -37,7 +37,6 @@ class TierTwentySpec extends SparkSpec {
     assert(total <= budget)
     val next = ordered.drop(got.size).headOption
     next.foreach { case (_, n, _) => assert(total + n > budget, "cut stopped early") }
-    Cumulative.releaseAll()
   }
 
   test("q124 contamination report ≡ brute flags; semantic flag set ≡ q122's leaked valid docs") {
@@ -57,7 +56,6 @@ class TierTwentySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == expected)
     assert(got.map(_._1) == valid, "one row per valid doc, ordered")
-    Cumulative.releaseAll()
   }
 
   test("s33: budget-gated streaming admission ≡ batch q123 (hash-order replay, prefix semantics)") {
@@ -65,7 +63,6 @@ class TierTwentySpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val batch = TierTwenty.q123.run(spark, sf).collect().map(_.getLong(0)).toSet
-    Cumulative.releaseAll()
     // the production feed order for a budget cut IS the hash order
     val ordered = corpus.map { case (id, t) =>
       (((id % P) * A0 + B0) % P, id, t)
@@ -95,11 +92,9 @@ class TierTwentySpec extends SparkSpec {
   test("tier-20 plan gates: no CartesianProduct; q123 no single-partition exchange") {
     for (q <- Seq(TierTwenty.q123, TierTwenty.q124)) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     val plan = TierTwenty.q123.run(spark, sf).queryExecution.executedPlan.toString
-    Cumulative.releaseAll()
     assert(!plan.contains("Exchange SinglePartition"), s"q123: ${plan.take(800)}")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNineteen, TierTwentyThree}
+import graft.operators.{TierNineteen, TierTwentyThree}
 import org.apache.spark.sql.functions._
 
 /** Tier-23 differentials: q130 against brute-force triangle enumeration
@@ -17,7 +17,6 @@ class TierTwentyThreeSpec extends SparkSpec {
     // a second test pins the celled ⊆ anchor edge containment + recall.
     val pairs = TierNineteen.celledEmbedPairs(spark, sf, 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Cumulative.releaseAll()
     val edgeSet = pairs.toSet
     val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
@@ -35,7 +34,6 @@ class TierTwentyThreeSpec extends SparkSpec {
     }
     val got = TierTwentyThree.q130.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    Cumulative.releaseAll()
     assert(got == expected)
     // laws: LCC inside [0, 10^6]; corner identity Σ n_tri = 3·|T|;
     // fixture non-degeneracy (the near-dup graph has at least one triangle)
@@ -48,10 +46,8 @@ class TierTwentyThreeSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     val anchor = TierNineteen.embedPairsOf(docs, 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Cumulative.releaseAll()
     val celled = TierNineteen.celledEmbedPairsOf(docs, 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Cumulative.releaseAll()
     assert(celled.subsetOf(anchor), "celled pairs are cosine-verified: ⊆ anchor")
     val recall = (celled & anchor).size.toDouble / anchor.size
     info(s"celled pair recall at thr 0.9: $recall")
@@ -83,11 +79,9 @@ class TierTwentyThreeSpec extends SparkSpec {
   test("tier-23 plan gates: no CartesianProduct; q131 top-k is TakeOrdered") {
     for (q <- TierTwentyThree.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     val p131 = TierTwentyThree.q131.run(spark, sf).queryExecution.executedPlan.toString
-    Cumulative.releaseAll()
     assert(p131.contains("TakeOrderedAndProject"), s"q131: ${p131.take(800)}")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cumulative, TierNineteen, TierTwentyTwo}
+import graft.operators.{TierNineteen, TierTwentyTwo}
 import org.apache.spark.sql.functions._
 
 /** Tier-22 differentials: q128 against an in-memory trust iteration over
@@ -21,7 +21,6 @@ class TierTwentyTwoSpec extends SparkSpec {
     val docs = corpus
     val pairs = TierNineteen.celledEmbedPairs(spark, sf, 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Cumulative.releaseAll()
     val edges = pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }
     val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.length.toLong }
     val seeds = docs.filter(_._3 == "src0").map(_._1).toSet
@@ -42,7 +41,6 @@ class TierTwentyTwoSpec extends SparkSpec {
     val expected = nodes.map(n => (n, t(n)))
     val got = TierTwentyTwo.q128.run(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Cumulative.releaseAll()
     assert(got == expected)
     // laws: every seed keeps at least the teleport base; some non-seed
     // neighbor gains trust (propagation is not degenerate); an isolated
@@ -83,10 +81,8 @@ class TierTwentyTwoSpec extends SparkSpec {
     val anchor = TierTwentyTwo.trustOver(docs,
         TierNineteen.embedPairsOf(docs.select("doc_id", "text"), 0.9))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Cumulative.releaseAll()
     val celled = TierTwentyTwo.q128.run(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Cumulative.releaseAll()
     val seeds = docs.filter(col("source") === "src0")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val reachedA = anchor.filter(_._2 > 0).keySet
@@ -106,7 +102,6 @@ class TierTwentyTwoSpec extends SparkSpec {
   test("tier-22 plan gates: no CartesianProduct (the pair anchor is pinned broadcast-NLJ)") {
     for (q <- TierTwentyTwo.all) {
       val plan = q.run(spark, sf).queryExecution.executedPlan.toString
-      Cumulative.releaseAll()
       assert(!plan.contains("CartesianProduct"), s"${q.name}: ${plan.take(800)}")
     }
     // built-but-never-executed engine frames leave armed auto-release
