@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components — the clustering step that turns
@@ -56,9 +56,9 @@ import org.apache.spark.sql.functions._
   * truncation keeps the plan O(1) per round. localCheckpoint blocks are
   * executor-local (not fault-tolerant to executor loss); a multi-hour
   * production run would use reliable `checkpoint()` instead — same
-  * truncation, durable blocks. The per-round `count()` fixpoint probes are
-  * driver actions, but metadata-scale (one long per round) — the standard
-  * iterative-algorithm control loop.
+  * truncation, durable blocks. The per-round active-edge count that drives
+  * the control loop is computed by the round's own edge checkpoint job
+  * ([[Pins.checkpoint]]'s `aggs`) — one long per round, no extra action.
   *
   * The result is exact and deterministic: the fixpoint (component-min
   * labeling) does not depend on round count, phase switch point, or
@@ -229,12 +229,16 @@ object Components {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
+    // the active edge count, computed by each edge checkpoint's own job
+    var active = 0L
+    val edgeCount = Seq(count(lit(1)))
+    def countActive(r: Row): Unit = active = r.getLong(0)
     var cur = Pins.checkpoint(
-      if (preContract) preContractPass(canon, preContractNodeCap) else canon)
+      if (preContract) preContractPass(canon, preContractNodeCap) else canon,
+      edgeCount, countActive)
     // node -> super-node pointer, composed across rounds
     var mapping = Pins.checkpoint(nodes.select(col("id"), col("id").as("lbl")))
     var rounds = 0
-    var active = cur.count()
     var slowRounds = 0
     // the contraction control loop runs its fixed-shape rounds with AQE
     // scoped off (the [[Graph.withoutAqeIf]] rationale — per-stage
@@ -244,6 +248,7 @@ object Components {
     Graph.withoutAqeIf(nodes.sparkSession, active <= Graph.IterAqeOffThreshold) {
       val prevCur = cur
       val prevMapping = mapping
+      val prevActive = active
       // hash-min: each super-node points to min(self, neighbors). Only the
       // SMALLER-neighbor side can lower a label, so one half-aggregation
       // over the canonical (u < v) edges suffices — l(x) = min(x, min{w :
@@ -262,7 +267,7 @@ object Components {
           coalesce(col("lv"), col("v")).as("b"))
         .select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
-        .filter(col("u") =!= col("v")).distinct())
+        .filter(col("u") =!= col("v")).distinct(), edgeCount, countActive)
       // compose pointers into the node mapping (nodes whose super-node is
       // already final — or isolated — keep their label)
       mapping = Pins.checkpoint(prevMapping
@@ -274,8 +279,6 @@ object Components {
       GraftSqlBridge.releaseLeaf(prevCur)
       GraftSqlBridge.releaseLeaf(prevMapping)
       GraftSqlBridge.releaseLeaf(l)
-      val prevActive = active
-      active = cur.count()
       rounds += 1
       // contraction earns its keep by collapsing clusters; <25 % shrink
       // means a high-diameter remnant. One slow round is NOT a phase
@@ -295,7 +298,7 @@ object Components {
       // its contracted set, so the component min among super-nodes IS the
       // component min among original nodes — composing star labels through
       // the mapping stays exact.
-      val outcome = stars(remnant, maxRounds, localEdgeThreshold)
+      val outcome = stars(remnant, active, maxRounds, localEdgeThreshold)
       starRounds = outcome.rounds
       GraftSqlBridge.releaseLeaf(remnant)
       outcome.labels match {
@@ -394,18 +397,20 @@ object Components {
     * min-centered stars) or until the set fits the local endgame
     * (≤ threshold edges), whichever first. At the fixpoint, labels are
     * read off the stars: every node's label = min(itself, neighbors).
-    * `e0` is caller-owned (not released here); intermediates are swept
-    * per round. */
-  private def stars(e0: DataFrame, maxRounds: Int, threshold: Long): StarOutcome = {
+    * `e0` (`e0Count` edges) is caller-owned (not released here);
+    * intermediates are swept per round. */
+  private def stars(e0: DataFrame, e0Count: Long, maxRounds: Int,
+      threshold: Long): StarOutcome = {
     var e = e0
-    var eCount = e.count()
+    var eCount = e0Count
     var r = 0
     var fixed = false
     while (!fixed && eCount > threshold && r < maxRounds)
     Graph.withoutAqeIf(e0.sparkSession, eCount <= Graph.IterAqeOffThreshold) {
       val prev = e
-      val next = Pins.checkpoint(smallStar(largeStar(prev)))
-      val nextCount = next.count()
+      var nextCount = 0L
+      val next = Pins.checkpoint(smallStar(largeStar(prev)),
+        Seq(count(lit(1))), row => nextCount = row.getLong(0))
       // both sides are distinct canonical sets: equal iff same cardinality
       // and the (next \ prev) difference is empty
       fixed = nextCount == eCount && next.exceptAll(prev).isEmpty

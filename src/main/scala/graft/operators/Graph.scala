@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
 import org.apache.spark.sql.functions._
 
 /** THE iterative graph engine — one iterate-shuffle-checkpoint discipline
@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *
   *  - [[damped]]: damped mass propagation at fixed-point scale [[S]].
   *    Per round: ONE shuffle (the contribution `groupBy` on the edge
-  *    destination) plus a 1-row broadcast dangling scalar; the node set
+  *    destination); the dangling mass is a literal read off the previous
+  *    round's checkpoint job; the node set
   *    (with STATIC dangling/teleport flags) and the degree-joined edge set
   *    build once and persist. The two published teleport policies —
   *    uniform (PageRank; Page et al. 1999) and seeded (TrustRank; Gyöngyi
@@ -33,16 +34,18 @@ import org.apache.spark.sql.functions._
   *  - [[bfs]]: frontier-driven multi-source BFS (the Pregel
   *    shape). Per round: one dst-keyed shuffle over the FRONTIER (not the
   *    whole reached set — strictly less work than the min-relaxation
-  *    unroll it replaced), an anti-join against the reached set, and one
-  *    frontier-count long on the driver. With `maxHops = None` the loop
+  *    unroll it replaced), an anti-join against the reached set, and the
+  *    frontier size read off the frontier's checkpoint job. With
+  *    `maxHops = None` the loop
   *    runs until the frontier empties — exact distances for the entire
   *    reachable set, no fixed unroll bound.
   *  - [[hits]]: the ALTERNATING hub/authority fixed point
-  *    (Kleinberg) — two keyed shuffles + two 1-row normalization
-  *    broadcasts per round at the overflow-safe [[SH]] scale.
+  *    (Kleinberg) — two keyed shuffles per round, each side normalized by
+  *    a literal Σ at the overflow-safe [[SH]] scale.
   *  - [[kcore]]: the SHRINKING fixed point — iterative
   *    degree-< k peel until a pass changes nothing (or a caller-shared
-  *    round cap for fixed SQL unrolls), one membership count per round.
+  *    round cap for fixed SQL unrolls), the membership count read off
+  *    each round's checkpoint job.
   *
   * Scale posture shared by all: per-round lineage truncation through
   * [[Pins.checkpoint]] (plans and optimizer stats stay O(1) per round —
@@ -55,9 +58,12 @@ import org.apache.spark.sql.functions._
   * round. The one-frame engines share a single round loop ([[iterate]]);
   * [[hits]] and [[bfs]] carry two frames per round and keep their own.
   *
-  * Driver reads per call: the node count (teleport constant), the seed
-  * count (seeded mode), one frontier/Σ|Δr| long per round — all
-  * metadata-scale, never data.
+  * Driver reads per call: one setup aggregate (node, seed and dangling
+  * counts — [[damped]]) or none, then per round the scalar the loop
+  * needs (a count, a Σ) — computed by the round's own checkpoint job
+  * ([[Pins.checkpoint]]'s `aggs`), so a round starts no job beyond its
+  * checkpoint. Only [[damped]]'s optional epsilon delta is a separate
+  * 1-row action. All metadata-scale, never data.
   *
   * Convergence: [[damped]] takes an optional `epsilon` — after each round
   * it folds the integer L1 delta Σ|r_i − r_{i−1}| (one 1-row aggregate
@@ -102,21 +108,24 @@ object Graph {
 
   /** The shared round loop of the one-frame engines ([[damped]],
     * [[kcore]], [[sssp]], [[lpa]]). From `init`, each round checkpoints
-    * `step(prev)`, asks `stop(prev, cur, round)`, then drops the previous
-    * round's checkpoint blocks (the stop test was their last reader; a
-    * non-leaf `init` projection makes that a no-op). At most `cap`
-    * rounds, AQE-off while `small` ([[withoutAqeIf]]). The final leaf
-    * joins the run's `pins`, whose release is the run's handle. */
-  private def iterate(init: DataFrame, small: Boolean, cap: Int, pins: Pins)(
-      step: DataFrame => DataFrame)(stop: (DataFrame, DataFrame, Int) => Boolean): Run = {
+    * `step(prev)` — computing `aggs` over it in the same job — asks
+    * `stop(prev, cur, aggs row, round)`, then drops the previous round's
+    * checkpoint blocks (the stop test was their last reader; a non-leaf
+    * `init` projection makes that a no-op). At most `cap` rounds, AQE-off
+    * while `small` ([[withoutAqeIf]]). The final leaf joins the run's
+    * `pins`, whose release is the run's handle. */
+  private def iterate(init: DataFrame, small: Boolean, cap: Int, pins: Pins,
+      aggs: Column*)(step: DataFrame => DataFrame)(
+      stop: (DataFrame, DataFrame, Row, Int) => Boolean): Run = {
     var cur = init
     var rounds = 0
     var stopped = false
+    var row: Row = null
     withoutAqeIf(init.sparkSession, small) { while (!stopped && rounds < cap) {
       val prev = cur
-      cur = Pins.checkpoint(step(prev))
+      cur = Pins.checkpoint(step(prev), aggs, row = _)
       rounds += 1
-      stopped = stop(prev, cur, rounds)
+      stopped = stop(prev, cur, row, rounds)
       GraftSqlBridge.releaseLeaf(prev)
     } }
     Run(pins.track(cur), rounds, () => pins.release())
@@ -124,23 +133,28 @@ object Graph {
 
   /** Teleport policy: who receives teleport + dangling mass, and the exact
     * integer recombination. Columns in scope: `c` (summed inflow, null if
-    * none), `dang` (the 1-row dangling scalar), `tele` (static flag).
-    * `teleCount` reads the seed count off the single setup aggregate
-    * `(count(*), count_if(tele))` — one job, not one per scalar (r16). */
+    * none), `tele` (static flag); `dang`, the round's dangling mass, is a
+    * driver long, so its share folds to a literal. `teleCount` and
+    * `initDang` read the single setup aggregate `(count(*),
+    * count_if(tele), count_if(dangling), count_if(dangling ∧ tele))` —
+    * one job, not one per scalar (r16). */
   private sealed trait Teleport {
     def init(n: Long, m: Long): Column
-    def recombine(n: Long, m: Long): Column
+    def recombine(n: Long, m: Long, dang: Long): Column
     def teleCount(n: Long, nTele: Long): Long
+    /** Round 1's dangling mass: Σ `init` over the dangling nodes. */
+    def initDang(n: Long, m: Long, nDang: Long, nDangTele: Long): Long
   }
 
   /** q125/q137 policy: uniform teleport over all n nodes; dangling mass
     * spreads uniformly; inflow and dangling share one 85 % floor. */
   private case object Uniform extends Teleport {
     def init(n: Long, m: Long): Column = lit(S / n)
-    def recombine(n: Long, m: Long): Column =
+    def recombine(n: Long, m: Long, dang: Long): Column =
       lit(15L * S / (100L * n)) +
-        expr(s"(85 * (coalesce(c, CAST(0 AS BIGINT)) + (dang div $n))) div 100")
+        expr(s"(85 * (coalesce(c, CAST(0 AS BIGINT)) + CAST(${dang / n} AS BIGINT))) div 100")
     def teleCount(n: Long, nTele: Long): Long = n
+    def initDang(n: Long, m: Long, nDang: Long, nDangTele: Long): Long = S / n * nDang
   }
 
   /** q128 policy (TrustRank): teleport AND dangling mass go only to the m
@@ -148,12 +162,12 @@ object Graph {
   private case object Seeded extends Teleport {
     def init(n: Long, m: Long): Column =
       when(col("tele"), lit(S / m)).otherwise(lit(0L))
-    def recombine(n: Long, m: Long): Column =
-      when(col("tele"),
-        lit(15L * S / (100L * m)) + expr(s"(85 * (dang div $m)) div 100"))
+    def recombine(n: Long, m: Long, dang: Long): Column =
+      when(col("tele"), lit(15L * S / (100L * m) + 85L * (dang / m) / 100L))
         .otherwise(lit(0L)) +
         expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")
     def teleCount(n: Long, nTele: Long): Long = nTele
+    def initDang(n: Long, m: Long, nDang: Long, nDangTele: Long): Long = S / m * nDangTele
   }
 
   /** PageRank over a directed `(src, dst)` edge frame (duplicates deduped
@@ -205,7 +219,8 @@ object Graph {
     * during SETUP, before this scope, with AQE on.
     *
     * The gate: callers pass a scalar they already track (node count,
-    * active edge count, frontier size) against [[IterAqeOffThreshold]].
+    * edge count, active edge count, frontier size) against
+    * [[IterAqeOffThreshold]].
     * Above it, rounds keep AQE (runtime coalescing/skew handling and its
     * memory headroom matter more than barrier latency there — the 10×
     * preContract=off probe OOM'd its 62.7 M-edge hash-min aggregation
@@ -267,10 +282,11 @@ object Graph {
       .repartition(w, col("nid")))
     val edges = pins(weighted.join(ww, "src")
       .repartition(w, col("src"))) // (src, dst, w, ww), reread every round
-    // the driver scalars: |V| (teleport constant) and |seeds| — ONE
-    // setup aggregate job for both
-    val cnt = nodes.agg(count(lit(1)),
-      coalesce(sum(when(col("tele"), 1L).otherwise(0L)), lit(0L))).head()
+    // the driver scalars: |V| (teleport constant), |seeds| and round 1's
+    // dangling mass — ONE setup aggregate job for all three
+    def countIf(c: Column): Column = coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+    val cnt = nodes.agg(count(lit(1)), countIf(col("tele")), countIf(!col("has_out")),
+      countIf(!col("has_out") && col("tele"))).head()
     val n = cnt.getLong(0)
     require(n > 0, "Graph: edge/node frame is empty — no nodes to rank")
     val m = tp.teleCount(n, cnt.getLong(1))
@@ -278,19 +294,21 @@ object Graph {
       "Graph: no teleport-eligible (seed) nodes — mass has nowhere to start")
     val init = nodes.select(col("nid"), col("tele"), col("has_out"),
       tp.init(n, m).as("r"))
-    val run = iterate(init, n <= IterAqeOffThreshold, maxIters, pins) { r =>
+    // the dangling mass each round redistributes: round 1's from the setup
+    // aggregate, each later round's from its predecessor's checkpoint job
+    var dang = tp.initDang(n, m, cnt.getLong(2), cnt.getLong(3))
+    val run = iterate(init, n <= IterAqeOffThreshold, maxIters, pins,
+        coalesce(sum(when(!col("has_out"), col("r")).otherwise(0L)), lit(0L))) { r =>
       val contrib = edges
         .join(r.select(col("nid"), col("r")), edges("src") === col("nid"))
         .select(col("dst").as("nid2"), expr("(r * w) div ww").as("c"))
         .groupBy("nid2").agg(sum("c").as("c"))
         .select(col("nid2").as("nid"), col("c"))
-      val dang = r.agg(coalesce(
-        sum(when(!col("has_out"), col("r")).otherwise(0L)), lit(0L)).as("dang"))
-      nodes.crossJoin(broadcast(dang))
-        .join(contrib, Seq("nid"), "left")
+      nodes.join(contrib, Seq("nid"), "left")
         .select(col("nid"), col("tele"), col("has_out"),
-          tp.recombine(n, m).as("r"))
-    } { (prev, r, rounds) =>
+          tp.recombine(n, m, dang).as("r"))
+    } { (prev, r, row, rounds) =>
+      dang = row.getLong(0)
       // integer L1 delta between consecutive checkpointed rank frames —
       // a 1-row driver read, the production stopping rule (skipped after
       // the last round, which stops anyway)
@@ -310,15 +328,29 @@ object Graph {
     * neighbors)`, L1-normalizing each side to [[SH]] with the same
     * floor-division determinism as every other propagation (`(v·SH) div
     * max(Σv, 1)` — integer, order-free, bit-identical across engines).
-    * On a bipartite graph the two sides separate exactly: pure sources
-    * get `auth_fp = 0`, pure sinks `hub_fp = 0`. Output `(nid, hub_fp,
-    * auth_fp)` ordered by nid (isolated-side nodes score 0).
+    * Hubs start uniform at `SH div n` over the n nodes. On a bipartite
+    * graph the two sides separate exactly: pure sources get `auth_fp =
+    * 0`, pure sinks `hub_fp = 0`. Output `(nid, hub_fp, auth_fp)` ordered
+    * by nid (isolated-side nodes score 0).
     *
     * Scale posture: per round TWO dst/src-keyed shuffles (the two inflow
-    * groupBys) + two 1-row broadcast normalization scalars; the deduped
-    * edge set pins once; per-round checkpoint truncation and block
-    * release (the [[damped]] discipline). */
-  def hits(rawEdges: DataFrame, iters: Int = 2, pins: Pins = new Pins): Run = {
+    * groupBys), each side's Σv computed by its own checkpoint job and
+    * applied as a literal — no broadcast, no job beyond the two
+    * checkpoints; the deduped edge set pins once; per-round checkpoint
+    * truncation and block release (the [[damped]] discipline). No node
+    * count runs: with the uniform init c = SH div n ≥ 1, round 1's
+    * normalized authority floor(indeg·c·SH / (c·|E|)) = floor(indeg·SH /
+    * |E|) does not depend on c, so round 1 starts from the in-degree,
+    * whose checkpoint job also yields |E|. The envelope guard (c ≥ 1, i.e.
+    * n ≤ SH) is checked on #src + #dst ≥ n, the two round-1 row counts —
+    * conservative: a graph with n ≤ SH < #src + #dst is rejected too. */
+  def hits(rawEdges: DataFrame, iters: Int = 2, pins: Pins = new Pins): Run =
+    hitsGated(rawEdges, iters, pins)
+
+  /** [[hits]] with the AQE-off gate's threshold on |E| as a parameter —
+    * specs force the rounds AQE-on (0) or AQE-off (Long.MaxValue). */
+  private[graft] def hitsGated(rawEdges: DataFrame, iters: Int, pins: Pins,
+      aqeOffThreshold: Long = IterAqeOffThreshold): Run = {
     requireCap("hits", iters)
     val w = width(rawEdges.sparkSession)
     // TWO pre-partitioned pins of the deduped edge set — the alternating
@@ -329,16 +361,6 @@ object Graph {
     val e0 = pins(rawEdges.select(col("src"), col("dst")).distinct())
     val eBySrc = pins(e0.repartition(w, col("src")))
     val eByDst = pins(e0.repartition(w, col("dst")))
-    val nodes = pins(e0.select(col("src").as("nid"))
-      .union(e0.select(col("dst").as("nid"))).distinct())
-    val n = nodes.count()
-    require(n > 0, "Graph.hits: edge frame is empty — no nodes to score")
-    // SH/n floors to 0 past 10⁹ nodes and every later normalization keeps
-    // all scores 0 — fail loudly instead of silently zeroing (r10 ADVICE;
-    // the DECIMAL-dispatch family's envelope convention)
-    require(n <= SH,
-      s"Graph.hits: $n nodes exceed the SH=$SH fixed-point scale — the " +
-        "uniform init SH/n floors to 0; raise the scale before scoring")
     // (nid, v) summed along edges from side `from` onto side `to` — reads
     // the pin partitioned on `from`, so only the groupBy shuffles
     def inflow(from: String, to: String, x: DataFrame): DataFrame =
@@ -346,36 +368,50 @@ object Graph {
         .join(x.select(col("nid").as("xn"), col("v")), col(from) === col("xn"))
         .select(col(to).as("nid"), col("v"))
         .groupBy("nid").agg(sum("v").as("v"))
-    // L1-normalize to SH: all-integer, summation-order-free. The caller
-    // passes the CHECKPOINTED raw inflow, so the `tot` subtree and the
-    // stream both read the materialized leaf — checkpointing the
-    // normalized frame instead re-ran the inflow join+agg twice per
-    // half-round (r16: the plan embedded `raw` once under the broadcast
-    // and once as the stream).
-    def normalized(raw: DataFrame): DataFrame = {
-      val tot = raw.agg(coalesce(sum("v"), lit(0L)).as("tot"))
-      raw.crossJoin(broadcast(tot))
-        .select(col("nid"), expr(s"(v * $SH) div greatest(tot, CAST(1 AS BIGINT))").as("v"))
+    // a half-round's raw side, checkpointed; the same job yields its row
+    // count and Σv
+    def side(raw: DataFrame): (DataFrame, Long, Long) = {
+      var row: Row = null
+      val leaf = Pins.checkpoint(raw,
+        Seq(count(lit(1)), coalesce(sum("v"), lit(0L))), row = _)
+      (leaf, row.getLong(0), row.getLong(1))
     }
-    var h = nodes.select(col("nid"), lit(SH / n).as("v"))
+    // L1-normalize to SH: all-integer, summation-order-free; the Σ is a
+    // literal, so the normalized side is a projection over its raw leaf
+    def normalized(raw: DataFrame, tot: Long): DataFrame =
+      raw.select(col("nid"),
+        expr(s"(v * $SH) div CAST(${tot max 1L} AS BIGINT)").as("v"))
+    // round 1's raw authority: the in-degree (see the scaladoc), built
+    // with AQE on like the rest of the setup; its Σ is |E|
+    val (deg, nDst, nEdges) =
+      side(eByDst.groupBy(col("dst").as("nid")).agg(count(lit(1)).as("v")))
+    require(nEdges > 0, "Graph.hits: edge frame is empty — no nodes to score")
+    var h: DataFrame = null
     var a: DataFrame = null
     // the live round's raw checkpoint leaves; h/a are normalized VIEWS
     // over them (r16)
     var leaves = Seq.empty[DataFrame]
-    withoutAqeIf(nodes.sparkSession, n <= IterAqeOffThreshold) { for (_ <- 1 to iters) {
-      val rawA = Pins.checkpoint(inflow("src", "dst", h))
-      a = normalized(rawA)
-      val rawH = Pins.checkpoint(inflow("dst", "src", a))
-      h = normalized(rawH)
-      // the previous round's raw leaves have no readers left. Released as
-      // bare leaves: round 0's h is a projection over the caller's input
-      // lineage, whose own checkpoint leaves are not the engine's to drop
-      leaves.foreach(GraftSqlBridge.releaseLeaf)
-      leaves = Seq(rawH, rawA)
-    } }
-    val out = nodes
-      .join(h.select(col("nid"), col("v").as("hub_fp")), Seq("nid"), "left")
-      .join(a.select(col("nid"), col("v").as("auth_fp")), Seq("nid"), "left")
+    withoutAqeIf(rawEdges.sparkSession, nEdges <= aqeOffThreshold) {
+      for (round <- 1 to iters) {
+        val (rawA, _, totA) = if (round == 1) (deg, nDst, nEdges) else side(inflow("src", "dst", h))
+        a = normalized(rawA, totA)
+        val (rawH, nSrc, totH) = side(inflow("dst", "src", a))
+        // SH div n floors to 0 past 10⁹ nodes and every later normalization
+        // keeps all scores 0 — fail loudly instead of silently zeroing (r10
+        // ADVICE; the DECIMAL-dispatch family's envelope convention)
+        if (round == 1) require(nSrc + nDst <= SH,
+          s"Graph.hits: $nSrc sources + $nDst targets exceed the SH=$SH " +
+            "fixed-point scale — the uniform init SH div n may floor to 0; " +
+            "raise the scale before scoring")
+        h = normalized(rawH, totH)
+        // the previous round's raw leaves have no readers left
+        leaves.foreach(GraftSqlBridge.releaseLeaf)
+        leaves = Seq(rawH, rawA)
+      }
+    }
+    // every node is a src or a dst, so the two final sides cover it
+    val out = h.select(col("nid"), col("v").as("hub_fp"))
+      .join(a.select(col("nid"), col("v").as("auth_fp")), Seq("nid"), "full_outer")
       .select(col("nid"), coalesce(col("hub_fp"), lit(0L)).as("hub_fp"),
         coalesce(col("auth_fp"), lit(0L)).as("auth_fp"))
       .orderBy("nid")
@@ -398,10 +434,17 @@ object Graph {
     *
     * Scale posture: per round one alive-semijoin on each endpoint + one
     * src-keyed count — all partial+final; the alive set only shrinks;
-    * per-round checkpoint truncation + block release; one membership
-    * count long on the driver per round. */
+    * per-round checkpoint truncation + block release; the membership
+    * count comes from the round's checkpoint job. */
   def kcore(edgesIn: DataFrame, k: Int, maxRounds: Int = 10,
-      pins: Pins = new Pins): Run = {
+      pins: Pins = new Pins): Run =
+    kcoreGated(edgesIn, k, maxRounds, pins)
+
+  /** [[kcore]] with the AQE-off gate's threshold on the alive-node count
+    * as a parameter — specs force the rounds AQE-on (0) or AQE-off
+    * (Long.MaxValue). */
+  private[graft] def kcoreGated(edgesIn: DataFrame, k: Int, maxRounds: Int,
+      pins: Pins, aqeOffThreshold: Long = IterAqeOffThreshold): Run = {
     requireCap("kcore", maxRounds)
     require(k >= 1, "Graph.kcore: k must be >= 1")
     // distinct on entry (the hits convention — r10 ADVICE): parallel
@@ -410,16 +453,17 @@ object Graph {
     // on src so the alive-semijoin's edge side never re-shuffles (r16).
     val ed = pins(edgesIn.select(col("src"), col("dst")).distinct()
       .repartition(width(edgesIn.sparkSession), col("src")))
+    var size = 0L
     val alive = Pins.checkpoint(ed.select(col("src").as("nid"))
-      .union(ed.select(col("dst").as("nid"))).distinct())
-    var size = alive.count()
-    iterate(alive, size <= IterAqeOffThreshold, maxRounds, pins) { prev =>
+      .union(ed.select(col("dst").as("nid"))).distinct(),
+      Seq(count(lit(1))), r => size = r.getLong(0))
+    iterate(alive, size <= aqeOffThreshold, maxRounds, pins, count(lit(1))) { prev =>
       ed.join(prev.select(col("nid").as("sa")), col("src") === col("sa"))
         .join(prev.select(col("nid").as("da")), col("dst") === col("da"))
         .groupBy(col("src").as("nid")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= k).select(col("nid"))
-    } { (_, next, _) =>
-      val nsize = next.count()
+    } { (_, _, row, _) =>
+      val nsize = row.getLong(0)
       val same = nsize == size // next ⊆ prev, so equal size ⇔ equal set
       size = nsize
       same
@@ -441,8 +485,9 @@ object Graph {
     *
     * Scale posture: per round one dst-keyed shuffle carrying the whole
     * reached set (the Bellman-Ford envelope — production graphs with
-    * small diameters converge in a handful of rounds) + one 2-scalar
-    * driver read; per-round checkpoint truncation + block release. */
+    * small diameters converge in a handful of rounds) + the 2-scalar
+    * signature from the round's checkpoint job; per-round checkpoint
+    * truncation + block release. */
   def sssp(edgesIn: DataFrame, sources: DataFrame,
       maxRounds: Int = 10, pins: Pins = new Pins): Run = {
     requireCap("sssp", maxRounds)
@@ -452,20 +497,19 @@ object Graph {
     // Pre-partitioned on src: the per-round relax join reads it in place.
     val ed = pins(edgesIn.select(col("src"), col("dst"), col("w"))
       .repartition(width(edgesIn.sparkSession), col("src")))
+    // (count, Σd): the fixpoint signature, computed by each checkpoint job
+    val sigAggs = Seq(count(lit(1)), coalesce(sum("d"), lit(0L)))
+    def sig(r: Row): (Long, Long) = (r.getLong(0), r.getLong(1))
+    var s = (0L, 0L)
     val dist = Pins.checkpoint(sources.select(col("nid")).distinct()
-      .select(col("nid"), lit(0L).as("d")))
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), coalesce(sum("d"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var s = sig(dist)
-    iterate(dist, s._1 <= IterAqeOffThreshold, maxRounds, pins) { prev =>
+      .select(col("nid"), lit(0L).as("d")), sigAggs, r => s = sig(r))
+    iterate(dist, s._1 <= IterAqeOffThreshold, maxRounds, pins, sigAggs: _*) { prev =>
       prev.select(col("nid"), col("d"))
         .union(ed.join(prev, ed("src") === prev("nid"))
           .select(col("dst").as("nid"), (col("d") + col("w")).as("d")))
         .groupBy("nid").agg(min("d").as("d"))
-    } { (_, next, _) =>
-      val s2 = sig(next)
+    } { (_, _, row, _) =>
+      val s2 = sig(row)
       val same = s2 == s
       s = s2
       same
@@ -485,12 +529,14 @@ object Graph {
     maxHops.foreach(requireCap("bfs", _))
     val ed = pins(edgesIn.select(col("src"), col("dst"))
       .repartition(width(edgesIn.sparkSession), col("src"))) // reread every round
+    // the per-round driver long that drives termination — metadata-scale,
+    // computed by the frontier's own checkpoint job
+    var frontierSize = 0L
+    val size = Seq(count(lit(1)))
     var reached = Pins.checkpoint(sources.select(col("nid")).distinct()
-      .select(col("nid"), lit(0L).as("d")))
+      .select(col("nid"), lit(0L).as("d")), size, r => frontierSize = r.getLong(0))
     var frontier = reached
     var rounds = 0
-    // the per-round driver long that drives termination — metadata-scale
-    var frontierSize = frontier.count()
     withoutAqeIf(edgesIn.sparkSession, frontierSize <= IterAqeOffThreshold) { while (frontierSize > 0 && maxHops.forall(rounds < _)) {
       val hop = rounds + 1L
       // relax the FRONTIER only (|frontier| ≤ |V|, usually ≪), then
@@ -500,7 +546,7 @@ object Graph {
         .select(col("dst").as("nid")).distinct()
         .join(reached.select(col("nid"), lit(true).as("seen")), Seq("nid"), "left")
         .filter(col("seen").isNull)
-        .select(col("nid"), lit(hop).as("d")))
+        .select(col("nid"), lit(hop).as("d")), size, r => frontierSize = r.getLong(0))
       val prevReached = reached
       reached = Pins.checkpoint(prevReached.union(next))
       // both checkpoints above are eager — the old frontier and the old
@@ -508,7 +554,6 @@ object Graph {
       if (!(frontier eq prevReached)) GraftSqlBridge.releaseLeaf(frontier)
       GraftSqlBridge.releaseLeaf(prevReached)
       frontier = next
-      frontierSize = frontier.count()
       rounds += 1
     } }
     if (!(frontier eq reached)) GraftSqlBridge.releaseLeaf(frontier)
@@ -530,7 +575,7 @@ object Graph {
     *
     * Scale posture: per round one src-keyed shuffle (edge × label join),
     * one (dst, label) partial+final count, one nid-keyed mode join; the
-    * changed count rides the already-checkpointed frame. Per-round
+    * changed count comes from the round's checkpoint job. Per-round
     * checkpoint truncation + block release, [[Pins]]-threaded handle.
     */
   def lpa(edgesIn: DataFrame, maxRounds: Int = 5,
@@ -541,12 +586,15 @@ object Graph {
     // Pre-partitioned on src: the per-round label join reads it in place.
     val ed = pins(edgesIn.select(col("src"), col("dst")).distinct()
       .repartition(width(edgesIn.sparkSession), col("src")))
-    // (nid, label, old) — `old` rides the checkpoint so the changed
-    // count is a cheap scan of the materialized frame, not a re-join
+    // (nid, label, old) — `old` rides the checkpoint so each round's
+    // checkpoint job counts the changed labels, not a re-join
+    var size = 0L
     val labels = Pins.checkpoint(ed.select(col("src").as("nid"))
       .union(ed.select(col("dst").as("nid"))).distinct()
-      .select(col("nid"), col("nid").as("label"), col("nid").as("old")))
-    val run = iterate(labels, labels.count() <= IterAqeOffThreshold, maxRounds, pins) { prev =>
+      .select(col("nid"), col("nid").as("label"), col("nid").as("old")),
+      Seq(count(lit(1))), r => size = r.getLong(0))
+    val changed = coalesce(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)), lit(0L))
+    val run = iterate(labels, size <= IterAqeOffThreshold, maxRounds, pins, changed) { prev =>
       val mode = ed.join(prev.select(col("nid"), col("label")),
           ed("src") === col("nid"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
@@ -556,7 +604,7 @@ object Graph {
       prev.select(col("nid"), col("label").as("old"))
         .join(mode, col("nid") === col("mn"), "left")
         .select(col("nid"), coalesce(col("ml"), col("old")).as("label"), col("old"))
-    } { (_, cur, _) => cur.filter(col("label") =!= col("old")).count() == 0 }
+    } { (_, _, row, _) => row.getLong(0) == 0 }
     run.copy(out = run.out.select(col("nid"), col("label")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, Row}
 import org.apache.spark.storage.StorageLevel
 
 /** Owns the state a composed pipeline creates — its `persist()`s AND its
@@ -65,9 +65,26 @@ object Pins {
     * leaf read. The leaf is restamped with its materialized size
     * ([[GraftSqlBridge.freshLeaf]]): `localCheckpoint` keeps the replaced
     * plan's optimizer stats, and join-size estimates multiply across
-    * rounds until stats estimation itself hangs the driver. */
-  def checkpoint(df: DataFrame): DataFrame =
-    GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
+    * rounds until stats estimation itself hangs the driver.
+    *
+    * `aggs` (optional): aggregates over the leaf's rows, computed by the
+    * SAME job that materializes it (`df.observe` under the eager
+    * checkpoint — no second scan, no broadcast) and handed to `read` as
+    * one row in `aggs` order. A round loop reads its driver scalar (a
+    * row count, a Σ) this way instead of running an action for it. The
+    * leaf stays a bare checkpoint read. */
+  def checkpoint(df: DataFrame, aggs: Seq[Column] = Nil,
+      read: Row => Unit = _ => ()): DataFrame = {
+    if (aggs.isEmpty) GraftSqlBridge.freshLeaf(df.localCheckpoint(true))
+    else {
+      val obs = Observation()
+      val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"_$i") }
+      val leaf = checkpoint(df.observe(obs, named.head, named.tail: _*))
+      val got = obs.get
+      read(Row.fromSeq(aggs.indices.map(i => got(s"_$i"))))
+      leaf
+    }
+  }
 }
 
 /** The single-shot auto-release shape shared by the library pipelines
@@ -111,10 +128,11 @@ object Release {
     // (= the analyzed/commandExecuted plan), so the raw logical nodes never
     // appear in a derived action's execution. The marker is a node built
     // HERE, not `df`'s own: completion events reach the listener
-    // asynchronously, and an engine's last action before returning (sssp's
-    // fixpoint probe reads its final leaf) could otherwise be delivered
-    // after registration and fire the release before the caller's first
-    // read — which then fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    // asynchronously, and an engine's last action before returning (e.g.
+    // damped's epsilon probe reads its final leaf) could otherwise be
+    // delivered after registration and fire the release before the
+    // caller's first read — which then fails with
+    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
     val marked = df.select(org.apache.spark.sql.functions.col("*"))
     val marker = marked.queryExecution.analyzed
     val listener: QueryExecutionListener = new QueryExecutionListener {

@@ -23,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object TierTwentyNine {
 
-  /** HITS fixed-point scale (see [[Graph.SH]] — 10⁹ keeps the
-    * normalize-after-sum product inside Int64). */
-  private val SH = 1000000000L
   private val HitsIters = 2
   private val Thr = 0.9
   private val CoreK = 2
@@ -33,7 +30,7 @@ object TierTwentyNine {
 
   /** One oracle-SQL HITS round `h$i`/`a$i` → `h${i+1}`/`a${i+1}`:
     * authorities sum in-neighbor hubs, hubs sum out-neighbor authorities,
-    * each L1-normalized to [[SH]] by integer floor division (the same
+    * each L1-normalized to [[Graph.SH]] by integer floor division (the same
     * `greatest(Σ, 1)` guard the engine plants). */
   private def hitsIterSql(i: Int): String = {
     val (hp, ar, at, a, hr, ht, h) =
@@ -44,19 +41,19 @@ object TierTwentyNine {
        |  FROM e JOIN $hp ON $hp.nid = e.src GROUP BY 1),
        |$at AS (SELECT CAST(coalesce(sum(v), 0) AS BIGINT) AS tot FROM $ar),
        |$a AS (
-       |  SELECT nid, CAST((v * $SH) // greatest(tot, 1) AS BIGINT) AS v
+       |  SELECT nid, CAST((v * ${Graph.SH}) // greatest(tot, 1) AS BIGINT) AS v
        |  FROM $ar CROSS JOIN $at),
        |$hr AS (
        |  SELECT e.src AS nid, CAST(sum($a.v) AS BIGINT) AS v
        |  FROM e JOIN $a ON $a.nid = e.dst GROUP BY 1),
        |$ht AS (SELECT CAST(coalesce(sum(v), 0) AS BIGINT) AS tot FROM $hr),
        |$h AS (
-       |  SELECT nid, CAST((v * $SH) // greatest(tot, 1) AS BIGINT) AS v
+       |  SELECT nid, CAST((v * ${Graph.SH}) // greatest(tot, 1) AS BIGINT) AS v
        |  FROM $hr CROSS JOIN $ht)""".stripMargin
   }
 
   /** HITS over the distinct customer→supplier purchase graph (q125's
-    * edge set): `(nid, hub_fp, auth_fp)` at scale [[SH]], zero for the
+    * edge set): `(nid, hub_fp, auth_fp)` at scale [[Graph.SH]], zero for the
     * side a node doesn't play. The engine loop is [[Graph.hits]] —
     * see its scaladoc for the per-round plan shape.
     */
@@ -66,7 +63,7 @@ object TierTwentyNine {
        |  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
        |n AS (SELECT src AS nid FROM e UNION SELECT dst FROM e),
        |nn AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM n),
-       |h0 AS (SELECT nid, CAST($SH // cnt AS BIGINT) AS v FROM n CROSS JOIN nn),
+       |h0 AS (SELECT nid, CAST(${Graph.SH} // cnt AS BIGINT) AS v FROM n CROSS JOIN nn),
        |${(0 until HitsIters).map(hitsIterSql).mkString(",\n")}
        |SELECT n.nid, CAST(coalesce(hh.v, 0) AS BIGINT) AS hub_fp,
        |       CAST(coalesce(aa.v, 0) AS BIGINT) AS auth_fp

@@ -155,6 +155,126 @@ class GraphSpec extends SparkSpec {
     assert(byId(2L)._2 > byId(1L)._2, "the two-authority feeder must out-hub the single")
     val left = awaitReleased(mine)
     assert(left.isEmpty, s"hits release must drop caches and checkpoint blocks; still pinned: $left")
+    // the normalization guard: no edges means no mass to normalize — the
+    // run fails loudly instead of returning an empty score table
+    val pins = new graft.operators.Pins
+    val empty = intercept[IllegalArgumentException] {
+      Graph.hits(Seq.empty[(Long, Long)].toDF("src", "dst"), pins = pins)
+    }
+    pins.release()
+    assert(empty.getMessage.contains("Graph.hits: edge frame is empty"), empty.getMessage)
+  }
+
+  /** Directed graph over 60 nodes, 300 draws (duplicates and both
+    * directions included): deterministic, not bipartite. */
+  private def randomEdges(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(300)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+  }
+
+  /** SQL executions planned adaptively while `body` runs — how many of a
+    * run's actions the AQE-off gate left AQE-on. */
+  private def adaptiveDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val adaptive = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        // the root, not any node: a cached input's plan stays adaptive
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("== Physical Plan ==\nAdaptiveSparkPlan") =>
+          adaptive.incrementAndGet()
+        case _ => ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, adaptive.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("AQE-off gate forced each way: hits and kcore give identical output (hits ≡ the uniform-init iteration)") {
+    val SHl = 1000000000L
+    val edges = randomEdges(11).distinct
+    // the definition, node count and all: hubs start at SH div n
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    var h = nodes.map(_ -> SHl / nodes.size).toMap
+    var a = Map.empty[Long, Long]
+    for (_ <- 1 to 3) {
+      val ar = edges.groupBy(_._2).map { case (d, es) => d -> es.map(e => h(e._1)).sum }
+      a = ar.map { case (k, v) => k -> v * SHl / math.max(ar.values.sum, 1L) }
+      val hr = edges.groupBy(_._1).map { case (s, es) => s -> es.map(e => a(e._2)).sum }
+      h = hr.map { case (k, v) => k -> v * SHl / math.max(hr.values.sum, 1L) }
+    }
+    val expected = nodes.map(nid => (nid, h.getOrElse(nid, 0L), a.getOrElse(nid, 0L)))
+    val df = randomEdges(11).toDF("src", "dst")
+    // threshold 0 keeps the rounds AQE-on; Long.MaxValue scopes them off
+    def hitsAt(threshold: Long) = adaptiveDuring {
+      val run = Graph.hitsGated(df, 3, new graft.operators.Pins, threshold)
+      val rows = run.out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      run.release()
+      rows
+    }
+    withAqe(on = true) {
+      val (on, onAdaptive) = hitsAt(0L)
+      val (off, offAdaptive) = hitsAt(Long.MaxValue)
+      assert(on == expected, "AQE-on hits must match the uniform-init iteration")
+      assert(off == on, "hits must not depend on the AQE-off gate")
+      assert(onAdaptive > offAdaptive,
+        s"the gate must scope the rounds AQE-off: $onAdaptive vs $offAdaptive adaptive actions")
+      val sym = randomEdges(12).flatMap { case (x, y) => Seq((x, y), (y, x)) }.toDF("src", "dst")
+      def kcoreAt(threshold: Long) = adaptiveDuring {
+        val run = Graph.kcoreGated(sym, 4, 10, new graft.operators.Pins, threshold)
+        val ids = run.out.collect().map(_.getLong(0)).toSeq.sorted
+        run.release()
+        (ids, run.rounds)
+      }
+      val ((kOn, rOn), kOnAdaptive) = kcoreAt(0L)
+      val ((kOff, rOff), kOffAdaptive) = kcoreAt(Long.MaxValue)
+      assert(rOn > 1, s"the fixture must peel for more than one round, ran $rOn")
+      assert(kOn.nonEmpty && kOff == kOn && rOff == rOn,
+        "kcore must not depend on the AQE-off gate")
+      assert(kOnAdaptive > kOffAdaptive,
+        s"the gate must scope the rounds AQE-off: $kOnAdaptive vs $kOffAdaptive adaptive actions")
+    }
+  }
+
+  test("a kcore/lpa round and a HITS half-round start no job beyond their checkpoint") {
+    // one more round than `r` must cost exactly its checkpoint action's
+    // jobs — with AQE off on these tiny frames, the result job plus one
+    // broadcast build per small join side. A driver-side count after the
+    // checkpoint, or a broadcast normalization scalar, adds jobs
+    def sym(es: Seq[(Long, Long)]) =
+      es.flatMap { case (x, y) => Seq((x, y), (y, x)) }.toDF("src", "dst")
+    val chain = sym((1L to 40L).map(i => (i, i + 1)))
+    val dag = randomEdges(13).toDF("src", "dst")
+    def roundJobs(run: Int => Graph.Run, r: Int): Int = {
+      def jobs(rounds: Int): Int = {
+        val (ran, n) = jobsDuring {
+          val x = run(rounds)
+          x.release()
+          x.rounds
+        }
+        assert(ran == rounds, s"the fixture must not converge within $rounds rounds")
+        n
+      }
+      jobs(r + 1) - jobs(r)
+    }
+    withAqe(on = false) {
+      // kcore: the alive set joins both endpoints
+      val kcoreJobs = roundJobs(Graph.kcore(chain, k = 2, _), 2)
+      assert(kcoreJobs == 3, s"a kcore round ran $kcoreJobs jobs")
+      // lpa: the label join and the mode join
+      val lpaJobs = roundJobs(Graph.lpa(chain, _), 2)
+      assert(lpaJobs == 3, s"an lpa round ran $lpaJobs jobs")
+      // hits: two half-rounds, each joining the other side's scores
+      val hitsJobs = roundJobs(Graph.hits(dag, _), 2)
+      assert(hitsJobs == 2 * 2, s"a hits round ran $hitsJobs jobs")
+    }
   }
 
   test("kcore peels a chain to empty and a pendant off a triangle; rounds counted; release gate") {

@@ -1,8 +1,6 @@
 package graft
 
 import graft.operators.Cumulative
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,35 +10,11 @@ import org.apache.spark.sql.functions._
   * cached, and the rank equals the window form under every plan shape. */
 class PrefixScanSpec extends SparkSpec {
 
-  /** Spark jobs started while `body` runs, the listener bus drained on
-    * both sides so no earlier job leaks in and no later one is missed. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBusDrain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def events: DataFrame = Tables.load(spark, sf, "events")
     .select(col("event_id"), col("ts"),
       expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"))
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
-
-  private def withAqe[T](on: Boolean)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(key)
-    spark.conf.set(key, on.toString)
-    try body finally spark.conf.set(key, before)
-  }
 
   test("building each of the four frames starts no Spark job") {
     val ev = events
